@@ -65,7 +65,7 @@ def _ledger_files(d: str) -> dict[str, int]:
 
 def run(spark, n_docs: int, batches: int = 8) -> dict:
     ledger_dir = tempfile.mkdtemp(prefix="pded_scale_")
-    d = ledger.table_dir(ledger_dir, "paras")
+    d = os.path.join(ledger_dir, "paras")
     rows = []
     cum_compact_bytes = 0
     try:
@@ -79,7 +79,7 @@ def run(spark, n_docs: int, batches: int = 8) -> dict:
             sh1 = shuffle_totals(spark)
             before = _ledger_files(d)
             t1 = time.time()
-            ledger.compact(spark, ledger_dir, "paras", "ph", "paradedup")
+            ledger.compact(spark, d, "ph")
             cwall = time.time() - t1
             after = _ledger_files(d)
             new_bytes = sum(sz for f, sz in after.items() if f not in before)
@@ -99,8 +99,7 @@ def run(spark, n_docs: int, batches: int = 8) -> dict:
             )
             print(json.dumps(rows[-1]), flush=True)
     finally:
-        tbl = ledger.table_name("paradedup", ledger_dir, "paras")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {ledger.table_name(d)}")
         shutil.rmtree(ledger_dir, ignore_errors=True)
     ledger_total = rows[-1]["ledger_mb"]
     return {
@@ -129,8 +128,7 @@ def main() -> None:
     # warm the operator (Catalyst compile dominates the first literal-heavy run)
     warm_dir = tempfile.mkdtemp(prefix="pded_warm_")
     paradedup_batch(spark, synth_batch(spark, 99, 100), warm_dir).count()
-    tbl = ledger.table_name("paradedup", warm_dir, "paras")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.sql(f"DROP TABLE IF EXISTS {ledger.table_name(os.path.join(warm_dir, 'paras'))}")
     shutil.rmtree(warm_dir, ignore_errors=True)
 
     r1 = run(spark, 2_000)

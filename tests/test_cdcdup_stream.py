@@ -90,7 +90,8 @@ def test_streaming_form_with_resume(spark, tmp_path_factory):
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
         os.rename(os.path.join(tmp, part), os.path.join(src, f"b{bi}.parquet"))
         q = start_cdcdup_stream(spark, src, ld, out, ckpt)
-        q.awaitTermination(300)
+        q.processAllAvailable()
+        q.stop()
     got = {
         r["media_ref"]: (r["n_chunks"], r["n_new"], r["bytes_total"], r["bytes_new"])
         for r in spark.read.parquet(out).collect()

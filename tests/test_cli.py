@@ -7,8 +7,6 @@ import sys
 
 from warc_metadata_sidecar_spark import cli, gen
 
-REF = "/root/reference/tests"
-
 
 def _run(monkeypatch, capsys, argv):
     monkeypatch.setattr(sys, "argv", ["warc_metadata_sidecar_spark"] + argv)
@@ -16,11 +14,14 @@ def _run(monkeypatch, capsys, argv):
     return capsys.readouterr().out
 
 
-def test_cli_merge_matches_reference_golden(spark, tmp_path, capsys, monkeypatch):
+def test_cli_merge_matches_reference_golden(
+    spark, tmp_path, capsys, monkeypatch, reference_tests
+):
+    ref = reference_tests
     out = _run(
         monkeypatch,
         capsys,
-        ["--cpus", "4", "merge", "-m", f"{REF}/meta.cdxj", "-w", f"{REF}/warc_1.cdxj",
+        ["--cpus", "4", "merge", "-m", f"{ref}/meta.cdxj", "-w", f"{ref}/warc_1.cdxj",
          "-d", str(tmp_path)],
     )
     assert "Total merged records: 1" in out
@@ -102,13 +103,24 @@ def test_cli_crawl(spark, tmp_path, capsys, monkeypatch):
 
 def test_cli_writes_per_run_log(spark, tmp_path, capsys, monkeypatch):
     # reference C2: a per-run log file lands in the output dir with the
-    # reference's message shapes (warc_metadata_sidecar.py:173-179)
+    # reference's message shapes (warc_metadata_sidecar.py:173-179); the
+    # inputs are one matching original/sidecar CDXJ pair
+    orig, meta = tmp_path / "warc_1.cdxj", tmp_path / "meta.cdxj"
+    orig.write_text(
+        'com,example) 20091111212121 {"url": "http://www.example.com", '
+        '"mime": "text/html"}\n'
+    )
+    meta.write_text(
+        'com,example) 20091111212121 {"url": "http://www.example.com", '
+        '"Identified-Payload-Type": {"fido": "text/html", '
+        '"python-magic": "text/html"}, "Preservation-Identifier": "fmt/96"}\n'
+    )
+    out_dir = tmp_path / "out"
     _run(
         monkeypatch, capsys,
-        ["--cpus", "4", "merge", "-m", f"{REF}/meta.cdxj", "-w", f"{REF}/warc_1.cdxj",
-         "-d", str(tmp_path)],
+        ["--cpus", "4", "merge", "-m", str(meta), "-w", str(orig), "-d", str(out_dir)],
     )
-    log_text = (tmp_path / "merge_cdxj.log").read_text()
+    log_text = (out_dir / "merge_cdxj.log").read_text()
     assert "Logging CDXJ merge information for" in log_text
     assert "Total merged records: 1" in log_text
     assert "Elapsed:" in log_text

@@ -117,7 +117,7 @@ def test_ledger_grows_with_accepted_only(spark, tmp_path_factory):
     ld = str(tmp_path_factory.mktemp("mediadup_ledger2"))
     for batch in batches:
         mediadup_batch(spark, _df(spark, batch), ld, TAU)
-    tbl = ledger.ensure(spark, ld, "bands", "band_val", prefix="mediadup")
+    tbl = ledger.ensure(spark, os.path.join(ld, "bands"), "band_val")
     got = {r["media_ref"] for r in tbl.select("media_ref").distinct().collect()}
     want = {r for batch in _twin(batches) for r, d in batch.items() if d is None}
     assert got == want
@@ -132,7 +132,7 @@ def test_undecodable_rows_accepted_but_not_ledgered(spark, tmp_path_factory):
         for r in mediadup_batch(spark, _df(spark, rows), ld, TAU).collect()
     }
     assert dec == {"ok": None, "bad": None}
-    tbl = ledger.ensure(spark, ld, "bands", "band_val", prefix="mediadup")
+    tbl = ledger.ensure(spark, os.path.join(ld, "bands"), "band_val")
     assert {r["media_ref"] for r in tbl.collect()} == {"ok"}
 
 
@@ -143,8 +143,8 @@ def test_streaming_form(spark, tmp_path_factory):
     src, ld = str(root / "src"), str(root / "ledger")
     out, ckpt = str(root / "out"), str(root / "ckpt")
     os.makedirs(src)
-    # the file source does not guarantee cross-file order within one run,
-    # so feed one file per availableNow run — the checkpoint carries the
+    # the file source does not guarantee cross-file order within one batch,
+    # so feed one file per run — the checkpoint carries the
     # already-processed set between runs (also exercising stream resume),
     # the neardup_stream test discipline
     for bi, batch in enumerate(batches):
@@ -153,7 +153,8 @@ def test_streaming_form(spark, tmp_path_factory):
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
         os.rename(os.path.join(tmp, part), os.path.join(src, f"b{bi}.parquet"))
         q = start_mediadup_stream(spark, src, ld, out, ckpt, max_hamming=TAU)
-        q.awaitTermination(300)
+        q.processAllAvailable()
+        q.stop()
     got = {
         r["media_ref"]: r["dup_of"]
         for r in spark.read.parquet(out).collect()

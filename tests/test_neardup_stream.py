@@ -5,15 +5,12 @@ growth semantics, catalog recovery, and the foreachBatch streaming form.
 
 import hashlib
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from warc_metadata_sidecar_spark.streaming.ledger import ensure, table_name
 from warc_metadata_sidecar_spark.streaming.neardup_stream import (
-    _dir,
-    _ensure,
-    _tbl,
     neardup_batch,
     start_neardup_stream,
 )
@@ -135,7 +132,7 @@ def test_ledger_grows_with_accepted_only(spark, batches, tmp_path_factory):
         df = spark.createDataFrame(batch, "doc_id long, text string")
         dec = neardup_batch(spark, df, ledger, THRESH, NUM_HASHES, BAND_SIZE, K)
         total_accepted += dec.filter(F.col("dup_of").isNull()).count()
-    sigs = spark.read.parquet(_dir(ledger, "sigs"))
+    sigs = spark.read.parquet(os.path.join(ledger, "sigs"))
     # short docs (no shingles) are accepted but never indexed
     short = sum(1 for b in batches for i, t in b if len(t.split(" ")) < K)
     assert sigs.count() == total_accepted - short
@@ -144,14 +141,14 @@ def test_ledger_grows_with_accepted_only(spark, batches, tmp_path_factory):
 
 def test_catalog_recovery(spark, batches, tmp_path_factory):
     """Dropping the catalog tables (a session restart) must not lose the
-    ledger: _ensure rebuilds the bucketed tables from the files."""
+    ledger: ensure rebuilds the bucketed tables from the files."""
     ledger = str(tmp_path_factory.mktemp("ndl3") / "ledger")
     df = spark.createDataFrame(batches[0], "doc_id long, text string")
     neardup_batch(spark, df, ledger, THRESH, NUM_HASHES, BAND_SIZE, K)
-    n_before = spark.table(_tbl(ledger, "sigs")).count()
+    n_before = spark.table(table_name(os.path.join(ledger, "sigs"))).count()
     for kind in ("bands", "sigs"):
-        spark.sql(f"DROP TABLE {_tbl(ledger, kind)}")
-    rebuilt = _ensure(spark, ledger, "sigs", "doc_id")
+        spark.sql(f"DROP TABLE {table_name(os.path.join(ledger, kind))}")
+    rebuilt = ensure(spark, os.path.join(ledger, "sigs"), "doc_id")
     assert rebuilt.count() == n_before
     # and the next batch still dedups against the recovered state
     df2 = spark.createDataFrame(batches[1], "doc_id long, text string")
@@ -164,8 +161,8 @@ def test_streaming_form(spark, batches, tmp_path_factory):
     src, ledger = str(base / "src"), str(base / "ledger")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     os.makedirs(src)
-    # the file source does not guarantee cross-file order within one run,
-    # so feed one file per availableNow run — the checkpoint carries the
+    # the file source does not guarantee cross-file order within one batch,
+    # so feed one file per run — the checkpoint carries the
     # already-processed set between runs (also exercising stream resume)
     for bi, batch in enumerate(batches):
         df = spark.createDataFrame(batch, "doc_id long, text string")
@@ -177,7 +174,8 @@ def test_streaming_form(spark, batches, tmp_path_factory):
             spark, src, ledger, out, ckpt, THRESH,
             num_hashes=NUM_HASHES, band_size=BAND_SIZE, k=K,
         )
-        q.awaitTermination(300)
+        q.processAllAvailable()
+        q.stop()
     got = spark.read.parquet(out)
     n_docs = sum(len(b) for b in batches)
     assert got.count() == n_docs

@@ -130,7 +130,7 @@ def test_tfidf_keywords_materialize_equals_recompute(spark):
     assert a  # the fixture must actually produce keywords
 
 
-def test_fan_views_adaptive_and_row_identical(spark):
+def test_fan_views_adaptive_and_row_identical(spark, monkeypatch):
     """r8 scale-adaptive fan-out: register_views publishes `<t>_fan` views
     that are repartitioned to defaultParallelism ONLY when the file-size
     estimate yields fewer splits than cores, and the _FAN_QUERIES rewrite
@@ -145,10 +145,22 @@ def test_fan_views_adaptive_and_row_identical(spark):
     assert fan.rdd.getNumPartitions() == n_par
     # same rows either way
     assert fan.count() == spark.table("documents").count()
-    # the condition is adaptive: a large-file estimate must NOT repartition
-    # (simulated by the estimate arithmetic itself)
-    split = dq._split_bytes(spark)
-    assert max(1, -(-(split * n_par) // split)) >= n_par  # big file -> no fan
+    # the condition is adaptive: an estimate of as many splits as cores (a
+    # big input) must publish the scan itself, not a repartition
+    monkeypatch.setattr(dq, "_est_splits", lambda path, split: n_par)
+    dq._REGISTERED_VIEWS.clear()
+    try:
+        dq.register_views(spark, sf)
+        for t in dq._FAN_VIEW_TABLES:
+            plan = spark.table(f"{t}_fan")._jdf.queryExecution().analyzed().toString()
+            assert "Repartition" not in plan, plan
+            assert (spark.table(f"{t}_fan").rdd.getNumPartitions()
+                    == spark.table(t).rdd.getNumPartitions())
+    finally:
+        monkeypatch.undo()
+        dq._REGISTERED_VIEWS.clear()
+        dq.register_views(spark, sf)
+    assert spark.table("documents_fan").rdd.getNumPartitions() == n_par
     # a fanned query's rows equal the canonical (unfanned) statement's rows
     name = "fingerprint_winnow"
     fanned = dq.queries()[name](spark, sf)
@@ -157,3 +169,47 @@ def test_fan_views_adaptive_and_row_identical(spark):
     b = sorted(map(tuple, plain.collect()))
     assert a == b
     assert a  # the fixture must actually produce fingerprints
+
+
+def test_split_bytes_parses_size_suffixes(spark):
+    """maxPartitionBytes may be written with a unit suffix in any case; an
+    unparsable or unreadable value falls back to 128 MiB."""
+    from types import SimpleNamespace
+
+    from warc_metadata_sidecar_spark import driver_queries as dq
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        for v, want in (("134217728", 128 << 20), ("64k", 64 << 10),
+                        ("32M", 32 << 20), ("2g", 2 << 30), ("16mb", 16 << 20),
+                        ("1GB", 1 << 30)):
+            spark.conf.set(key, v)
+            assert dq._split_bytes(spark) == want, v
+    finally:
+        spark.conf.set(key, old)
+
+    def conf(get):
+        return SimpleNamespace(conf=SimpleNamespace(get=get))
+
+    assert dq._split_bytes(conf(lambda k: "lots")) == 128 << 20
+    assert dq._split_bytes(conf(lambda k: 1 / 0)) == 128 << 20
+
+
+def test_est_splits_sums_hive_partitioned_part_files(tmp_path):
+    """A hive-partitioned parquet directory: only the regular part files
+    under `key=value/` count; Spark's `_`/`.`-prefixed bookkeeping files and
+    directories, and the directory entries themselves, do not."""
+    from warc_metadata_sidecar_spark import driver_queries as dq
+
+    root = tmp_path / "documents.parquet"
+    for part, size in (("year=2020", 10), ("year=2021", 25)):
+        (root / part).mkdir(parents=True)
+        (root / part / "part-0.parquet").write_bytes(b"x" * size)
+        (root / part / ".part-0.parquet.crc").write_bytes(b"c" * 99)
+    (root / "_SUCCESS").write_bytes(b"")
+    (root / "_temporary" / "0").mkdir(parents=True)
+    (root / "_temporary" / "0" / "part-9.parquet").write_bytes(b"x" * 99)
+    # split 10: 10 bytes -> 1 split, 25 bytes -> 3 splits
+    assert dq._est_splits(str(root), 10) == 4
+    assert dq._est_splits(str(root / "year=2021" / "part-0.parquet"), 10) == 3

@@ -8,34 +8,152 @@ deterministic stand-ins (fido/chardet/cld2 absent from the image), so the
 assertions here pin structure + counters + the stand-ins' stable outputs
 (`fmt/471`, `ascii`), exactly the classes of checks the reference suite
 makes with its own mocks.
+
+Each fixture-file test runs twice: over a generated stand-in for the file
+(always), and over the reference's own file (skipped when that directory
+is absent). The byte-golden merge test needs the reference's exact CDXJ
+inputs, so it has no generated variant.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from warc_metadata_sidecar_spark import schema
+from warc_metadata_sidecar_spark import gen, schema
 from warc_metadata_sidecar_spark.operators.sidecar import sidecar_counters, sidecar_rows
 from warc_metadata_sidecar_spark.sources.warc_ingest import parse_warc_bytes
 
-REF = "/root/reference/tests"
+# --- generated stand-ins for the reference's fixture files -------------------
+# Same record classes, framing and the features the assertions below read
+# (one English page at https://www.unt.edu with >20 absolute links and a
+# root-relative /sites/ link); the byte goldens are NOT regenerated.
+
+PAGE_URL, PAGE_DATE = "https://www.unt.edu", "2021-11-11T21:11:11Z"
 
 
-def _docs(spark, name):
-    with open(f"{REF}/{name}", "rb") as fh:
-        rows = parse_warc_bytes(f"{REF}/{name}", fh.read())
+def _warc(*records: tuple[dict, bytes]) -> bytes:
+    out = b""
+    for headers, body in records:
+        head = {"WARC-Date": PAGE_DATE, **headers, "Content-Length": str(len(body))}
+        out += (
+            "WARC/1.0\r\n" + "".join(f"{k}: {v}\r\n" for k, v in head.items()) + "\r\n"
+        ).encode() + body + b"\r\n\r\n"
+    return out
+
+
+def _http(body: bytes, ctype: str) -> bytes:
+    return (
+        f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n"
+        f"Content-Length: {len(body)}\r\n\r\n"
+    ).encode() + body
+
+
+def _record(kind: str, rec_id: str, url: str, body: bytes, digest: str | None = None):
+    headers = {
+        "WARC-Type": kind,
+        "WARC-Record-ID": f"<urn:uuid:{rec_id}>",
+        "WARC-Target-URI": url,
+        "Content-Type": "application/http; msgtype=response",
+    }
+    if digest:
+        headers["WARC-Payload-Digest"] = digest
+    return headers, body
+
+
+def _page() -> bytes:
+    links = "".join(
+        f'<li><a href="{PAGE_URL}/{p}">{p}</a></li>'
+        for p in (f"section-{i}" for i in range(24))
+    )
+    return (
+        '<!DOCTYPE html><html lang="en"><head><title>University of North Texas'
+        '</title><link rel="icon" href="/sites/default/files/favicon.ico"></head>'
+        "<body><p>The university is a public research university in Denton. "
+        "Students and faculty work together on research, teaching and service "
+        "for the people of the state and the world.</p>"
+        f'<a href="{PAGE_URL}/">Home</a><a href="#main">Skip</a><ul>{links}</ul>'
+        "</body></html>"
+    ).encode()
+
+
+def _text_warc() -> bytes:
+    return _warc(_record("response", "text-0", PAGE_URL,
+                         _http(_page(), "text/html"), "sha1:TEXTPAGE"))
+
+
+def _generated(spark, name: str) -> bytes:
+    if name == "text.warc":
+        return _text_warc()
+    if name == "dns.warc":
+        dns = b"20211111211111\nwww.unt.edu.\t300\tIN\tA\t129.120.1.1\n"
+        headers, body = _record("response", "dns-0", "dns:www.unt.edu", dns)
+        return _warc(({**headers, "Content-Type": "text/dns"}, body))
+    if name == "gif.warc":
+        gif = gen._enc_gif(2, 2, [0, 1, 1, 0])
+        return _warc(_record("response", "gif-0", f"{PAGE_URL}/a.gif",
+                             _http(gif, "image/gif"), "sha1:GIF"))
+    if name == "revisit.warc":
+        return _warc(_record("revisit", "revisit-0", PAGE_URL,
+                             _http(b"", "text/html"), "sha1:TEXTPAGE"))
+    if name == "text.arc":
+        page = _http(_page(), "text/html")
+        version = b"1 0 Generated\nURL IP-address Archive-date Content-type Archive-length\n"
+        return (
+            f"filedesc://text.arc 0.0.0.0 20211111211111 text/plain {len(version)}\n"
+        ).encode() + version + b"\n" + (
+            f"{PAGE_URL} 129.120.1.1 20211111211111 text/html {len(page)}\n"
+        ).encode() + page + b"\n"
+    if name == "digest_multiples.warc":
+        info = {"WARC-Type": "warcinfo", "WARC-Record-ID": "<urn:uuid:info-0>",
+                "Content-Type": "application/warc-fields"}
+        pages = [
+            _record("response", f"dup-{i}", f"{PAGE_URL}/{i}",
+                    _http(_page() + bytes([65 + i % 2]), "text/html"),
+                    f"sha1:DIGEST{i % 2}")
+            for i in range(4)
+        ]
+        return _warc((info, b"software: generated\r\n"), *pages)
+    if name == "warc.warc.meta.gz":
+        # the WARC writer's own gzipped output for the text.warc page
+        from warc_metadata_sidecar_spark.sources.warc_export import export_sidecar_warcs
+
+        docs = _docs(spark, "warc.warc", _text_warc())
+        side = sidecar_rows(docs).join(docs.select("doc_id", "source_file"), "doc_id")
+        blob = bytes(export_sidecar_warcs(side, gzip=True).first().warc_bytes)
+        assert blob[:2] == b"\x1f\x8b"  # gzip members, like the golden
+        return blob
+    raise KeyError(name)
+
+
+def _docs(spark, name, data: bytes):
+    rows = parse_warc_bytes(name, data)
     cols = [f.name for f in schema.DOCUMENTS.fields]
     return spark.createDataFrame(
         [tuple(r.get(c) for c in cols) for r in rows], schema.DOCUMENTS
     )
 
 
-def _counters(spark, name):
-    return sidecar_counters(_docs(spark, name)).first()
+@pytest.fixture(params=["generated", "reference"])
+def archive(request, spark):
+    """name -> documents parsed from that fixture file: the generated
+    stand-in, or the reference's own file (skipped when absent)."""
+    if request.param == "generated":
+        return lambda name: _docs(spark, name, _generated(spark, name))
+    ref = request.getfixturevalue("reference_tests")
+
+    def read(name):
+        with open(f"{ref}/{name}", "rb") as fh:
+            return _docs(spark, name, fh.read())
+
+    return read
 
 
-def test_text_warc(spark):
+def _counters(archive, name):
+    return sidecar_counters(archive(name)).first()
+
+
+def test_text_warc(spark, archive):
     # reference :118-142: 1 record read, 1 annotated, all detectors fired
-    docs = _docs(spark, "text.warc")
+    docs = archive("text.warc")
     assert docs.count() == 1
     c = sidecar_counters(docs).first()
     assert (c.total_records_read, c.mime_type_records, c.records_written) == (1, 1, 1)
@@ -51,15 +169,15 @@ def test_text_warc(spark):
     assert row.payload.startswith("Identified-Payload-Type: ")
 
 
-def test_dns_warc(spark):
+def test_dns_warc(spark, archive):
     # reference :144-153: dns record filtered, 0 metadata records
-    c = _counters(spark, "dns.warc")
+    c = _counters(archive, "dns.warc")
     assert (c.total_records_read, c.mime_type_records, c.records_written) == (1, 0, 0)
 
 
-def test_gif_warc(spark):
+def test_gif_warc(spark, archive):
     # reference :155-175: mime/puid only — no charset/language/soft404
-    docs = _docs(spark, "gif.warc")
+    docs = archive("gif.warc")
     c = sidecar_counters(docs).first()
     assert (c.total_records_read, c.mime_type_records, c.records_written) == (1, 1, 1)
     row = sidecar_rows(docs).first()
@@ -72,16 +190,16 @@ def test_gif_warc(spark):
     assert lines[1].startswith("Preservation-Identifier: fmt/")
 
 
-def test_revisit_warc(spark):
+def test_revisit_warc(spark, archive):
     # reference :177-186: revisit rec_type filtered out entirely
-    c = _counters(spark, "revisit.warc")
+    c = _counters(archive, "revisit.warc")
     assert (c.total_records_read, c.mime_type_records, c.records_written) == (1, 0, 0)
 
 
-def test_text_arc(spark):
+def test_text_arc(spark, archive):
     # reference :188-197: filedesc -> warcinfo (filtered); the content row is
     # annotated with NO Concurrent-ID / Warcinfo-ID and no digest sharing
-    docs = _docs(spark, "text.arc")
+    docs = archive("text.arc")
     assert docs.count() == 2
     types = {r.rec_type for r in docs.select("rec_type").collect()}
     assert types == {"warcinfo", "response"}
@@ -92,11 +210,11 @@ def test_text_arc(spark):
     assert row.concurrent_id is None and row.warcinfo_id is None
 
 
-def test_digest_multiples_warc(spark):
+def test_digest_multiples_warc(spark, archive):
     # reference :199-233: 5 records read (1 warcinfo + 4 responses), 4
     # annotated, only 2 distinct digests -> detectors run twice, same-digest
     # rows share identical metadata payloads (DIGEST_CACHE semantics)
-    docs = _docs(spark, "digest_multiples.warc")
+    docs = archive("digest_multiples.warc")
     assert docs.count() == 5
     c = sidecar_counters(docs).first()
     assert (c.total_records_read, c.mime_type_records, c.records_written) == (5, 4, 4)
@@ -115,10 +233,10 @@ def test_digest_multiples_warc(spark):
     assert len(by_digest) == 2
 
 
-def test_golden_sidecar_gz_parses(spark):
+def test_golden_sidecar_gz_parses(spark, archive):
     # the golden gzipped sidecar itself ingests (gzip member support):
     # 1 warcinfo + 1 metadata record for the text.warc url
-    docs = _docs(spark, "warc.warc.meta.gz")
+    docs = archive("warc.warc.meta.gz")
     rows = docs.collect()
     assert len(rows) == 2
     assert {r.rec_type for r in rows} == {"warcinfo", "metadata"}
@@ -130,7 +248,7 @@ def test_golden_sidecar_gz_parses(spark):
     assert "Charset-Detected: " in text
 
 
-def test_merge_reference_cdxj_byte_golden(spark):
+def test_merge_reference_cdxj_byte_golden(spark, reference_tests):
     """reference tests/test_merge_cdxj.py:167-190: merging warc_1.cdxj with
     meta.cdxj produces exactly the reference's expected merged line —
     byte-for-byte, including json.dumps whitespace normalization
@@ -138,8 +256,8 @@ def test_merge_reference_cdxj_byte_golden(spark):
     from warc_metadata_sidecar_spark.operators.cdxj import cdxj_lines, merge_cdxj, merge_counters
     from warc_metadata_sidecar_spark.sources.cdxj_text import read_cdxj
 
-    meta = read_cdxj(spark, f"{REF}/meta.cdxj")
-    orig = read_cdxj(spark, f"{REF}/warc_1.cdxj")
+    meta = read_cdxj(spark, f"{reference_tests}/meta.cdxj")
+    orig = read_cdxj(spark, f"{reference_tests}/warc_1.cdxj")
     merged = merge_cdxj(orig, meta, canonicalize_json=True)
     lines = [r.value for r in cdxj_lines(merged).collect()]
     expected = (
@@ -178,14 +296,14 @@ def test_alpha3_full_code_set(spark):
     assert got.codes == "haw,heb"
 
 
-def test_extract_hrefs_from_real_page(spark):
+def test_extract_hrefs_from_real_page(spark, archive):
     """Real link discovery over the ingested reference page: absolute links
     kept, root-relative resolved against the origin, fragments dropped —
     feeding canonicalize gives valid frontier candidates."""
     from warc_metadata_sidecar_spark.frontier.canonical import canonicalize
     from warc_metadata_sidecar_spark.frontier.crawl import extract_hrefs
 
-    docs = _docs(spark, "text.warc")
+    docs = archive("text.warc")
     links = extract_hrefs(docs).collect()
     urls = {r.url for r in links}
     assert len(urls) > 20
@@ -211,7 +329,7 @@ def test_extract_hrefs_from_real_page(spark):
     assert all(r.canonical_url and r.host for r in rows)
 
 
-def test_full_pipeline_golden_cdxj_line(spark):
+def test_full_pipeline_golden_cdxj_line(spark, archive):
     """The reference's complete pipeline over its own fixture: text.warc ->
     ingest -> sidecar -> CDXJ. The key+timestamp must be the reference
     golden 'edu,unt)/ 20211111211111' (tests/test_sidecar2cdxj.py:47-54) —
@@ -219,7 +337,7 @@ def test_full_pipeline_golden_cdxj_line(spark):
     from warc_metadata_sidecar_spark.operators.cdxj import sidecar_to_cdxj
     from warc_metadata_sidecar_spark.operators.sidecar import sidecar_rows
 
-    docs = _docs(spark, "text.warc")
+    docs = archive("text.warc")
     line = sidecar_to_cdxj(sidecar_rows(docs)).first()
     assert line.urlkey == "edu,unt)/"
     assert line.ts == "20211111211111"
@@ -233,7 +351,7 @@ def test_full_pipeline_golden_cdxj_line(spark):
     assert "Charset-Detected" in block and "Languages-cld2" in block
 
 
-def test_full_three_script_pipeline_with_merge(spark):
+def test_full_three_script_pipeline_with_merge(spark, archive):
     """All three reference scripts chained over the real fixture: text.warc
     -> sidecar -> CDXJ -> merge into an original-CDXJ line with the same
     key. The merged block keeps the original field order and appends the
@@ -247,7 +365,7 @@ def test_full_three_script_pipeline_with_merge(spark):
     )
     from warc_metadata_sidecar_spark.operators.sidecar import sidecar_rows
 
-    docs = _docs(spark, "text.warc")
+    docs = archive("text.warc")
     meta = sidecar_to_cdxj(sidecar_rows(docs))
     orig = parse_cdxj_lines(
         spark.createDataFrame(
@@ -272,7 +390,7 @@ def test_full_three_script_pipeline_with_merge(spark):
     assert "charset" in block and "soft-404-detected" in block
 
 
-def test_crawl_loop_hrefs_discovery(spark, tmp_path):
+def test_crawl_loop_hrefs_discovery(spark, tmp_path, archive):
     """VERDICT r4 #2: the crawl loop runs REAL link discovery when
     discovery='hrefs' — crawling the ingested reference fixture page, the
     round-1 frontier is exactly `extract_hrefs` output on that page (the
@@ -280,7 +398,7 @@ def test_crawl_loop_hrefs_discovery(spark, tmp_path):
     warc_metadata_sidecar.py:205)."""
     from warc_metadata_sidecar_spark.frontier.crawl import extract_hrefs, run_crawl
 
-    docs = _docs(spark, "text.warc")  # one real page: https://www.unt.edu
+    docs = archive("text.warc")  # one real page: https://www.unt.edu
     seeds = spark.createDataFrame(
         [("https://www.unt.edu", None, None, None, 1.0, 0, 0, None)],
         schema.FRONTIER,
@@ -317,12 +435,12 @@ def test_crawl_loop_hrefs_discovery(spark, tmp_path):
     ).count() == 0
 
 
-def test_crawl_loop_link_fn_override(spark, tmp_path):
+def test_crawl_loop_link_fn_override(spark, tmp_path, archive):
     """`link_fn` overrides discovery entirely: the next frontier is whatever
     the callable returns over the fetched pages (url + spans shape)."""
     from warc_metadata_sidecar_spark.frontier.crawl import run_crawl
 
-    docs = _docs(spark, "text.warc")
+    docs = archive("text.warc")
     seeds = spark.createDataFrame(
         [("https://www.unt.edu", None, None, None, 1.0, 0, 0, None)],
         schema.FRONTIER,

@@ -329,11 +329,8 @@ def test_streaming_ledger_bucketed_join_colocates(spark, tmp_path):
     with broadcast disabled, the anti-join plans one exchange (batch side
     only), vs two over the same data as plain parquet."""
     from warc_metadata_sidecar_spark.plans.audit import exchange_count
-    from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-        LEDGER,
-        _write_ledger,
-        ensure_ledger_table,
-    )
+    from warc_metadata_sidecar_spark.streaming import ledger
+    from warc_metadata_sidecar_spark.streaming.sidecar_stream import LEDGER
 
     ledger_dir = str(tmp_path / "ledger")
     rows = spark.range(2000).select(
@@ -345,14 +342,14 @@ def test_streaming_ledger_bucketed_join_colocates(spark, tmp_path):
         F.lit(None).cast("double").alias("soft404"),
         F.lit("p").alias("payload"),
     )
-    tbl = _write_ledger(rows, ledger_dir, "overwrite")
-    assert ensure_ledger_table(spark, ledger_dir) == tbl
+    tbl = ledger.write(rows, ledger_dir, "payload_digest", "overwrite")
+    known = ledger.ensure(spark, ledger_dir, "payload_digest")
     batch = spark.range(100).select(F.concat(F.lit("sha1:"), F.col("id") * 3).alias("payload_digest"))
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         bucketed = batch.join(
-            spark.table(tbl).select("payload_digest"), "payload_digest", "left_anti"
+            known.select("payload_digest"), "payload_digest", "left_anti"
         )
         plain = batch.join(
             spark.read.parquet(ledger_dir).select("payload_digest"),
@@ -369,14 +366,15 @@ def test_streaming_ledger_bucketed_join_colocates(spark, tmp_path):
 def test_streaming_ledger_compaction(spark, tmp_path):
     """Per-batch appends fragment the ledger; compaction rewrites one row
     per digest and bounds the file count."""
-    from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-        LEDGER,
-        _ledger_files,
-        _write_ledger,
-        compact_ledger,
-    )
+    import os
+
+    from warc_metadata_sidecar_spark.streaming import ledger
+    from warc_metadata_sidecar_spark.streaming.sidecar_stream import LEDGER
 
     ledger_dir = str(tmp_path / "ledger")
+
+    def files():
+        return sum(1 for f in os.listdir(ledger_dir) if f.endswith(".parquet"))
 
     def rows(lo, hi):
         return spark.range(lo, hi).select(
@@ -389,13 +387,14 @@ def test_streaming_ledger_compaction(spark, tmp_path):
             F.lit("p").alias("payload"),
         )
 
-    _write_ledger(rows(0, 50), ledger_dir, "overwrite")
+    ledger.write(rows(0, 50), ledger_dir, "payload_digest", "overwrite")
     for i in range(1, 6):
-        _write_ledger(rows(i * 50, (i + 1) * 50), ledger_dir, "append")
-    frag = _ledger_files(ledger_dir)
-    assert not compact_ledger(spark, ledger_dir, max_files=frag * 20)  # under threshold
-    assert compact_ledger(spark, ledger_dir, max_files=4)
-    assert _ledger_files(ledger_dir) < frag
+        ledger.write(rows(i * 50, (i + 1) * 50), ledger_dir, "payload_digest", "append")
+    frag = files()
+    # under threshold: no bucket holds more than `frag` files
+    assert not ledger.compact(spark, ledger_dir, "payload_digest", per_bucket_files=frag)
+    assert ledger.compact(spark, ledger_dir, "payload_digest")
+    assert files() < frag
     got = spark.read.parquet(ledger_dir)
     assert got.count() == 300 == got.select("payload_digest").distinct().count()
 
@@ -409,12 +408,9 @@ def test_ledger_compaction_leaves_untouched_buckets_alone(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-        LEDGER,
-        _files_by_bucket,
-        _write_ledger,
-        compact_ledger,
-    )
+    from warc_metadata_sidecar_spark.streaming import ledger
+    from warc_metadata_sidecar_spark.streaming.ledger import _files_by_bucket
+    from warc_metadata_sidecar_spark.streaming.sidecar_stream import LEDGER
 
     ledger_dir = str(tmp_path / "ledger")
 
@@ -433,7 +429,7 @@ def test_ledger_compaction_leaves_untouched_buckets_alone(spark, tmp_path):
 
     # seed every bucket, then discover which bucket each digest landed in
     seed = [f"sha1:{i}" for i in range(200)]
-    _write_ledger(rows_for(seed), ledger_dir, "overwrite")
+    ledger.write(rows_for(seed), ledger_dir, "payload_digest", "overwrite")
     placed = spark.read.parquet(ledger_dir).select(
         "payload_digest", F.input_file_name().alias("f")
     ).collect()
@@ -443,7 +439,7 @@ def test_ledger_compaction_leaves_untouched_buckets_alone(spark, tmp_path):
 
     # fragment ONLY the target bucket: 6 single-digest appends to it
     for _ in range(6):
-        _write_ledger(rows_for(target_digests), ledger_dir, "append")
+        ledger.write(rows_for(target_digests), ledger_dir, "payload_digest", "append")
     by_bucket = _files_by_bucket(ledger_dir)
     frag_bucket = max(by_bucket, key=lambda b: len(by_bucket[b]))
     assert len(by_bucket[frag_bucket]) >= 7
@@ -454,7 +450,7 @@ def test_ledger_compaction_leaves_untouched_buckets_alone(spark, tmp_path):
         for f in fs
     }
 
-    assert compact_ledger(spark, ledger_dir, max_files=4)
+    assert ledger.compact(spark, ledger_dir, "payload_digest")
     after = _files_by_bucket(ledger_dir)
     assert len(after[frag_bucket]) == 1, "fragmented bucket not merged"
     untouched_after = {
@@ -514,10 +510,8 @@ def test_streaming_ledger_compacts_during_stream(spark, tmp_path, monkeypatch):
     still works across compactions."""
     from warc_metadata_sidecar_spark import schema as sch
     from warc_metadata_sidecar_spark.streaming import sidecar_stream as ss
-    from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-        _files_by_bucket,
-        start_sidecar_stream,
-    )
+    from warc_metadata_sidecar_spark.streaming.ledger import _files_by_bucket
+    from warc_metadata_sidecar_spark.streaming.sidecar_stream import start_sidecar_stream
 
     compactions = {"n": 0}
     real_compact = ss.compact_ledger
@@ -557,7 +551,7 @@ def test_streaming_ledger_compacts_during_stream(spark, tmp_path, monkeypatch):
     drop([doc("c1", "sha1:C1", html)])
     q = start_sidecar_stream(
         spark, str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        ledger_dir=str(tmp_path / "ledger"), compact_every_files=1,
+        ledger_dir=str(tmp_path / "ledger"),
     )
     q.processAllAvailable()
     drop([doc("c2", "sha1:C2", html)])
@@ -593,23 +587,25 @@ def test_ledger_rejects_object_store_paths(spark, tmp_path):
     Iceberg guidance instead."""
     import pytest
 
-    from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-        compact_ledger,
-        ensure_ledger_table,
-        start_sidecar_stream,
+    from warc_metadata_sidecar_spark.streaming import ledger
+    from warc_metadata_sidecar_spark.streaming.paradedup_stream import (
+        start_paradedup_stream,
     )
+    from warc_metadata_sidecar_spark.streaming.sidecar_stream import start_sidecar_stream
 
     for bad in ("s3a://bucket/ledger", "hdfs://nn/ledger", "gs://b/l",
                 "abfss://c@acct.dfs.core.windows.net/l"):
         with pytest.raises(ValueError, match="local filesystem"):
-            ensure_ledger_table(spark, bad)
+            ledger.ensure(spark, bad, "payload_digest")
         with pytest.raises(ValueError, match="local filesystem"):
-            compact_ledger(spark, bad)
+            ledger.compact(spark, bad, "payload_digest")
+        with pytest.raises(ValueError, match="local filesystem"):
+            ledger.write(spark.range(1), bad, "id", "append")
     # review fix: file: URIs are rejected too — Spark resolves them but
     # os.listdir on the URI string sees nothing, silently disabling the
     # ledger (no serving, overwrite every batch, no compaction)
     with pytest.raises(ValueError, match="local filesystem"):
-        ensure_ledger_table(spark, "file:///data/ledger")
+        ledger.ensure(spark, "file:///data/ledger", "payload_digest")
     with pytest.raises(ValueError, match="local filesystem"):
         start_sidecar_stream(
             spark,
@@ -618,8 +614,14 @@ def test_ledger_rejects_object_store_paths(spark, tmp_path):
             str(tmp_path / "ckpt"),
             ledger_dir="s3a://bucket/ledger",
         )
+    # the runner checks every form's ledger at start, before any batch
+    with pytest.raises(ValueError, match="local filesystem"):
+        start_paradedup_stream(
+            spark, str(tmp_path / "in"), "file:///data/ledger",
+            str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        )
     # plain local paths pass the guard (no ledger yet -> None, no raise)
-    assert ensure_ledger_table(spark, str(tmp_path / "nothing")) is None
+    assert ledger.ensure(spark, str(tmp_path / "nothing"), "payload_digest") is None
 
 
 def test_ledger_swap_failure_invalidates_table(spark, tmp_path, monkeypatch):
@@ -627,18 +629,13 @@ def test_ledger_swap_failure_invalidates_table(spark, tmp_path, monkeypatch):
     of some buckets on disk. The catalog entry must be dropped at that
     moment — otherwise split_by_ledger's inner join double-serves every
     duplicated digest for the rest of the session. The next
-    ensure_ledger_table() rebuild dedupes."""
+    ledger.ensure() rebuild dedupes."""
     import os as _os
 
     import pytest
 
-    from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-        LEDGER,
-        _ledger_table_name,
-        _write_ledger,
-        compact_ledger,
-        ensure_ledger_table,
-    )
+    from warc_metadata_sidecar_spark.streaming import ledger
+    from warc_metadata_sidecar_spark.streaming.sidecar_stream import LEDGER
 
     ledger_dir = str(tmp_path / "ledger")
 
@@ -653,10 +650,10 @@ def test_ledger_swap_failure_invalidates_table(spark, tmp_path, monkeypatch):
             F.lit("p").alias("payload"),
         )
 
-    _write_ledger(rows(0, 50), ledger_dir, "overwrite")
+    ledger.write(rows(0, 50), ledger_dir, "payload_digest", "overwrite")
     for i in range(1, 6):
-        _write_ledger(rows(i * 50, (i + 1) * 50), ledger_dir, "append")
-    tbl = _ledger_table_name(ledger_dir)
+        ledger.write(rows(i * 50, (i + 1) * 50), ledger_dir, "payload_digest", "append")
+    tbl = ledger.table_name(ledger_dir)
     assert spark.catalog.tableExists(tbl)
 
     real_replace = _os.replace
@@ -674,7 +671,7 @@ def test_ledger_swap_failure_invalidates_table(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr("os.replace", flaky_replace)
     with pytest.raises(OSError, match="mid-swap"):
-        compact_ledger(spark, ledger_dir, max_files=4)
+        ledger.compact(spark, ledger_dir, "payload_digest")
     monkeypatch.setattr("os.replace", real_replace)
 
     # the partial swap left duplicates on disk, but the catalog entry is
@@ -685,9 +682,8 @@ def test_ledger_swap_failure_invalidates_table(spark, tmp_path, monkeypatch):
     assert raw.count() > raw.select("payload_digest").distinct().count()
 
     # restart-recovery path dedupes before anything reads the ledger again
-    tbl2 = ensure_ledger_table(spark, ledger_dir)
-    assert tbl2 == tbl
-    got = spark.table(tbl2)
+    got = ledger.ensure(spark, ledger_dir, "payload_digest")
+    assert spark.catalog.tableExists(tbl)
     assert got.count() == 300 == got.select("payload_digest").distinct().count()
 
 

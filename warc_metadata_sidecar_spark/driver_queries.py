@@ -17,6 +17,7 @@ dialects (the driver hash-compares values after sorting columns by name).
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Callable
 
 import pandas as pd
@@ -60,30 +61,35 @@ _FAN_VIEW_TABLES = ("documents", "embeddings")
 
 
 def _split_bytes(spark: SparkSession) -> int:
+    """spark.sql.files.maxPartitionBytes in bytes: a plain count or a size
+    with a k/m/g/t suffix (optionally followed by b), in any case; 128 MiB
+    when unset or unparsable."""
     try:
         v = str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        digits = "".join(c for c in v if c.isdigit())
-        return int(digits) if digits else 128 << 20
     except Exception:
         return 128 << 20
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?)b?\s*", v, re.IGNORECASE)
+    if not m:
+        return 128 << 20
+    return int(m.group(1)) << {"": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m.group(2).lower()]
 
 
 def _est_splits(path: str, split: int) -> int:
     """Lower bound on the scan's input partitions from the file layout:
-    sum of per-file split counts, directory-aware (a multi-file parquet
-    DIRECTORY — the shape of larger generated SFs — already fans across
-    its files, so os.path.getsize on the dir entry must not undercount)."""
-    if os.path.isdir(path):
-        est = 0
-        for name in os.listdir(path):
-            if name.startswith(("_", ".")):
-                continue
-            try:
-                est += max(1, -(-os.path.getsize(os.path.join(path, name)) // split))
-            except OSError:
-                est += 1
-        return max(1, est)
-    return max(1, -(-os.path.getsize(path) // split))
+    sum of per-file split counts over the regular data files, recursing
+    into hive-partitioned subdirectories (`key=value/`) and skipping the
+    `_`/`.`-prefixed files and directories Spark ignores too (a multi-file
+    parquet DIRECTORY — the shape of larger generated SFs — already fans
+    across its files, so os.path.getsize on a dir entry must not count)."""
+    if not os.path.isdir(path):
+        return max(1, -(-os.path.getsize(path) // split))
+    est = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if not name.startswith(("_", ".")):
+                est += max(1, -(-os.path.getsize(os.path.join(root, name)) // split))
+    return max(1, est)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

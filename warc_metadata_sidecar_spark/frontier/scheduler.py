@@ -202,20 +202,3 @@ def rank_round(
         out = out.unionByName(pruned)
     return out.drop("budget", "crawl_delay_s")
 
-
-def select_and_carry(
-    candidates: DataFrame,
-    robots: DataFrame,
-    default_budget: int = DEFAULT_BUDGET,
-    round_no: int = 0,
-) -> tuple[DataFrame, DataFrame]:
-    """(selected, carryover) for one round.
-
-    A real frontier QUEUES what it doesn't schedule: robots-denied rows are
-    dropped permanently, but budget-overflow rows and rows of hosts gated
-    out by crawl_delay this round carry into the next round's frontier.
-    """
-    ranked = rank_round(candidates, robots, default_budget, round_no)
-    selected = ranked.filter(F.col("scheduled")).drop("eligible", "scheduled")
-    carryover = ranked.filter(~F.col("scheduled")).drop("eligible", "scheduled", "rnk")
-    return selected, carryover

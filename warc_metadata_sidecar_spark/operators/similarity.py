@@ -46,13 +46,6 @@ def _norm(col: F.Column) -> F.Column:
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def _cosine(a: str, b: str) -> F.Column:
-    """Exact cosine between two array<double> columns — native fold. The
-    hot paths precompute norms and use _dot/(na*nb) instead; this form
-    remains for one-shot scoring (same arithmetic, identical values)."""
-    return _dot(a, b) / (_norm(F.col(a)) * _norm(F.col(b)))
-
-
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 

@@ -44,24 +44,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
 
 
-def python_stage_after_filters(df: DataFrame) -> bool:
-    """True if every Filter over base columns appears below (executes before)
-    the first Arrow/Python eval node in the formatted plan tree order."""
-    plan = formatted_plan(df)
-    lines = plan.splitlines()
-    first_python = next(
-        (i for i, l in enumerate(lines) if "ArrowEvalPython" in l or "MapInPandas" in l or "BatchEvalPython" in l),
-        None,
-    )
-    scans = [i for i, l in enumerate(lines) if "Scan parquet" in l or "Scan ExistingRDD" in l]
-    if first_python is None:
-        return True
-    # formatted plan lists operators top-down from output to scan: the scan
-    # (and the filters adjacent to it) must come AFTER the python node line
-    # for the python stage to consume filtered input.
-    return all(s > first_python for s in scans) or "Filter" in "\n".join(lines[first_python:])
-
-
 def simple_plan(df: DataFrame) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -27,19 +27,17 @@ At 100 TB: per-batch cost is the chunk scan (linear in batch bytes,
 shuffle-free) + one (md5, length)-row exchange for the first-occurrence
 window + the co-located ledger join; content bytes never shuffle and
 never re-store. Compaction: the shared per-bucket size-tiered rewrite
-(streaming/ledger.compact; Iceberg rewrite_data_files in production —
-the sidecar_stream note)."""
+(streaming/ledger.compact; Iceberg rewrite_data_files in production)."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.operators.cdc import cdc_chunks
 from warc_metadata_sidecar_spark.streaming import ledger
-from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-    _require_local_ledger,
-)
 
 
 def cdcdup_batch(
@@ -52,12 +50,12 @@ def cdcdup_batch(
 ) -> DataFrame:
     """Process one ingest batch of blob rows (media_ref, bytes); returns
     the per-blob accounting and appends never-seen chunks to the ledger."""
-    _require_local_ledger(ledger_dir)
+    chunks_dir = os.path.join(ledger_dir, "chunks")
     chunks = cdc_chunks(
         batch_media, min_size=min_size, mask_bits=mask_bits, max_size=max_size
     ).localCheckpoint(eager=True)
 
-    old = ledger.ensure(spark, ledger_dir, "chunks", "chunk_md5", prefix="cdcdup")
+    old = ledger.ensure(spark, chunks_dir, "chunk_md5")
     if old is not None:
         in_ledger = chunks.join(
             old.select("chunk_md5").withColumnRenamed("chunk_md5", "_lm"),
@@ -75,9 +73,7 @@ def cdcdup_batch(
 
     new_chunks = flagged.filter("_is_new").select("chunk_md5", "length")
     mode = "append" if old is not None else "overwrite"
-    ledger.write(
-        new_chunks, ledger_dir, "chunks", "chunk_md5", mode, prefix="cdcdup"
-    )
+    ledger.write(new_chunks, chunks_dir, "chunk_md5", mode)
 
     return flagged.groupBy("media_ref").agg(
         F.count(F.lit(1)).cast("long").alias("n_chunks"),
@@ -97,22 +93,10 @@ def start_cdcdup_stream(
     checkpoint_dir: str,
     **kwargs,
 ):
-    """File-source streaming form: each micro-batch of blob rows runs
-    cdcdup_batch and appends its accounting to `out_dir`."""
-    _require_local_ledger(ledger_dir)
-    stream = (
-        spark.readStream.schema("media_ref string, bytes binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        acc = cdcdup_batch(spark, batch_df, ledger_dir, **kwargs)
-        acc.write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """File-source streaming form (ledger.run_ledger_stream): each
+    micro-batch of blob rows runs cdcdup_batch and appends its accounting to
+    `out_dir`."""
+    return ledger.run_ledger_stream(
+        spark, source_dir, "media_ref string, bytes binary", out_dir, checkpoint_dir,
+        ledger_dir, lambda batch: (cdcdup_batch(spark, batch, ledger_dir, **kwargs), None),
     )

@@ -3,8 +3,8 @@ images/audio against everything already accepted (the online form of
 operators/phash.neardup_pairs, the way a perpetually-fed multimodal
 corpus actually runs fingerprint dedup).
 
-State = ONE bucketed parquet table (the digest-ledger discipline from
-sidecar_stream.py via streaming/ledger.py):
+State = ONE bucketed parquet table under `ledger_dir/bands`
+(streaming/ledger.py):
 
   bands (band_idx, band_val, media_ref, d0..d3)  bucketed by band_val
 
@@ -34,19 +34,18 @@ whose ledger side is bucket-co-located (band_val buckets satisfy the
 join's clustered distribution — no ledger shuffle); ledger growth is 4
 small rows per accepted item per batch (compaction: the per-bucket
 size-tiered rewrite of streaming/ledger.py, Iceberg rewrite_data_files
-in production — same note as sidecar_stream).
+in production).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.operators.phash import N_BANDS, neardup_pairs
 from warc_metadata_sidecar_spark.streaming import ledger
-from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-    _require_local_ledger,
-)
 
 _DCOLS = [f"d{j}" for j in range(N_BANDS)]
 
@@ -57,13 +56,6 @@ def _band_rows(hashes: DataFrame) -> DataFrame:
         *_DCOLS,
         F.posexplode(F.array(*_DCOLS)).alias("band_idx", "band_val"),
     )
-
-
-def _hamming(a: str, b: str) -> F.Column:
-    return sum(
-        F.bit_count(F.col(f"{a}.d{j}").bitwiseXOR(F.col(f"{b}.d{j}")))
-        for j in range(N_BANDS)
-    ).cast("long")
 
 
 def mediadup_batch(
@@ -78,7 +70,7 @@ def mediadup_batch(
     long|null) for EVERY batch row (undecodable rows — null d0 — are
     trivially accepted but never ledgered) and appends the accepted
     rows' bands to the ledger."""
-    _require_local_ledger(ledger_dir)
+    bands_dir = os.path.join(ledger_dir, "bands")
     ids = batch_hashes.select("media_ref").distinct()
     new = (
         batch_hashes.filter(F.col("d0").isNotNull())
@@ -87,7 +79,7 @@ def mediadup_batch(
     )
     bands_new = _band_rows(new)
 
-    old = ledger.ensure(spark, ledger_dir, "bands", "band_val", prefix="mediadup")
+    old = ledger.ensure(spark, bands_dir, "band_val")
     pairs = None
     if old is not None:
         busy = (
@@ -136,7 +128,7 @@ def mediadup_batch(
     accepted = decisions.filter(F.col("dup_of").isNull()).select("media_ref")
     add = _band_rows(new.join(accepted, "media_ref"))
     mode = "append" if old is not None else "overwrite"
-    ledger.write(add, ledger_dir, "bands", "band_val", mode, prefix="mediadup")
+    ledger.write(add, bands_dir, "band_val", mode)
     return decisions
 
 
@@ -148,24 +140,11 @@ def start_mediadup_stream(
     checkpoint_dir: str,
     **kwargs,
 ):
-    """File-source streaming form: each micro-batch of hash rows runs
-    mediadup_batch and appends its decisions to `out_dir`."""
-    _require_local_ledger(ledger_dir)
-    stream = (
-        spark.readStream.schema(
-            "media_ref string, d0 long, d1 long, d2 long, d3 long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        dec = mediadup_batch(spark, batch_df, ledger_dir, **kwargs)
-        dec.write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """File-source streaming form (ledger.run_ledger_stream): each
+    micro-batch of hash rows runs mediadup_batch and appends its decisions
+    to `out_dir`."""
+    return ledger.run_ledger_stream(
+        spark, source_dir, "media_ref string, d0 long, d1 long, d2 long, d3 long",
+        out_dir, checkpoint_dir, ledger_dir,
+        lambda batch: (mediadup_batch(spark, batch, ledger_dir, **kwargs), None),
     )

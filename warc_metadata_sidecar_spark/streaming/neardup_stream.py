@@ -3,9 +3,9 @@ documents against everything already accepted (the online form of
 operators/dedup.minhash_dedup, the way a perpetually-fed training corpus
 actually runs dedup).
 
-State = two bucketed parquet tables (the digest-ledger discipline from
-sidecar_stream.py — local-path guard, derived table names, bucketed
-layout so the hot join never shuffles the ledger side):
+State = two bucketed parquet tables under `ledger_dir` (streaming/ledger.py
+— local-path guard, names derived from the directory, bucketed layout so
+the hot join never shuffles the ledger side):
 
   bands  (band, doc_id)   bucketed by band   — the LSH index
   sigs   (doc_id, h0..h7) bucketed by doc_id — for estimator lookups
@@ -30,11 +30,13 @@ Per batch:
 
 At 100 TB: per-batch cost is O(batch) signatures + a band join whose
 ledger side is bucket-co-located; ledger growth is one append per batch
-(compaction maps to the sidecar ledger's per-bucket rewrite — or Iceberg
-rewrite_data_files in production, same note as sidecar_stream).
+(compaction: ledger.compact's per-bucket rewrite — or Iceberg
+rewrite_data_files in production).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,22 +48,6 @@ from warc_metadata_sidecar_spark.operators.dedup import (
     shingles,
 )
 from warc_metadata_sidecar_spark.streaming import ledger
-from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-    _require_local_ledger,
-)
-
-BAND_BUCKETS = ledger.LEDGER_BUCKETS
-
-
-def _write(df: DataFrame, ledger_dir: str, kind: str, bucket_col: str, mode: str) -> str:
-    return ledger.write(df, ledger_dir, kind, bucket_col, mode, prefix="neardup")
-
-
-def _ensure(spark: SparkSession, ledger_dir: str, kind: str, bucket_col: str):
-    """The bucketed table handle, or None before the first append; reads
-    refresh the catalog entry first (streaming/ledger.py — the foreachBatch
-    table-cache pitfall)."""
-    return ledger.ensure(spark, ledger_dir, kind, bucket_col, prefix="neardup")
 
 
 def _est_expr(num_hashes: int) -> F.Column:
@@ -87,7 +73,8 @@ def neardup_batch(
     (doc_id, dup_of: long|null, est: double|null) for EVERY batch doc
     (docs too short to shingle are trivially accepted) and appends the
     accepted docs' bands+sigs to the ledger."""
-    _require_local_ledger(ledger_dir)
+    bands_dir = os.path.join(ledger_dir, "bands")
+    sigs_dir = os.path.join(ledger_dir, "sigs")
     ids = batch_docs.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
     sigs_new = minhash_signatures(
         shingles(batch_docs, "doc_id", "text", k), num_hashes
@@ -95,8 +82,8 @@ def neardup_batch(
     bands_new = band_hashes(sigs_new, num_hashes, band_size)
 
     hcols = [f"h{i}" for i in range(num_hashes)]
-    old_bands = _ensure(spark, ledger_dir, "bands", "band")
-    old_sigs = _ensure(spark, ledger_dir, "sigs", "doc_id")
+    old_bands = ledger.ensure(spark, bands_dir, "band")
+    old_sigs = ledger.ensure(spark, sigs_dir, "doc_id")
     sig_b = lambda sigs: sigs.select(  # noqa: E731
         F.col("doc_id").alias("anchor"),
         *[F.col(h).alias(f"g{i}") for i, h in enumerate(hcols)],
@@ -150,8 +137,8 @@ def neardup_batch(
     add_sigs = sigs_new.join(accepted, "doc_id")
     add_bands = band_hashes(add_sigs, num_hashes, band_size)
     mode = "append" if old_bands is not None else "overwrite"
-    _write(add_bands, ledger_dir, "bands", "band", mode)
-    _write(add_sigs, ledger_dir, "sigs", "doc_id", mode)
+    ledger.write(add_bands, bands_dir, "band", mode)
+    ledger.write(add_sigs, sigs_dir, "doc_id", mode)
     return decisions
 
 
@@ -164,30 +151,11 @@ def start_neardup_stream(
     threshold: float = 0.6,
     **kwargs,
 ):
-    """File-source streaming form: each micro-batch of documents runs
-    neardup_batch and appends its decisions to `out_dir`."""
-    _require_local_ledger(ledger_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
+    """File-source streaming form (ledger.run_ledger_stream): each
+    micro-batch of documents runs neardup_batch and appends its decisions
+    to `out_dir`."""
+    return ledger.run_ledger_stream(
+        spark, source_dir, "doc_id long, text string", out_dir, checkpoint_dir,
+        ledger_dir,
+        lambda batch: (neardup_batch(spark, batch, ledger_dir, threshold, **kwargs), None),
     )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        dec = neardup_batch(spark, batch_df, ledger_dir, threshold, **kwargs)
-        dec.write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _tbl(ledger_dir: str, kind: str) -> str:
-    return ledger.table_name("neardup", ledger_dir, kind)
-
-
-def _dir(ledger_dir: str, kind: str) -> str:
-    return ledger.table_dir(ledger_dir, kind)

@@ -23,19 +23,18 @@ Equivalence: feeding batches in ascending doc_id order produces the same
 rows as paragraph_dedup over the union (first-by-arrival == first-by-id;
 pinned in tests/test_neardup_stream.py). At 100 TB the ledger is the
 shuffle-free side of one equi-join per batch and compaction maps to the
-sidecar ledger's per-bucket rewrite (Iceberg rewrite_data_files in
-production — same note as sidecar_stream).
+per-bucket rewrite of ledger.compact (Iceberg rewrite_data_files in
+production).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.streaming import ledger
-from warc_metadata_sidecar_spark.streaming.sidecar_stream import (
-    _require_local_ledger,
-)
 
 
 def paradedup_batch(
@@ -47,14 +46,14 @@ def paradedup_batch(
     """Process one ingest batch; returns (doc_id, n_paras, n_kept, text)
     for every batch doc and appends the kept paragraphs' hashes to the
     ledger."""
-    _require_local_ledger(ledger_dir)
+    paras_dir = os.path.join(ledger_dir, "paras")
     paras = batch_docs.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), sep)).alias("idx", "para"),
     ).withColumn("ph", F.md5(F.col("para")))
     w = Window.partitionBy("ph").orderBy("doc_id", "idx")
     first = paras.withColumn("first_in_batch", F.row_number().over(w) == 1)
-    old = ledger.ensure(spark, ledger_dir, "paras", "ph", prefix="paradedup")
+    old = ledger.ensure(spark, paras_dir, "ph")
     if old is not None:
         seen = old.select("ph").withColumn("_seen", F.lit(True))
         first = first.join(seen, "ph", "left").withColumn(
@@ -84,7 +83,7 @@ def paradedup_batch(
         first.filter(F.col("keep")).select("ph").distinct()
     )
     mode = "append" if old is not None else "overwrite"
-    ledger.write(kept_ph, ledger_dir, "paras", "ph", mode, prefix="paradedup")
+    ledger.write(kept_ph, paras_dir, "ph", mode)
     return out
 
 
@@ -96,22 +95,10 @@ def start_paradedup_stream(
     checkpoint_dir: str,
     sep: str = "\n",
 ):
-    """File-source streaming form: each micro-batch runs paradedup_batch
-    and appends its rewritten documents to `out_dir`."""
-    _require_local_ledger(ledger_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        dec = paradedup_batch(spark, batch_df, ledger_dir, sep)
-        dec.write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """File-source streaming form (ledger.run_ledger_stream): each
+    micro-batch runs paradedup_batch and appends its rewritten documents to
+    `out_dir`."""
+    return ledger.run_ledger_stream(
+        spark, source_dir, "doc_id long, text string", out_dir, checkpoint_dir,
+        ledger_dir, lambda batch: (paradedup_batch(spark, batch, ledger_dir, sep), None),
     )
