@@ -3,7 +3,6 @@ test_merge_cdxj.py to table-level checks."""
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.functions.surt import py_surt, surt_col, timestamp14_col

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-import pytest
-
 from warc_metadata_sidecar_spark.operators.extract import (
     block_signals,
     main_content,

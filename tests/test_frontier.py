@@ -14,7 +14,13 @@ from warc_metadata_sidecar_spark.frontier.canonical import (
 )
 from warc_metadata_sidecar_spark.frontier.crawl import resume_round, run_crawl
 from warc_metadata_sidecar_spark.frontier.scheduler import select_round
-from warc_metadata_sidecar_spark.frontier.seen import Bloom, build_bloom, filter_new
+from warc_metadata_sidecar_spark.frontier.seen import (
+    DEFAULT_BITS,
+    Bloom,
+    filter_new,
+    load_sharded,
+    update_filter_shards,
+)
 from warc_metadata_sidecar_spark.frontier.simulator import simulate_crawl
 
 UNIVERSE = 1000
@@ -60,19 +66,32 @@ def test_bloom_no_false_negatives():
     assert all(b.might_contain(u) for u in urls)
 
 
-def test_bloom_prefilter_equals_exact_antijoin(spark, seeds, corpus):
-    from warc_metadata_sidecar_spark.frontier.seen import build_tiered
+def test_bloom_prefilter_equals_exact_antijoin(spark, seeds):
+    """filter_new over the sharded bloom+cuckoo filters returns exactly the
+    plain anti-join's rows (N2): false positives are resolved by the exact
+    backstop, never dropped. Called as the e2ebench crawl trace calls it.
+    Inputs: the canonicalized seeds against 7 seen keys in 1 Ki-bit
+    bitmaps; a 600-row frontier with an extra column against every third
+    key in 64-bit bitmaps, so about a dozen unseen rows are false positives
+    that only the backstop returns; and the same frontier against a filters
+    table built from 5 keys, so most of the 32 shards have no state."""
+    canon = canonicalize(seeds)
+    url = F.concat(F.lit("https://h"), F.col("id") % 9, F.lit("/p/"), F.col("id"))
+    cand = spark.range(600).select(url.alias("canonical_url"), (F.col("id") % 9).alias("extra"))
+    cases = [
+        (canon, canon.limit(7).select("canonical_url", F.lit(0).alias("first_round")), 1 << 10),
+        (cand, spark.range(0, 600, 3).select(url.alias("canonical_url")), 1 << 6),
+        (cand, spark.range(5).select(url.alias("canonical_url")), DEFAULT_BITS),
+    ]
 
-    cand = canonicalize(seeds)
-    seen = cand.limit(7).select("canonical_url", F.lit(0).alias("first_round"))
-    exact = filter_new(spark, cand, seen, bloom=None)
-    a = sorted(r.canonical_url for r in exact.select("canonical_url").collect())
-    # bloom prefilter and the tiered bloom+cuckoo prefilter both restore
-    # exactness through the anti-join backstop (N2)
-    for filt in (build_bloom(seen), build_tiered(seen, num_bits=1 << 10)):
-        got = filter_new(spark, cand, seen, bloom=filt)
-        b = sorted(r.canonical_url for r in got.select("canonical_url").collect())
-        assert a == b
+    def rows(df):  # the plain anti-join moves the key column first
+        return sorted(map(tuple, df.select(sorted(df.columns)).collect()), key=repr)
+
+    for cands, seen, num_bits in cases:
+        filters = update_filter_shards(spark, seen, num_bits=num_bits)
+        exact = rows(filter_new(spark, cands, seen))
+        assert exact and len(exact) < cands.count()
+        assert rows(filter_new(spark, cands, seen, load_sharded(filters))) == exact
 
 
 def test_select_round_budget_and_deny(spark, robots_df, corpus):
@@ -572,61 +591,6 @@ def test_crawl_mixed_layout_resume_keeps_all_seen(spark, corpus, robots_df, seed
     assert {(r.canonical_url, r.first_round) for r in cont.seen.collect()} == {
         (r.canonical_url, r.first_round) for r in full.seen.collect()
     }
-
-
-def test_crawl_shardjoin_lookup_identical_schedule(spark, corpus, robots_df, seeds):
-    """seen_lookup='shardjoin' (executor-side cogroup probe of the filter
-    states, no driver collect/broadcast) produces the identical schedule
-    and seen set to the broadcast-handle default."""
-    base = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                     skew_stats=False)
-    sj = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False, seen_lookup="shardjoin")
-    key = lambda r: (r.round, r.canonical_url, r.rnk)  # noqa: E731
-    assert {key(r) for r in base.schedule.collect()} == {key(r) for r in sj.schedule.collect()}
-    assert {(r.canonical_url, r.first_round) for r in base.seen.collect()} == {
-        (r.canonical_url, r.first_round) for r in sj.seen.collect()
-    }
-
-
-def test_seen_lookup_auto_switches_on_state_size(
-    spark, corpus, robots_df, seeds, monkeypatch
-):
-    """VERDICT r3 #2: seen_lookup='auto' (the default) must pick the
-    driver-broadcast path while the aggregate filter-state size is under
-    broadcast_state_limit and the executor-side shardjoin path once it is
-    over — measured, not guessed."""
-    from warc_metadata_sidecar_spark.frontier import crawl as crawl_mod
-    from warc_metadata_sidecar_spark.frontier import seen as seen_mod
-
-    calls = {"shardjoin": 0, "broadcast": 0}
-    real_sj, real_ls = seen_mod.filter_new_shardjoin, crawl_mod.load_sharded
-
-    def spy_sj(*a, **k):
-        calls["shardjoin"] += 1
-        return real_sj(*a, **k)
-
-    def spy_ls(*a, **k):
-        calls["broadcast"] += 1
-        return real_ls(*a, **k)
-
-    monkeypatch.setattr(seen_mod, "filter_new_shardjoin", spy_sj)
-    monkeypatch.setattr(crawl_mod, "load_sharded", spy_ls)
-
-    # limit 0: every measured state size exceeds it -> shardjoin from the
-    # first round that has filter state (round 0 has none yet)
-    sj = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False, seen_lookup="auto", broadcast_state_limit=0)
-    assert calls["shardjoin"] == 2 and calls["broadcast"] == 0, calls
-
-    calls.update(shardjoin=0, broadcast=0)
-    # default limit (64 MB): tiny states stay on the broadcast fast path
-    bc = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False, seen_lookup="auto")
-    assert calls["shardjoin"] == 0 and calls["broadcast"] == 2, calls
-
-    key = lambda r: (r.round, r.canonical_url, r.rnk)  # noqa: E731
-    assert {key(r) for r in sj.schedule.collect()} == {key(r) for r in bc.schedule.collect()}
 
 
 def test_bucketed_seen_resume_reuses_table(spark, corpus, robots_df, seeds, tmp_path):

@@ -5,8 +5,6 @@ dups-never-anchor property, ledger growth, and the foreachBatch form."""
 from __future__ import annotations
 
 import os
-import pytest
-from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.streaming import ledger
 from warc_metadata_sidecar_spark.streaming.mediadup_stream import (

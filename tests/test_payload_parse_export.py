@@ -1,7 +1,5 @@
 """S9 (sidecar payload deserialization) and SNK1 (WARC byte export) tests."""
 
-import json
-
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.operators.cdxj import parse_sidecar_payload

@@ -1,7 +1,6 @@
 """Physical-plan audits: the plan we run is the plan we designed
 (SURVEY.md §4) — pushdown, broadcast, python-stage placement."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.operators.cdxj import merge_cdxj, parse_cdxj_lines

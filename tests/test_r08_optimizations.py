@@ -24,7 +24,6 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.session import build_session
 

@@ -1,22 +1,32 @@
 """Cuckoo overflow tier + sharded filters-table tests (north rule N2)."""
 
 import inspect
+import warnings
 
 from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.frontier import seen as seen_mod
 from warc_metadata_sidecar_spark.frontier.seen import (
-    Bloom,
     CuckooFilter,
     TieredSeenFilter,
     _shard_of,
-    build_tiered,
     deserialize_tiered,
-    load_sharded,
+    filter_new,
     serialize_tiered,
     shard_expr,
     update_filter_shards,
 )
+
+
+def _probe(filters, num_shards=32):
+    """Membership test over collected shard states, routed like the build."""
+    states = {r.shard: deserialize_tiered(bytes(r.state)) for r in filters.collect()}
+
+    def might_contain(url):
+        t = states.get(_shard_of(url, num_shards))
+        return t is not None and t.might_contain(url)
+
+    return might_contain
 
 
 def test_cuckoo_no_false_negatives():
@@ -78,14 +88,16 @@ def test_shard_expr_matches_python_twin(spark):
 
 
 def test_sharded_build_is_executor_side(spark):
-    # the r1 scale-killer was build_tiered streaming every key through the
-    # driver via toLocalIterator — assert the key path no longer exists
+    # the r1 scale-killer was the build streaming every key through the
+    # driver via toLocalIterator — assert the key path no longer exists,
+    # nor a driver collect or broadcast of the filter states
     src = inspect.getsource(seen_mod)
-    assert "toLocalIterator" not in src
+    for driver_path in ("toLocalIterator", ".collect()", ".broadcast("):
+        assert driver_path not in src
     urls = [f"com,x)/{i}" for i in range(3000)]
     df = spark.createDataFrame([(u,) for u in urls], ["canonical_url"])
-    filt = build_tiered(df, num_bits=1 << 12)
-    assert all(filt.might_contain(u) for u in urls)  # no false negatives
+    might_contain = _probe(update_filter_shards(spark, df, num_bits=1 << 12))
+    assert all(might_contain(u) for u in urls)  # no false negatives
 
 
 def test_incremental_update_equals_from_scratch(spark):
@@ -96,17 +108,17 @@ def test_incremental_update_equals_from_scratch(spark):
     df1 = spark.createDataFrame([(u,) for u in first], ["canonical_url"])
     df2 = spark.createDataFrame([(u,) for u in delta], ["canonical_url"])
     base = update_filter_shards(spark, df1, None, num_bits=1 << 12).localCheckpoint()
-    updated = load_sharded(update_filter_shards(spark, df2, base, num_bits=1 << 12))
-    scratch = load_sharded(
+    updated = _probe(update_filter_shards(spark, df2, base, num_bits=1 << 12))
+    scratch = _probe(
         update_filter_shards(spark, df1.unionByName(df2), None, num_bits=1 << 12)
     )
     for u in first + delta:
-        assert updated.might_contain(u)
+        assert updated(u)
     probes = [f"org,z)/{i}" for i in range(2000)]
     # same per-shard insertion order (shard hash is order-independent here
     # because each url appears once) -> bit-identical decisions
-    assert sum(updated.might_contain(p) for p in probes) < 300
-    assert sum(scratch.might_contain(p) for p in probes) < 300
+    assert sum(updated(p) for p in probes) < 300
+    assert sum(scratch(p) for p in probes) < 300
 
 
 def test_update_touches_only_delta_shards(spark):
@@ -167,41 +179,14 @@ def test_filter_state_compression_and_legacy_compat():
     assert t3.bloom.bits.tobytes() == t.bloom.bits.tobytes()
 
 
-def test_shardjoin_lookup_equals_broadcast_lookup(spark):
-    """The executor-side shard-join membership probe (no driver collect /
-    broadcast) returns exactly the broadcast-handle path's rows — and both
-    equal the plain exact anti-join."""
-    from pyspark.sql import functions as F
-
-    from warc_metadata_sidecar_spark.frontier.seen import (
-        filter_new,
-        filter_new_shardjoin,
-        load_sharded,
-        update_filter_shards,
-    )
-
-    cand = spark.range(600).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 9), F.lit("/p/"), F.col("id"))
-        .alias("canonical_url"),
-        (F.col("id") % 9).alias("extra"),
-    )
-    seen = cand.filter(F.col("id" if "id" in cand.columns else "extra") >= 0)  # placeholder
-    seen = spark.range(0, 600, 3).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 9), F.lit("/p/"), F.col("id"))
-        .alias("canonical_url")
-    )
-    filters = update_filter_shards(spark, seen)
-    handle = load_sharded(filters)
-    via_broadcast = {
-        (r.canonical_url, r.extra)
-        for r in filter_new(spark, cand, seen, handle).collect()
-    }
-    via_shardjoin = {
-        (r.canonical_url, r.extra)
-        for r in filter_new_shardjoin(spark, cand, seen, filters).collect()
-    }
-    exact = {
-        (r.canonical_url, r.extra)
-        for r in cand.join(seen, "canonical_url", "left_anti").collect()
-    }
-    assert via_shardjoin == via_broadcast == exact and exact
+def test_grouped_applies_raise_no_type_hint_warning(spark):
+    """PySpark infers a grouped apply's eval type from its function's type
+    hints and warns on every call when only some parameters carry one; the
+    crawl loop builds these plans every round."""
+    seen = spark.createDataFrame([(f"com,a)/{i}",) for i in range(50)], ["canonical_url"])
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        filters = update_filter_shards(spark, seen)
+        filters = update_filter_shards(spark, seen, filters)
+        filter_new(spark, seen, seen, filters).collect()
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]

@@ -1,7 +1,5 @@
 """Cross-batch stateful budget enforcement (applyInPandasWithState)."""
 
-import time
-
 from warc_metadata_sidecar_spark.streaming.host_budget import admit_within_budget
 
 

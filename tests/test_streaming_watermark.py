@@ -3,8 +3,6 @@ stream (late-data handling for crawl metrics — fetches/sec per host class)."""
 
 from pyspark.sql import functions as F
 
-from warc_metadata_sidecar_spark import schema as sch
-
 
 def test_windowed_agg_with_watermark(spark, tmp_path):
     in_dir = tmp_path / "ev"

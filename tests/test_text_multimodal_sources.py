@@ -1,8 +1,6 @@
 """Tests: text-analysis expressions, multimodal plumbing, sources/sinks,
 and the streaming extraction variant."""
 
-import json
-
 import pytest
 from pyspark.sql import functions as F
 

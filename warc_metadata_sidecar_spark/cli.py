@@ -180,8 +180,6 @@ def cmd_crawl(args) -> None:
         # the 100 TB seen layout: exchange-free anti-join + O(delta)
         # checkpoints (BENCH/SEEN.md)
         bucketed_seen=True,
-        seen_lookup=args.seen_lookup,
-        broadcast_state_limit=args.seen_broadcast_limit,
         discovery=args.discovery,
         edge_kinds=tuple(args.edge_kinds.split(",")),
     )
@@ -450,20 +448,6 @@ def main() -> None:
     cr.add_argument("--rounds", type=int, default=3)
     cr.add_argument("--budget", type=int, default=2)
     cr.add_argument("--seeds", type=int, default=20)
-    cr.add_argument(
-        "--seen-lookup",
-        choices=("auto", "broadcast", "shardjoin"),
-        default="auto",
-        help="prefilter probe path: driver-broadcast states, executor-side "
-        "shard cogroup (the 10^10-key path), or auto by measured state size",
-    )
-    cr.add_argument(
-        "--seen-broadcast-limit",
-        type=int,
-        default=64 << 20,
-        help="auto mode switches to shardjoin above this aggregate "
-        "filter-state size in bytes",
-    )
     cr.add_argument(
         "--discovery",
         choices=("synthetic", "hrefs"),

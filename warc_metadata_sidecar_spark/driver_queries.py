@@ -2419,40 +2419,16 @@ def flagship_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sidecar_counters(docs)
 
 
-def url_seen_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N2 through the ENGINE's sharded tiered filter path (executor-built
-    bloom+cuckoo shards + exact anti-join backstop), oracled by the SAME
-    DuckDB SQL as url_seen_antijoin — the strongest correctness statement
-    about the prefilter: its output is exactly the exact anti-join's."""
-    from pyspark.sql import functions as F
-
-    from warc_metadata_sidecar_spark.frontier.seen import build_tiered, filter_new
-
-    register_views(spark, sf_dir)
-    base = spark.sql(
-        _render("WITH " + KEPT_CTE + "\nSELECT host, url, doc_id FROM kept", SPARK)
-    )
-    seen = base.filter(F.col("doc_id") % 3 == 0).select("url")
-    filt = build_tiered(seen, key="url")
-    new = filter_new(spark, base, seen, filt, key="url")
-    return (
-        new.groupBy("host")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_new"))
-        .orderBy("host")
-    )
-
-
 def url_seen_shardjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N2 through the EXECUTOR-SIDE shard-join lookup (cogroup probe of the
-    filter states where they live — no driver collect, no broadcast; the
-    path for states too large to broadcast at 10^10 keys), oracled by the
-    same DuckDB SQL as url_seen_antijoin."""
+    """N2 through the engine's sharded tiered filter (executor-built
+    bloom+cuckoo shards probed where they live + exact anti-join backstop),
+    oracled by the SAME DuckDB SQL as url_seen_antijoin — the strongest
+    correctness statement about the prefilter: its output is exactly the
+    exact anti-join's. Registered as both url_seen_sharded and
+    url_seen_shardjoin."""
     from pyspark.sql import functions as F
 
-    from warc_metadata_sidecar_spark.frontier.seen import (
-        filter_new_shardjoin,
-        update_filter_shards,
-    )
+    from warc_metadata_sidecar_spark.frontier.seen import filter_new, update_filter_shards
 
     register_views(spark, sf_dir)
     base = spark.sql(
@@ -2460,7 +2436,7 @@ def url_seen_shardjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seen = base.filter(F.col("doc_id") % 3 == 0).select("url")
     filters = update_filter_shards(spark, seen, key="url")
-    new = filter_new_shardjoin(spark, base, seen, filters, key="url")
+    new = filter_new(spark, base, seen, filters, key="url")
     return (
         new.groupBy("host")
         .agg(F.count(F.lit(1)).cast("long").alias("n_new"))
@@ -6706,7 +6682,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["flagship_sidecar"] = flagship_sidecar
     out["flagship_counters"] = flagship_counters
     out["crawl_rounds"] = crawl_rounds
-    out["url_seen_sharded"] = url_seen_sharded
+    out["url_seen_sharded"] = url_seen_shardjoin
     out["url_seen_shardjoin"] = url_seen_shardjoin
     out["url_seen_bucketed"] = url_seen_bucketed
     out["ann_ivf_centroid_top1"] = ann_ivf_centroid_top1

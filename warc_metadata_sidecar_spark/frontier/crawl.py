@@ -44,11 +44,7 @@ from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.frontier.canonical import canonicalize
 from warc_metadata_sidecar_spark.frontier.scheduler import DEFAULT_BUDGET, rank_round
-from warc_metadata_sidecar_spark.frontier.seen import (
-    DEFAULT_SHARDS,
-    load_sharded,
-    update_filter_shards,
-)
+from warc_metadata_sidecar_spark.frontier.seen import DEFAULT_SHARDS, update_filter_shards
 from warc_metadata_sidecar_spark.frontier import seen as seen_mod
 
 # deterministic link model: page p links to (p*31+17)%N, (p*57+5)%N,
@@ -538,16 +534,6 @@ def _obs_int(obs: Observation, key: str, fallback_df: DataFrame) -> int:
         return int(fallback_df.count())
 
 
-def _filters_state_bytes(filters_df: DataFrame | None) -> int:
-    """Aggregate serialized size of the sharded filter states — the
-    auto-switch signal for the seen-lookup path. Cheap: the filters frame
-    is always a localCheckpoint'ed num_shards-row table."""
-    if filters_df is None:
-        return 0
-    row = filters_df.agg(F.sum(F.length("state")).alias("b")).first()
-    return int(row.b or 0)
-
-
 @dataclass
 class CrawlResult:
     schedule: DataFrame  # (round, canonical_url, host, url, priority, rnk)
@@ -643,8 +629,6 @@ def run_crawl(
     skew_stats: bool = True,
     bucketed_seen: bool = False,
     prune_salts: int | None = 16,
-    seen_lookup: str = "auto",
-    broadcast_state_limit: int = 64 << 20,
     discovery: str = "synthetic",
     link_fn=None,
     edge_kinds: tuple[str, ...] = ("href",),
@@ -676,14 +660,11 @@ def run_crawl(
     reconstructed seen set is REUSED as-is — no O(|seen|) drop-and-rewrite
     (VERDICT r3 #5).
 
-    seen_lookup selects how the tiered prefilter states are probed
-    (VERDICT r3 #2): 'broadcast' collects the compressed shard states
-    through the driver (fast while they are small), 'shardjoin' probes
-    them where they live via a cogroup (no driver collect — the 10^10-key
-    path), and 'auto' (default) switches to shardjoin once the aggregate
-    state size exceeds broadcast_state_limit (default 64 MB, the session's
-    autoBroadcastJoinThreshold). All paths return identical rows (pinned
-    by tests + the url_seen_shardjoin oracle).
+    use_bloom=True probes the sharded bloom+cuckoo filter states where
+    they live (seen.filter_new: a cogroup by url-hash shard, no driver
+    collect or broadcast) and sends only maybe-seen candidates to the
+    exact anti-join; False runs the plain anti-join. Both return identical
+    rows (pinned by tests + the url_seen_* oracles).
 
     discovery selects link discovery for the next round's frontier
     (VERDICT r4 #2): 'synthetic' (default) keeps the deterministic link
@@ -794,37 +775,15 @@ def run_crawl(
         else []
     )
     lineage: list[RoundMetrics] = []
-    # the state-size measurement feeds only the auto switch — explicit
-    # broadcast/shardjoin selections skip the per-round agg job
-    measure_state = use_bloom and seen_lookup == "auto"
-    state_bytes = _filters_state_bytes(filters_df) if measure_state else 0
 
     for rnd in range(start_round, rounds):
         shuffle_before = shuffle_totals(spark)
-        # N2: tiered prefilter served from the sharded filters table —
-        # loaded (fixed-size states), never rebuilt from the seen set.
-        # 'shardjoin' probes the states where they live (cogroup, no
-        # driver collect/broadcast — the 10^10-key path); 'broadcast'
-        # collects the compressed states (the small-state fast path);
-        # 'auto' switches on measured aggregate state size. Identical rows
-        # either way (pinned by tests).
-        lookup = seen_lookup
-        if lookup == "auto":
-            lookup = "shardjoin" if state_bytes > broadcast_state_limit else "broadcast"
-        if (
-            use_bloom
-            and lookup == "shardjoin"
-            and filters_df is not None
-            and n_seen > 0
-        ):
-            new_candidates = seen_mod.filter_new_shardjoin(
-                spark, frontier, seen, filters_df, num_shards=num_shards
-            )
-        else:
-            seen_filter: seen_mod.ShardedSeenFilter | None = None
-            if use_bloom and filters_df is not None and n_seen > 0:
-                seen_filter = load_sharded(filters_df, num_shards)
-            new_candidates = seen_mod.filter_new(spark, frontier, seen, seen_filter)
+        # N2: tiered prefilter served from the sharded filters table and
+        # probed where it lives, never rebuilt from the seen set
+        probe_filters = filters_df if use_bloom and n_seen > 0 else None
+        new_candidates = seen_mod.filter_new(
+            spark, frontier, seen, probe_filters, num_shards=num_shards
+        )
 
         # candidate count observed upstream: fills when the ranked
         # checkpoint (the one action consuming this plan) executes
@@ -945,8 +904,6 @@ def run_crawl(
                 filters_df,
                 num_shards=num_shards,
             ).localCheckpoint(eager=True)
-            if measure_state:
-                state_bytes = _filters_state_bytes(filters_df)
 
         mx, mn = _skew_stats(frontier) if skew_stats else (0, 0)
         shuffle_after = shuffle_totals(spark)

@@ -3,20 +3,20 @@
 Design (SURVEY.md §2b N2): probabilistic filters are a PREFILTER, never the
 source of truth — Bloom false positives must not drop URLs. The flow is:
 
-    candidates --bloom("definitely new")--> pass through, no shuffle
-               --bloom("maybe seen")-----> exact left_anti join vs seen
+    candidates --filter("definitely new")--> pass through
+               --filter("maybe seen")-----> exact left_anti join vs seen
 
-so the expensive anti-join shuffle only carries rows the filter could not
-clear (true dups + false positives, a small fraction of the frontier at
-10^10 scale with an appropriately sized filter). Exactness is restored by
-the anti-join; equality with the plain anti-join is asserted in tests.
+so the anti-join only carries rows the filter could not clear (true dups +
+false positives, a small fraction of the frontier at 10^10 scale with an
+appropriately sized filter). Exactness is restored by the anti-join;
+equality with the plain anti-join is asserted in tests.
 
-The Bloom bitmap is built distributed (one bitmap per partition via
-mapInPandas, OR-reduced on the driver — each partial is a fixed-size byte
-array, so driver traffic is partitions × bitmap_size regardless of row
-count) and shipped back as a broadcast variable. At true 10^10 scale the
-bitmap is partitioned by url-hash range (a `filters` table keyed by shard),
-each executor loading only its shard; the sandbox uses one shard.
+The filter is a bloom+cuckoo tier per url-hash shard, stored as a `filters`
+table with one binary state row per shard. The states are built, updated
+and probed on executors: `update_filter_shards` folds each round's new keys
+into their shard's state, and `filter_new` routes candidates to their shard
+so the task owning it deserializes that one state and probes its rows.
+Neither keys nor states pass through the driver.
 """
 
 from __future__ import annotations
@@ -153,8 +153,8 @@ class TieredSeenFilter:
 # keys into that shard's (deserialized) filter state, and the states persist
 # as one binary row per shard in a `filters` table. Per-round update cost is
 # O(|delta| + num_shards * state_size) — independent of |seen|, which is the
-# property that makes 10^10 URLs feasible. No URL key ever crosses the
-# driver; only the fixed-size states do (for the broadcast-lookup path).
+# property that makes 10^10 URLs feasible. Lookups probe the states where
+# they live (filter_new), so neither keys nor states cross the driver.
 # ---------------------------------------------------------------------------
 
 FILTERS_SCHEMA = T.StructType(
@@ -173,8 +173,8 @@ def serialize_tiered(t: TieredSeenFilter) -> bytes:
     """Compact deterministic state: header + zlib(bloom bitmap + cuckoo
     table + sorted overflow fingerprints). The bitmaps are zero-dominated
     until near capacity, so compression turns the per-round state shuffle /
-    driver collect / checkpoint from num_shards x 0.64 MB into a few KB per
-    shard (it decays gracefully to ~raw size as the filter fills)."""
+    checkpoint from num_shards x 0.64 MB into a few KB per shard (it decays
+    gracefully to ~raw size as the filter fills)."""
     import zlib
 
     ov = np.array(sorted(t.cuckoo.overflowed), dtype=np.uint16)
@@ -245,7 +245,6 @@ def update_filter_shards(
     key: str = "canonical_url",
     num_shards: int = DEFAULT_SHARDS,
     num_bits: int = DEFAULT_BITS,
-    spill_at: float = 0.5,
 ) -> DataFrame:
     """Fold `delta`'s keys into the sharded filter states — executor-side.
 
@@ -259,12 +258,12 @@ def update_filter_shards(
         .withColumn("shard", shard_expr(F.col("k"), num_shards))
     )
 
-    def merge(key_tuple, new_keys: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
+    def merge(key_tuple: tuple, new_keys: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
         shard = int(key_tuple[0])
         if len(state):
             t = deserialize_tiered(bytes(state["state"].iloc[0]))
         else:
-            t = TieredSeenFilter(num_bits=num_bits, spill_at=spill_at)
+            t = TieredSeenFilter(num_bits=num_bits)
         for u in new_keys["k"]:
             t.add(u)
         return pd.DataFrame(
@@ -273,8 +272,10 @@ def update_filter_shards(
 
     if existing is None:
         # fresh build: plain grouped apply — no cogroup against a
-        # synthesized empty frame (one less plan leg; same merge fn)
-        def build(key_tuple, new_keys: pd.DataFrame) -> pd.DataFrame:
+        # synthesized empty frame (one less plan leg; same merge fn).
+        # Every parameter is annotated so PySpark's eval-type inference
+        # succeeds instead of warning on each call.
+        def build(key_tuple: tuple, new_keys: pd.DataFrame) -> pd.DataFrame:
             return merge(key_tuple, new_keys, pd.DataFrame(columns=["state"]))
 
         return keys.groupBy("shard").applyInPandas(build, FILTERS_SCHEMA)
@@ -286,73 +287,10 @@ def update_filter_shards(
     )
 
 
-class ShardedSeenFilter:
-    """Driver/broadcast handle over the collected shard states. Lookup
-    routes through the same md5-prefix shard hash used at build time."""
-
-    def __init__(self, shards: dict[int, TieredSeenFilter], num_shards: int):
-        self.shards = shards
-        self.num_shards = num_shards
-
-    def might_contain(self, url: str) -> bool:
-        t = self.shards.get(_shard_of(url, self.num_shards))
-        return t.might_contain(url) if t is not None else False
-
-
-def load_sharded(filters: DataFrame, num_shards: int = DEFAULT_SHARDS) -> ShardedSeenFilter:
-    """Collect the fixed-size shard states (num_shards rows, each a constant
-    few hundred KB regardless of |seen|) into a broadcastable handle."""
-    rows = filters.collect()
-    return ShardedSeenFilter(
-        {r.shard: deserialize_tiered(bytes(r.state)) for r in rows}, num_shards
-    )
-
-
-def build_tiered(
-    seen: DataFrame,
-    key: str = "canonical_url",
-    num_bits: int = DEFAULT_BITS,
-    spill_at: float = 0.5,
-    num_shards: int = DEFAULT_SHARDS,
-) -> "ShardedSeenFilter":
-    """Executor-side sharded build of the tiered (bloom+cuckoo) filter. Keys
-    never cross the driver — each url-hash shard's filter is built by the
-    task owning that shard; the driver only collects num_shards fixed-size
-    states (the broadcast-lookup path). Incremental updates go through
-    update_filter_shards."""
-    filters = update_filter_shards(
-        seen.sparkSession, seen, None, key, num_shards, num_bits, spill_at
-    )
-    return load_sharded(filters, num_shards)
-
-
-def build_bloom(
-    seen: DataFrame,
-    key: str = "canonical_url",
-    num_bits: int = DEFAULT_BITS,
-    num_hashes: int = DEFAULT_HASHES,
-) -> Bloom:
-    """Distributed build: one partial bitmap per partition, OR-reduce on the
-    driver. The partials are fixed-size regardless of partition row count."""
-
-    def per_partition(batches):
-        bloom = Bloom.empty(num_bits, num_hashes)
-        touched = False
-        for pdf in batches:
-            touched = True
-            for url in pdf[key]:
-                if url is not None:
-                    bloom.add(url)
-        if touched:
-            yield pd.DataFrame({"bits": [bloom.bits.tobytes()]})
-
-    partials = seen.select(key).mapInPandas(
-        per_partition, T.StructType([T.StructField("bits", T.BinaryType())])
-    )
-    acc = Bloom.empty(num_bits, num_hashes)
-    for row in partials.collect():
-        acc.bits |= np.frombuffer(row.bits, dtype=np.uint8)
-    return acc
+def load_sharded(filters: DataFrame, num_shards: int = DEFAULT_SHARDS) -> DataFrame:
+    """Return `filters` unchanged. Kept because the e2ebench crawl trace
+    calls it by name and passes its result positionally to filter_new."""
+    return filters
 
 
 # ---------------------------------------------------------------------------
@@ -451,28 +389,33 @@ def append_seen_bucketed(
     )
 
 
-def filter_new_shardjoin(
+def filter_new(
     spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame,
-    filters: DataFrame,
+    filters: DataFrame | None = None,
     key: str = "canonical_url",
     num_shards: int = DEFAULT_SHARDS,
 ) -> DataFrame:
-    """filter_new with the prefilter lookup ON EXECUTORS: candidates route
-    to their url-hash shard (the same md5-prefix hash the build used) and
-    the task owning each shard deserializes its filter state ONCE per round
-    to probe its candidates — no driver collect, no broadcast. This is the
-    lookup path for filter states too large to broadcast (at 10^10 keys the
-    full state set is GBs); the broadcast handle (load_sharded) remains the
-    small-state fast path. Output rows are EXACTLY filter_new's (equality
-    pinned by tests and the url_seen_shardjoin oracle)."""
+    """Rows of `candidates` whose key is NOT in `seen` — exact.
+
+    `filters` is the sharded (shard, state, adds) table from
+    update_filter_shards, built with the same `num_shards`. Candidates route
+    to their url-hash shard and the task owning each shard deserializes its
+    state once to probe them; only maybe-seen rows take the anti-join, rows
+    the filter proves new bypass it. Without `filters`, plain left_anti:
+    the correctness baseline the filtered path must equal (pinned by tests
+    and the url_seen_* oracles).
+    """
+    if filters is None:
+        return candidates.join(seen.select(key), key, "left_anti")
+
     tagged = candidates.withColumn("_shard", shard_expr(F.col(key), num_shards))
     out_schema = T.StructType(
         list(tagged.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
     )
 
-    def probe(key_tuple, cand: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
+    def probe(key_tuple: tuple, cand: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
         out = cand.copy()
         if not len(cand):
             out["_maybe"] = pd.Series(dtype="bool")
@@ -492,38 +435,6 @@ def filter_new_shardjoin(
         .applyInPandas(probe, out_schema)
         .drop("_shard")
     )
-    definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    needs_check = flagged.filter(F.col("_maybe")).drop("_maybe")
-    confirmed_new = needs_check.join(seen.select(key), key, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
-def filter_new(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom=None,
-    key: str = "canonical_url",
-) -> DataFrame:
-    """Rows of `candidates` whose key is NOT in `seen` — exact.
-
-    `bloom` is any picklable object with might_contain(url) -> bool — a
-    Bloom, a CuckooFilter, or the TieredSeenFilter (bloom + cuckoo overflow,
-    north rule N2). Only maybe-seen rows take the anti-join shuffle; rows
-    the filter proves new bypass it. Without a filter, plain left_anti (the
-    correctness baseline every filter path must equal).
-    """
-    if bloom is None:
-        return candidates.join(seen.select(key), key, "left_anti")
-
-    bc = spark.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(urls: pd.Series) -> pd.Series:
-        b = bc.value
-        return urls.map(lambda u: bool(u is not None and b.might_contain(u)))
-
-    flagged = candidates.withColumn("_maybe", maybe_seen(F.col(key)))
     definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
     needs_check = flagged.filter(F.col("_maybe")).drop("_maybe")
     confirmed_new = needs_check.join(seen.select(key), key, "left_anti")
