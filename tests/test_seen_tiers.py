@@ -140,6 +140,32 @@ def test_update_touches_only_delta_shards(spark):
             assert before[shard] == after[shard]
 
 
+def test_shardjoin_lookup_equals_broadcast_lookup(spark):
+    """The executor-side shard-join probe returns exactly what probing the
+    collected shard states on the driver (the old broadcast lookup) and
+    resolving its maybe-seen rows exactly would return, and both equal the
+    plain exact anti-join."""
+    url = F.concat(F.lit("https://h"), F.col("id") % 9, F.lit("/p/"), F.col("id"))
+    cand = spark.range(600).select(url.alias("canonical_url"), (F.col("id") % 9).alias("extra"))
+    seen = spark.range(0, 600, 3).select(url.alias("canonical_url"))
+    filters = update_filter_shards(spark, seen)
+    via_shardjoin = {
+        (r.canonical_url, r.extra) for r in filter_new(spark, cand, seen, filters).collect()
+    }
+    might_contain = _probe(filters)
+    seen_keys = {r.canonical_url for r in seen.collect()}
+    via_broadcast = {
+        (r.canonical_url, r.extra)
+        for r in cand.collect()
+        if not (might_contain(r.canonical_url) and r.canonical_url in seen_keys)
+    }
+    exact = {
+        (r.canonical_url, r.extra)
+        for r in cand.join(seen, "canonical_url", "left_anti").collect()
+    }
+    assert via_shardjoin == via_broadcast == exact and exact
+
+
 def test_filter_state_compression_and_legacy_compat():
     """r3: shard states serialize zlib-compressed (sparse bitmaps -> ~KB per
     shard for the shuffle/collect/checkpoint paths) and still read the
