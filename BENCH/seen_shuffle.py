@@ -10,8 +10,8 @@ sets of growing size N, stored two ways —
                    ZERO exchange -> shuffle bytes stay flat (candidates only)
 
 Broadcast is disabled so the join keeps its at-scale shape (at 10^10 keys
-nothing broadcasts). Shuffle bytes come from the status REST API
-(spark.ui.enabled=true in this session only). Results land in BENCH/SEEN.md.
+nothing broadcasts). Shuffle bytes come from the driver's status
+store (crawl.shuffle_totals). Results land in BENCH/SEEN.md.
 
 Run: python BENCH/seen_shuffle.py
 """
@@ -46,17 +46,8 @@ def measure(spark, df) -> tuple[int, int]:
 
 
 def main() -> None:
-    spark = build_session(
-        "seen-shuffle-bench",
-        cpus=8,
-        extra={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4047",
-            # the /stages endpoint only lists retained stages; keep every
-            # stage of this measurement session so cumulative deltas are exact
-            "spark.ui.retainedStages": "100000",
-        },
-    )
+    # shuffle_totals reads the driver's status store: no UI needed
+    spark = build_session("seen-shuffle-bench", cpus=8)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     work = tempfile.mkdtemp(prefix="seen_shuffle_")
     cand = spark.range(N_CAND).select(

@@ -10,6 +10,7 @@ Usage:
   python bench_extra.py time  <query> [query...]   # noop-sink wall, 3 reps
   python bench_extra.py plan  <query> <suffix>     # write plans/r08/<q>_<suffix>.txt
   python bench_extra.py sweep                      # noop-sink wall for all bench queries
+  python bench_extra.py rounds [R] [seed]          # wall + Spark jobs per resumed crawl round
 """
 
 from __future__ import annotations
@@ -32,8 +33,66 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def rounds(n_rounds: int = 3, seed: int = 1) -> None:
+    """A resumable crawl at the e2ebench crawl sizes (10k documents, 400
+    seeds, local[2], 1 GB heap, annotate + bucketed seen + out_dir), one
+    run_crawl call per round as the benchmark drives it. Prints each
+    round's wall and the number of Spark jobs in its job group."""
+    import random
+    import shutil
+    import tempfile
+
+    from warc_metadata_sidecar_spark import gen, schema
+    from warc_metadata_sidecar_spark.frontier.crawl import run_crawl
+
+    n_docs, n_seeds = 10_000, 400
+    spark = build_session(
+        app_name="bench_extra_rounds", cpus=2,
+        extra={"spark.driver.memory": "1g", "spark.driver.extraJavaOptions": "-Xms1g"},
+    )
+    work = tempfile.mkdtemp(prefix="bench_extra_rounds-")
+    try:
+        docs_path = os.path.join(work, "docs")
+        gen.documents(spark, n_docs).coalesce(1).write.parquet(docs_path)
+        docs = spark.read.parquet(docs_path)
+        robots = spark.createDataFrame(
+            [{"host": f"host{h:02d}.example.com", "path_prefix": None, "allowed": True,
+              "crawl_delay_s": 1, "budget": 10_000} for h in range(50)],
+            schema.ROBOTS,
+        )
+        ids = random.Random(seed).sample(range(0, n_docs, 20), n_seeds)
+        seeds = spark.createDataFrame(
+            [{"url": f"https://host{i % 50:02d}.example.com/page/{i}", "canonical_url": None,
+              "host": None, "host_salt": None, "priority": None, "discovery_round": 0,
+              "seq": k, "parent_url": None} for k, i in enumerate(ids)],
+            schema.FRONTIER,
+        )
+        tracker = spark.sparkContext.statusTracker()
+        for r in range(n_rounds):
+            group = f"rounds.r{r}"
+            spark.sparkContext.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            m = run_crawl(
+                spark, docs, seeds, robots, rounds=r + 1, universe=2 * n_docs,
+                default_budget=2, out_dir=os.path.join(work, "crawl"),
+                annotate=True, bucketed_seen=True,
+            ).lineage[-1]
+            wall = time.perf_counter() - t0
+            print(
+                f"round={r} wall_s={wall:.2f} jobs={len(tracker.getJobIdsForGroup(group))} "
+                f"selected={m.selected} seen_after={m.seen_after}",
+                flush=True,
+            )
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "sweep"
+    if mode == "rounds":
+        rounds(*(int(a) for a in sys.argv[2:4]))
+        return
     spark = build_session(app_name="bench_extra", cpus=CPUS, shuffle_partitions=CPUS)
     qs = driver_queries.queries()
     driver_queries.register_views(spark, SF_DIR)

@@ -255,7 +255,7 @@ def test_sidecar_over_bucketed_table_drops_rep_shuffle(spark, docs100, tmp_path)
 def test_bucketed_seen_antijoin_no_exchange_on_seen_side(spark, tmp_path):
     """VERDICT r2 #1: the URL-seen exact anti-join backstop over the
     hash-bucketed seen table must not shuffle the seen side — only the
-    (prefiltered, small) candidate side exchanges. Plain parquet pays 2
+    (small) candidate side exchanges. Plain parquet pays 2
     exchanges; the bucketed layout pays 1, and appends preserve it."""
     from warc_metadata_sidecar_spark.frontier.seen import (
         append_seen_bucketed,

@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from warc_metadata_sidecar_spark.frontier.canonical import py_priority
-from warc_metadata_sidecar_spark.frontier.seen import Bloom, CuckooFilter
+from warc_metadata_sidecar_spark.frontier.seen import SeenFilter
 from warc_metadata_sidecar_spark.functions.detectors import (
     _detect_one,
     detect_charset,
@@ -79,16 +79,20 @@ def test_language_none_or_entries(text):
         assert all(0 <= e["text-covered"] <= 100 for e in res["languages"])
 
 
-@given(st.lists(st.text(string.printable, min_size=1, max_size=40), min_size=1, max_size=200))
+@given(
+    st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=200),
+    st.lists(st.integers(1, 50), max_size=8),
+)
 @settings(max_examples=50, deadline=None)
-def test_bloom_and_cuckoo_never_false_negative(urls):
-    b = Bloom.empty(1 << 14)
-    c = CuckooFilter(num_buckets=1 << 8)
-    for u in urls:
-        b.add(u)
-        c.add(u)
-    assert all(b.might_contain(u) for u in urls)
-    assert all(c.might_contain(u) for u in urls)
+def test_seen_filter_never_false_negative(hashes, cuts):
+    # any key hashes, added in any batching, across any number of layers
+    f = SeenFilter()
+    start = 0
+    for n in cuts + [len(hashes)]:
+        f.add(hashes[start : start + n])
+        start += n
+    assert f.might_contain(hashes).all()
+    assert SeenFilter.from_bytes(f.to_bytes()).might_contain(hashes).all()
 
 
 @given(

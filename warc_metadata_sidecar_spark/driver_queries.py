@@ -2420,8 +2420,8 @@ def flagship_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def url_seen_shardjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N2 through the engine's sharded tiered filter (executor-built
-    bloom+cuckoo shards probed where they live + exact anti-join backstop),
+    """N2 through the engine's sharded layered Bloom filter (executor-built
+    shards probed where they live + exact anti-join backstop),
     oracled by the SAME DuckDB SQL as url_seen_antijoin — the strongest
     correctness statement about the prefilter: its output is exactly the
     exact anti-join's. Registered as both url_seen_sharded and

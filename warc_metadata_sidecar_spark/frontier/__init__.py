@@ -5,7 +5,7 @@ The reference processes one WARC file in one thread (warc_metadata_sidecar.py:
 documents feed the sidecar extraction stage. Modules:
 
   canonical.py  N1: URL canonicalization, host extraction, host salting
-  seen.py       N2: URL-seen membership — sharded bloom+cuckoo filters
+  seen.py       N2: URL-seen membership — sharded layered Bloom filters
                 probed on executors + exact anti-join
   scheduler.py  N3/N4: partitioned priority queue + politeness/robots budget
   crawl.py      the iterative round driver: select -> fetch -> extract ->

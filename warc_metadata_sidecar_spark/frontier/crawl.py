@@ -3,31 +3,41 @@ discover -> checkpoint (N5/N6/N7).
 
 Iterative batch over table snapshots, not Structured Streaming: the north
 rule demands reproducible crawl ordering, and deterministic rounds make
-ordering a pure data property (SURVEY.md §1.2, §7.4). Each round is one
-Spark job; the driver loop only moves tiny metric scalars — all row data
-stays distributed.
+ordering a pure data property (SURVEY.md §1.2, §7.4). The driver loop only
+moves tiny metric scalars — all row data stays distributed.
 
 Driver-action budget (VERDICT r1 #3): metrics ride `observe()` on the plans
-that run anyway, so a round executes exactly THREE jobs —
-  1. ranked checkpoint (carries candidate/selected/carryover observations),
-  2. frontier checkpoint (carries fetched/new-link observations),
-  3. sharded filter update (cost O(|round delta| + shards), never O(|seen|)).
-`seen` is never separately materialized: it is a lazy union of scheduled
-filters over the per-round checkpointed ranked frames (each union leg is an
-in-memory scan). Skew stats come from an optional 4th cheap agg over the
-checkpointed (in-memory) frontier, on by default for lineage fidelity.
+that run anyway, so a round issues a fixed handful of driver actions —
+  1. ranked checkpoint (the exact URL-seen anti-join; carries the
+     candidate/selected observations),
+  2. fetched-documents checkpoint when annotating (the annotation and the
+     fetch join both read it),
+  3. frontier checkpoint (carries fetched/new-link observations),
+  4. with out_dir, the sharded filter update (cost O(|round delta| +
+     touched states), never O(|seen|)), computed by its snapshot write,
+  5. one per-partition row count of the checkpointed frontier (skew stats
+     and partition lineage), plus the snapshot writes.
+Under AQE every shuffle stage is a Spark job of its own, so the e2ebench
+crawl's resumed round (10k documents, 400 seeds, annotate, bucketed seen)
+runs 32 Spark jobs (round 0: 29); `bench_extra.py rounds` prints the
+count per round and tests/test_frontier.py pins a budget. `seen` is never
+separately materialized: it is the bucketed table or a lazy union of
+filters over the per-round checkpointed ranked frames.
 
-URL-seen (N2): the tiered bloom+cuckoo filter lives in a sharded `filters`
-table updated INCREMENTALLY each round with only that round's newly
-scheduled keys (frontier/seen.py update_filter_shards) — the r1 full
-rebuild-from-seen is gone. The filters table is checkpointed alongside
-frontier/seen so resume restores it without rescanning seen.
+URL-seen (N2): the round drops seen candidates with the exact anti-join
+against seen. The layered Bloom filter lives in a sharded `filters` table
+updated INCREMENTALLY each round with only that round's newly scheduled
+keys (frontier/seen.py update_filter_shards) and snapshotted alongside
+frontier/seen, so resume restores it without rescanning seen; the round
+itself does not probe it (`seen.filter_new` does, given the table).
 
 Checkpoint/lineage (N6): every round writes frontier/seen/schedule/filters
 parquet snapshots under out_dir/round=R/ (parquet `_SUCCESS` markers give
-atomic visibility) plus a lineage row. `resume_round` finds the latest
-complete snapshot; re-running the loop from there reproduces the identical
-schedule because no state lives outside the snapshots.
+atomic visibility) plus a lineage row and the frontier's per-partition
+rows, written from the driver without a Spark job (out_dir is local, as
+`resume_round` already assumes). `resume_round` finds the latest complete
+snapshot; re-running the loop from there reproduces the identical schedule
+because no state lives outside the snapshots.
 
 "Fetch" in the sandbox is an equi-join against the synthetic documents
 corpus (N5 — no network); discovered links are a pure function of the
@@ -477,42 +487,28 @@ class RoundMetrics:
     seen_after: int
     max_partition_rows: int = 0
     min_partition_rows: int = 0
-    # per-round executor shuffle bytes (read/write deltas from the status
-    # API) — the N2 scale evidence: with the bucketed seen layout these stay
-    # flat as |seen| grows. -1 = not measured (spark.ui.enabled=false).
+    # per-round executor shuffle bytes (read/write deltas from the driver's
+    # status store) — the N2 scale evidence: with the bucketed seen layout
+    # these stay flat as |seen| grows. -1 only when the executor totals
+    # shrank between samples (a dead executor's summary was evicted).
     shuffle_read_bytes: int = -1
     shuffle_write_bytes: int = -1
 
 
-def shuffle_totals(spark: SparkSession) -> tuple[int, int] | None:
-    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all stages
-    from the status REST API; None when the UI is disabled.
-
-    The endpoint only lists retained stages (spark.ui.retainedStages,
-    default 1000): once a long run evicts stages, cumulative sums can
-    SHRINK between samples — callers must treat a negative delta as
-    unmeasured (run_crawl records -1), and measurement sessions should
-    raise retainedStages (BENCH/seen_shuffle.py does)."""
-    import json as _json
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app_id = spark.sparkContext.applicationId
-    try:
-        # short timeout: a hung UI endpoint must not block the crawl loop
-        # (the except only catches errors, not hangs)
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages", timeout=5
-        ) as fh:
-            stages = _json.load(fh)
-    except Exception:
-        return None
-    return (
-        sum(s.get("shuffleReadBytes", 0) for s in stages),
-        sum(s.get("shuffleWriteBytes", 0) for s in stages),
-    )
+def shuffle_totals(spark: SparkSession) -> tuple[int, int]:
+    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) over every
+    executor, read from the driver's in-process status store — available
+    with the UI off (the session default) and without an HTTP request.
+    Task metrics reach the store through the listener bus, so bytes of a
+    job that just ended can land in the next sample; totals never double
+    count."""
+    execs = spark.sparkContext._jsc.sc().statusStore().executorList(False)
+    read = write = 0
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        read += e.totalShuffleRead()
+        write += e.totalShuffleWrite()
+    return read, write
 
 
 def _obs_int(obs: Observation, key: str, fallback_df: DataFrame) -> int:
@@ -542,21 +538,33 @@ class CrawlResult:
     lineage: list[RoundMetrics] = field(default_factory=list)
 
 
-def _partition_rows(df: DataFrame) -> DataFrame:
-    """(partition, rows) over a checkpointed frame — the per-partition
-    lineage the north rule asks for (cheap: in-memory scan, 1 agg)."""
-    return df.groupBy(F.spark_partition_id().alias("partition")).agg(
-        F.count(F.lit(1)).alias("rows")
-    )
+def _partition_rows(df: DataFrame) -> list[tuple[int, int]]:
+    """(partition, rows) of every non-empty partition of a checkpointed
+    frame — the per-partition lineage the north rule asks for, counted once
+    per round (in-memory scan, one small agg)."""
+    rows = df.groupBy(F.spark_partition_id().alias("p")).agg(F.count(F.lit(1)).alias("n"))
+    return sorted((r.p, r.n) for r in rows.collect())
 
 
-def _skew_stats(df: DataFrame) -> tuple[int, int]:
-    rows = (
-        _partition_rows(df)
-        .agg(F.max("rows").alias("mx"), F.min("rows").alias("mn"))
-        .first()
-    )
-    return (rows.mx or 0, rows.mn or 0)
+def _write_rows(out_dir: str, name: str, rnd: int, rows: list[dict], types: dict) -> None:
+    """Write one round's rows of a driver-side lineage table as the parquet
+    file `name/round-R.parquet` — no Spark job. Renamed into place, so a
+    reader never sees a partial file and a re-run round replaces its rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(out_dir, name)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".round-{rnd}.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, pa.schema(list(types.items()))), tmp)
+    os.replace(tmp, os.path.join(d, f"round-{rnd}.parquet"))
+
+
+def _parquet_rows(paths: list[str]) -> int:
+    """Row count of parquet snapshots from their footers — no Spark job."""
+    import pyarrow.dataset as ds
+
+    return sum(ds.dataset(p, format="parquet").count_rows() for p in paths)
 
 
 def _ckpt_dir(out_dir: str, rnd: int, name: str) -> str:
@@ -637,9 +645,10 @@ def run_crawl(
 
     Every round:
       1. canonicalize frontier (N1)
-      2. URL-seen filter: sharded tiered prefilter + exact anti-join (N2)
+      2. URL-seen filter: exact anti-join against seen (N2)
       3. politeness selection: robots deny + per-host budget window (N3/N4)
-      4. fetch = equi-join into documents on url (N5)
+      4. fetch = equi-join into documents on url (N5); when annotating, the
+         fetched documents are checkpointed once and read by both stages
       5. sidecar-annotate fetched rows (the §2a stage) when annotate=True;
          with out_dir the rows checkpoint per round (round=R/annotated) and
          the returned frame is ONE parquet scan — constant plan depth at
@@ -651,20 +660,28 @@ def run_crawl(
       7. checkpoint + lineage (N6)
 
     bucketed_seen=True (requires out_dir) stores `seen` as a hash-bucketed
-    table (VERDICT r2 #1): the exact anti-join backstop then co-locates on
-    the bucketed side with NO exchange — per-round shuffle bytes stay
-    O(|maybe-seen|) instead of O(|seen|) — and the per-round checkpoint
+    table (VERDICT r2 #1): the exact anti-join then co-locates on the
+    bucketed side with NO exchange — per-round shuffle bytes stay
+    O(|candidates|) instead of O(|seen|) — and the per-round checkpoint
     writes only the O(delta) `seen_delta` instead of re-copying the full
     seen set. Schedule/seen results are identical in both layouts (pinned
     by tests). On resume an existing table whose row count matches the
     reconstructed seen set is REUSED as-is — no O(|seen|) drop-and-rewrite
     (VERDICT r3 #5).
 
-    use_bloom=True probes the sharded bloom+cuckoo filter states where
-    they live (seen.filter_new: a cogroup by url-hash shard, no driver
-    collect or broadcast) and sends only maybe-seen candidates to the
-    exact anti-join; False runs the plain anti-join. Both return identical
-    rows (pinned by tests + the url_seen_* oracles).
+    use_bloom=True (with out_dir) keeps the sharded layered Bloom filters
+    table: each round folds its new keys into the states on executors and
+    snapshots them as round=R/filters, which `seen.filter_new(..., filters)`
+    probes. The round's own URL-seen step is the plain anti-join either
+    way: the probe cannot keep rows out of the join, and a round with it
+    lost 7 of 10 interleaved e2ebench crawl pairs on latency (ROADMAP
+    direction 3). A use_bloom resume from a checkpoint without a filters
+    snapshot (a round run without use_bloom writes none), or with the
+    older bloom+cuckoo states, rebuilds the filters from seen once.
+
+    With out_dir, a resume reads the snapshots without counting them: the
+    seen row count comes from the parquet footers, so the only count job
+    is the bucketed table's consistency check.
 
     discovery selects link discovery for the next round's frontier
     (VERDICT r4 #2): 'synthetic' (default) keeps the deterministic link
@@ -680,7 +697,7 @@ def run_crawl(
     meta_refresh / css_url / script_url); the default keeps the
     href-only oracle surface.
     """
-    empty_seen = spark.createDataFrame([], "canonical_url string, first_round int")
+    seen_schema = "canonical_url string, first_round int"
     if bucketed_seen and out_dir is None:
         raise ValueError("bucketed_seen requires out_dir (the table's location)")
     if discovery not in ("synthetic", "hrefs"):
@@ -690,58 +707,39 @@ def run_crawl(
     filters_df: DataFrame | None = None
     seen_tbl: str | None = None
     n_seen = 0
-    resumed_seen: DataFrame | None = None
-    if out_dir is not None:
-        done = resume_round(spark, out_dir)
-        if done >= 0:
-            start_round = done + 1
-            frontier = spark.read.parquet(_ckpt_dir(out_dir, done, "frontier"))
-            # Reconstruct seen across MIXED layouts (a union-layout history
-            # continued in bucketed mode writes full `seen` snapshots for
-            # early rounds and O(delta) `seen_delta` for later ones): take
-            # the LATEST full snapshot as the base, then union every delta
-            # after it — dropping either side would silently re-schedule
-            # already-crawled URLs.
-            base_round = -1
-            for r in range(done, -1, -1):
-                if os.path.exists(
-                    os.path.join(_ckpt_dir(out_dir, r, "seen"), "_SUCCESS")
-                ):
-                    base_round = r
-                    break
-            parts = []
-            if base_round >= 0:
-                parts.append(spark.read.parquet(_ckpt_dir(out_dir, base_round, "seen")))
-            parts.extend(
-                spark.read.parquet(_ckpt_dir(out_dir, r, "seen_delta"))
-                for r in range(base_round + 1, done + 1)
-                if os.path.exists(
-                    os.path.join(_ckpt_dir(out_dir, r, "seen_delta"), "_SUCCESS")
-                )
-            )
-            if parts:
-                resumed_seen = parts[0]
-                for p in parts[1:]:
-                    resumed_seen = resumed_seen.unionByName(p)
-            else:
-                resumed_seen = empty_seen
-            seen = resumed_seen
-            n_seen = seen.count()
-            filters_path = _ckpt_dir(out_dir, done, "filters")
-            if os.path.exists(os.path.join(filters_path, "_SUCCESS")):
-                filters_df = spark.read.parquet(filters_path).localCheckpoint(eager=True)
-            elif use_bloom and n_seen:
-                # legacy checkpoint without a filters table: one-time
-                # executor-side rebuild from the seen snapshot
-                filters_df = update_filter_shards(
-                    spark, seen, None, num_shards=num_shards
-                ).localCheckpoint(eager=True)
-        else:
-            frontier = canonicalize(seeds)
-            seen = empty_seen
-    else:
-        frontier = canonicalize(seeds)
-        seen = empty_seen
+    frontier = canonicalize(seeds)
+    seen = spark.createDataFrame([], seen_schema)
+    done = resume_round(spark, out_dir) if out_dir is not None else -1
+    if done >= 0:
+        start_round = done + 1
+        frontier = spark.read.parquet(_ckpt_dir(out_dir, done, "frontier"))
+        # Reconstruct seen across MIXED layouts (a union-layout history
+        # continued in bucketed mode writes full `seen` snapshots for
+        # early rounds and O(delta) `seen_delta` for later ones): take
+        # the LATEST full snapshot as the base, then every delta after
+        # it — dropping either side would silently re-schedule
+        # already-crawled URLs. Counted from the parquet footers.
+        base_round = next(
+            (r for r in range(done, -1, -1) if _snapshot_ok(out_dir, r, "seen")), -1
+        )
+        paths = [_ckpt_dir(out_dir, base_round, "seen")] if base_round >= 0 else []
+        paths += [
+            _ckpt_dir(out_dir, r, "seen_delta")
+            for r in range(base_round + 1, done + 1)
+            if _snapshot_ok(out_dir, r, "seen_delta")
+        ]
+        if paths:
+            seen = spark.read.schema(seen_schema).parquet(*paths)
+            n_seen = _parquet_rows(paths)
+        if use_bloom:
+            # only use_bloom rounds write filters snapshots, so the latest
+            # one never lacks keys of a later round
+            filters_df = seen_mod.read_filters(spark, _ckpt_dir(out_dir, done, "filters"))
+            if filters_df is None and n_seen:
+                # a checkpoint without a filters table, or with the older
+                # bloom+cuckoo states: rebuilt from the seen snapshot, on
+                # executors, by this round's filters snapshot write
+                filters_df = update_filter_shards(spark, seen, None, num_shards=num_shards)
     if bucketed_seen:
         # Reuse a valid existing table instead of drop-and-rewrite (VERDICT
         # r3 #5: at 10^10 seen rows a rebuild is a full-corpus rewrite just
@@ -754,14 +752,11 @@ def run_crawl(
         seen_tbl = seen_mod.reuse_or_create_seen_bucketed(
             spark,
             os.path.join(out_dir, "seen_table"),
-            df=resumed_seen,
+            df=seen if start_round > 0 else None,
             expected_rows=n_seen if start_round > 0 else 0,
         )
         seen = spark.table(seen_tbl)
 
-    fetch_target = documents.select(
-        "url", F.col("doc_id").alias("f_doc_id"), F.col("spans").alias("f_spans")
-    )
     schedules: list[DataFrame] = []
     annotated_parts: list[DataFrame] = []
     # rounds whose annotated snapshot belongs to THIS run's lineage: rounds
@@ -769,21 +764,17 @@ def run_crawl(
     # round=R/annotated dir from an unrelated prior run in a reused out_dir
     # (e.g. its frontier snapshots were wiped so the crawl restarted fresh)
     # must NOT leak into the returned frame.
-    ann_rounds: list[int] = (
-        [r for r in range(start_round) if out_dir and _snapshot_ok(out_dir, r, "annotated")]
-        if start_round > 0
-        else []
-    )
+    ann_rounds: list[int] = [
+        r for r in range(start_round) if _snapshot_ok(out_dir, r, "annotated")
+    ]
     lineage: list[RoundMetrics] = []
 
     for rnd in range(start_round, rounds):
         shuffle_before = shuffle_totals(spark)
-        # N2: tiered prefilter served from the sharded filters table and
-        # probed where it lives, never rebuilt from the seen set
-        probe_filters = filters_df if use_bloom and n_seen > 0 else None
-        new_candidates = seen_mod.filter_new(
-            spark, frontier, seen, probe_filters, num_shards=num_shards
-        )
+        # N2: the exact anti-join against seen (the bucketed table: no
+        # seen-side exchange); probing the filters first only adds a shuffle
+        # and a pandas pass, since the join still reads every candidate
+        new_candidates = seen_mod.filter_new(spark, frontier, seen)
 
         # candidate count observed upstream: fills when the ranked
         # checkpoint (the one action consuming this plan) executes
@@ -805,7 +796,7 @@ def run_crawl(
             F.sum(F.when(F.col("scheduled"), 1).otherwise(0)).alias("selected"),
         )
         # THE round materialization: selected/carryover/schedule/seen are all
-        # cheap filters over this one in-memory frame (action 1 of 3)
+        # cheap filters over this one in-memory frame
         ranked = ranked.localCheckpoint(eager=True)
         n_candidates = _obs_int(obs_cand, "candidates", new_candidates)
         n_selected = _obs_int(
@@ -817,18 +808,18 @@ def run_crawl(
             "eligible", "scheduled", "rnk", "round"
         )
 
-        obs_fetch = Observation(f"fetch_r{rnd}")
-        fetched = selected.join(fetch_target, "url", "inner").observe(
-            obs_fetch, F.count(F.lit(1)).alias("fetched")
-        )
-
+        pages = documents
         if annotate and n_selected:
             from warc_metadata_sidecar_spark.operators.sidecar import sidecar_rows
 
-            docs_for_round = documents.join(
-                selected.select("url").distinct(), "url", "left_semi"
-            )
-            ann = sidecar_rows(docs_for_round, media)
+            # fetch once: the round's fetched documents are checkpointed, and
+            # the annotation (whose extractor reads its input three times)
+            # and the fetch join below both scan that checkpoint instead of
+            # re-joining `documents` with the selected urls
+            pages = documents.join(
+                selected.select("url"), "url", "left_semi"
+            ).localCheckpoint(eager=True)
+            ann = sidecar_rows(pages, media)
             if out_dir is not None:
                 # VERDICT r4 #3: checkpoint annotated rows per round like the
                 # other round outputs — the returned frame is ONE parquet
@@ -842,6 +833,15 @@ def run_crawl(
                 ann_rounds.append(rnd)
             else:
                 annotated_parts.append(ann)
+
+        obs_fetch = Observation(f"fetch_r{rnd}")
+        fetched = selected.join(
+            pages.select(
+                "url", F.col("doc_id").alias("f_doc_id"), F.col("spans").alias("f_spans")
+            ),
+            "url",
+            "inner",
+        ).observe(obs_fetch, F.count(F.lit(1)).alias("fetched"))
 
         if link_fn is not None or discovery == "hrefs":
             # real discovery consumes the SAME fetched plan (the fetch
@@ -883,7 +883,7 @@ def run_crawl(
         # N7: keep the frontier partitioned on the salted url-hash key so the
         # next round's dedup groupBy reuses the partitioning; carryover rows
         # (budget overflow + crawl-delay-gated hosts) re-enter the queue
-        # (action 2 of 3 — fills the fetch/link observations upstream of it)
+        # (fills the fetch/link observations upstream of it)
         frontier = (
             new_frontier.unionByName(
                 carryover.withColumn("parent_url", F.lit(None).cast("string")),
@@ -896,23 +896,21 @@ def run_crawl(
         n_links = _obs_int(obs_links, "new_links", new_frontier)
 
         # N2 incremental: fold ONLY this round's newly scheduled keys into
-        # the sharded filter states (action 3 of 3; O(delta + shards))
-        if use_bloom and n_selected:
+        # the sharded filter states (O(delta + touched states)); the
+        # snapshot write below is the job that computes it
+        if use_bloom and out_dir is not None and n_selected:
             filters_df = update_filter_shards(
                 spark,
                 selected.select("canonical_url"),
                 filters_df,
                 num_shards=num_shards,
-            ).localCheckpoint(eager=True)
+            )
 
-        mx, mn = _skew_stats(frontier) if skew_stats else (0, 0)
+        part_rows = _partition_rows(frontier) if skew_stats or out_dir else []
+        counts = [n for _, n in part_rows] if skew_stats else [0]
         shuffle_after = shuffle_totals(spark)
-        sr, sw = (
-            (shuffle_after[0] - shuffle_before[0], shuffle_after[1] - shuffle_before[1])
-            if shuffle_before is not None and shuffle_after is not None
-            else (-1, -1)
-        )
-        if sr < 0 or sw < 0:  # stage eviction between samples: unmeasured
+        sr, sw = (a - b for a, b in zip(shuffle_after, shuffle_before))
+        if sr < 0 or sw < 0:  # executor totals shrank between samples
             sr, sw = -1, -1
         lineage.append(
             RoundMetrics(
@@ -922,8 +920,8 @@ def run_crawl(
                 fetched=n_fetched,
                 new_links=n_links,
                 seen_after=n_seen,
-                max_partition_rows=mx,
-                min_partition_rows=mn,
+                max_partition_rows=max(counts, default=0),
+                min_partition_rows=min(counts, default=0),
                 shuffle_read_bytes=sr,
                 shuffle_write_bytes=sw,
             )
@@ -943,15 +941,20 @@ def run_crawl(
                 seen.write.mode("overwrite").parquet(_ckpt_dir(out_dir, rnd, "seen"))
             selected.write.mode("overwrite").parquet(_ckpt_dir(out_dir, rnd, "schedule"))
             if filters_df is not None:
-                filters_df.write.mode("overwrite").parquet(
-                    _ckpt_dir(out_dir, rnd, "filters")
+                # written once, then read back: the next round folds into
+                # the snapshot instead of recomputing its plan
+                filters_df = seen_mod.write_filters(
+                    spark, filters_df, _ckpt_dir(out_dir, rnd, "filters")
                 )
-            lineage_df = spark.createDataFrame([vars(m) for m in lineage[-1:]])
-            lineage_df.write.mode("append").parquet(os.path.join(out_dir, "lineage"))
-            # N6: per-partition lineage of the checkpointed frontier
-            _partition_rows(frontier).withColumn("round", F.lit(rnd)).write.mode(
-                "append"
-            ).parquet(os.path.join(out_dir, "partition_lineage"))
+            # N6: the round's lineage row and the per-partition lineage of
+            # the checkpointed frontier, written from the driver
+            row = vars(lineage[-1])
+            _write_rows(out_dir, "lineage", rnd, [row], dict.fromkeys(row, "int64"))
+            _write_rows(
+                out_dir, "partition_lineage", rnd,
+                [{"partition": p, "rows": n, "round": rnd} for p, n in part_rows],
+                {"partition": "int32", "rows": "int64", "round": "int32"},
+            )
 
     if schedules:
         schedule = schedules[0]

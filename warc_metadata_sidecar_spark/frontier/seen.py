@@ -1,29 +1,43 @@
 """N2: URL-seen membership at 10^10 scale.
 
 Design (SURVEY.md §2b N2): probabilistic filters are a PREFILTER, never the
-source of truth — Bloom false positives must not drop URLs. The flow is:
+source of truth — Bloom false positives must not drop URLs. The crawl
+round's URL-seen step is the exact anti-join alone:
 
-    candidates --filter("definitely new")--> pass through
-               --filter("maybe seen")-----> exact left_anti join vs seen
+    candidates --left_anti on key--> seen (hash-bucketed table: no
+                                          seen-side exchange)
 
-so the anti-join only carries rows the filter could not clear (true dups +
-false positives, a small fraction of the frontier at 10^10 scale with an
-appropriately sized filter). Exactness is restored by the anti-join;
-equality with the plain anti-join is asserted in tests.
+Given the sharded filters, `filter_new` also probes them:
 
-The filter is a bloom+cuckoo tier per url-hash shard, stored as a `filters`
-table with one binary state row per shard. The states are built, updated
-and probed on executors: `update_filter_shards` folds each round's new keys
-into their shard's state, and `filter_new` routes candidates to their shard
-so the task owning it deserializes that one state and probes its rows.
+    candidates --route by url-hash shard--> probe that shard's filter state
+               --> _maybe flag (one vectorized pass per shard)
+               --> left_anti vs seen ON key = seen key AND _maybe
+
+Every candidate still enters the anti-join and is looked up there, so the
+probe removes no rows or lookups from it; the join drops a row only on an
+exact key match, and its rows equal the plain anti-join's (asserted in
+tests). Keeping the definitely-new rows out of the join would take a
+second pandas pass (one per union branch) or a materialized probe. The
+round does not probe: with the one-pass probe it lost 7 of 10 interleaved
+e2ebench crawl pairs on latency (ROADMAP direction 3).
+
+The filter is one layered Bloom filter per url-hash shard (`SeenFilter`),
+stored as a `filters` table with one binary state row per shard. The
+states are built, updated and probed on executors: `update_filter_shards`
+folds each round's new keys into their shard's state, and `filter_new`
+routes candidates to their shard so the task owning it deserializes that
+one state and probes its rows. Bit positions come from `xxhash64` computed
+on the JVM, so the Python side is numpy gathers over whole Arrow batches.
 Neither keys nor states pass through the driver.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 import struct
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -31,130 +45,120 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-DEFAULT_BITS = 1 << 22  # 4 Mi bits ~ 0.5 MiB; sized for sandbox scales
-DEFAULT_HASHES = 5
 DEFAULT_SHARDS = 32  # url-hash shards of the `filters` table
+FIRST_HASHES = 7  # layer 0: 7 hashes at ~10 bits per key, ~0.8 % false positives
+MIN_LAYER_KEYS = 64  # smallest layer capacity
+SLICE = 1 << 20  # hashes per vectorized step
+FILTERS_MARKER = "_LBF1"  # marks a filters snapshot of SeenFilter states
 
 
-def _indexes(url: str, num_bits: int, num_hashes: int) -> list[int]:
-    """k deterministic bit positions via double hashing over md5 halves."""
-    d = hashlib.md5(url.encode()).digest()
-    h1 = int.from_bytes(d[:8], "big")
-    h2 = int.from_bytes(d[8:], "big") | 1
-    return [((h1 + i * h2) % (1 << 64)) % num_bits for i in range(num_hashes)]
+def hash_expr(key_col):
+    """64-bit key hash the filter's bit positions derive from (JVM side)."""
+    return F.xxhash64(key_col)
 
 
-class Bloom:
-    def __init__(self, bits: np.ndarray, num_hashes: int = DEFAULT_HASHES):
-        self.bits = bits  # uint8 array, len = num_bits // 8
-        self.num_bits = len(bits) * 8
-        self.num_hashes = num_hashes
+def _positions(h: np.ndarray, k: int, nbits: int) -> np.ndarray:
+    """k bit positions per hash, (k, n): double hashing over the two 32-bit
+    halves of the 64-bit hash (Kirsch–Mitzenmacher)."""
+    h1, h2 = h & np.uint64(0xFFFFFFFF), h >> np.uint64(32)
+    i = np.arange(k, dtype=np.uint64)[:, None]
+    return ((h1 + i * h2) % np.uint64(nbits)).astype(np.int64)
+
+
+def _slices(h: np.ndarray):
+    """`h` in fixed-size slices, so the (k, n) position arrays stay bounded
+    when a whole shard's keys arrive at once (a rebuild from seen)."""
+    return (h[i : i + SLICE] for i in range(0, len(h), SLICE))
+
+
+class SeenFilter:
+    """Layered ("scalable") Bloom filter over 64-bit key hashes (north rule
+    N2), sized to the keys it holds.
+
+    Keys fill the newest layer up to its capacity; the next layer is sized
+    to at least the total capacity so far (capacities double) and uses one
+    more hash than the one before, so its false-positive rate halves and
+    the filter's total stays under twice layer 0's (~1.6 %) at any size.
+    A shard that holds 50 keys carries a ~100-byte state. Lookups test
+    every layer; exactness still comes from the anti-join."""
+
+    _MAGIC = b"LBF1"
+
+    def __init__(self) -> None:
+        # per layer, oldest first: [capacity, keys added, hashes, bitmap]
+        self.layers: list[list] = []
+
+    @property
+    def adds(self) -> int:
+        return sum(layer[1] for layer in self.layers)
+
+    def add(self, hashes) -> None:
+        # sorted, so the state does not depend on the order rows arrive in
+        h = np.sort(np.asarray(hashes, dtype=np.int64).view(np.uint64))
+        while len(h):
+            if not self.layers or self.layers[-1][1] >= self.layers[-1][0]:
+                cap = max(MIN_LAYER_KEYS, sum(layer[0] for layer in self.layers), len(h))
+                k = FIRST_HASHES + len(self.layers)
+                nbytes = -(-math.ceil(cap * k / math.log(2)) // 8)
+                self.layers.append([cap, 0, k, np.zeros(nbytes, dtype=np.uint8)])
+            layer = self.layers[-1]
+            cap, count, k, bits = layer
+            take, h = h[: cap - count], h[cap - count :]
+            for part in _slices(take):
+                pos = _positions(part, k, len(bits) * 8).ravel()
+                np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+            layer[1] += len(take)
+
+    def might_contain(self, hashes) -> np.ndarray:
+        h = np.asarray(hashes, dtype=np.int64).view(np.uint64)
+        out = np.zeros(len(h), dtype=bool)
+        for _, _, k, bits in self.layers:
+            for i, part in enumerate(_slices(h)):
+                pos = _positions(part, k, len(bits) * 8)
+                out[i * SLICE : i * SLICE + len(part)] |= (
+                    (bits[pos >> 3] >> (pos & 7)) & 1
+                ).all(axis=0)
+        return out
+
+    def to_bytes(self) -> bytes:
+        """Deterministic state: magic + per-layer header + zlib(bitmaps)."""
+        header = self._MAGIC + struct.pack("<I", len(self.layers)) + b"".join(
+            struct.pack("<QQIQ", cap, count, k, len(bits))
+            for cap, count, k, bits in self.layers
+        )
+        return header + zlib.compress(b"".join(layer[3].tobytes() for layer in self.layers), 1)
 
     @classmethod
-    def empty(cls, num_bits: int = DEFAULT_BITS, num_hashes: int = DEFAULT_HASHES) -> "Bloom":
-        return cls(np.zeros(num_bits // 8, dtype=np.uint8), num_hashes)
-
-    def add(self, url: str) -> None:
-        for ix in _indexes(url, self.num_bits, self.num_hashes):
-            self.bits[ix >> 3] |= 1 << (ix & 7)
-
-    def might_contain(self, url: str) -> bool:
-        return all(
-            self.bits[ix >> 3] & (1 << (ix & 7))
-            for ix in _indexes(url, self.num_bits, self.num_hashes)
-        )
-
-
-class CuckooFilter:
-    """Overflow tier for the URL-seen prefilter (north rule N2).
-
-    When the Bloom bitmap's fill ratio passes ~50% its false-positive rate
-    decays sharply; new keys then go into this cuckoo filter instead, which
-    stores 16-bit fingerprints in 4-slot buckets with the classic
-    two-choice + eviction insert. Deterministic (md5-derived fingerprints
-    and bucket choices), fixed memory, supports might_contain like Bloom.
-    Lookups consult BOTH tiers; exactness still comes from the anti-join.
-    """
-
-    def __init__(self, num_buckets: int = 1 << 16, slots: int = 4, max_kicks: int = 200):
-        self.num_buckets = num_buckets
-        self.slots = slots
-        self.max_kicks = max_kicks
-        self.table = np.zeros((num_buckets, slots), dtype=np.uint16)
-        self.overflowed: set[int] = set()  # stash for keys evicted past max_kicks
-
-    def _fp_and_buckets(self, url: str) -> tuple[int, int, int]:
-        d = hashlib.md5(url.encode()).digest()
-        fp = (int.from_bytes(d[:2], "big") % 65535) + 1  # never 0 (0 = empty)
-        b1 = int.from_bytes(d[2:10], "big") % self.num_buckets
-        b2 = (b1 ^ (fp * 0x5BD1E995)) % self.num_buckets
-        return fp, b1, b2
-
-    def add(self, url: str) -> None:
-        fp, b1, b2 = self._fp_and_buckets(url)
-        for b in (b1, b2):
-            row = self.table[b]
-            for s in range(self.slots):
-                if row[s] == 0 or row[s] == fp:
-                    row[s] = fp
-                    return
-        # evict deterministically: rotate slot 0 of b1
-        b, cur = b1, fp
-        for kick in range(self.max_kicks):
-            row = self.table[b]
-            s = kick % self.slots
-            cur, row[s] = int(row[s]), cur
-            b = (b ^ (cur * 0x5BD1E995)) % self.num_buckets
-            row = self.table[b]
-            for s2 in range(self.slots):
-                if row[s2] == 0:
-                    row[s2] = cur
-                    return
-        self.overflowed.add(cur)
-
-    def might_contain(self, url: str) -> bool:
-        fp, b1, b2 = self._fp_and_buckets(url)
-        return (
-            fp in self.table[b1]
-            or fp in self.table[b2]
-            or fp in self.overflowed
-        )
-
-
-class TieredSeenFilter:
-    """Bloom primary + cuckoo overflow (north rule N2). Adds go to the bloom
-    until its fill ratio crosses `spill_at`, then to the cuckoo tier."""
-
-    def __init__(self, num_bits: int = DEFAULT_BITS, spill_at: float = 0.5):
-        self.bloom = Bloom.empty(num_bits)
-        self.cuckoo = CuckooFilter()
-        self.spill_at = spill_at
-        self._adds = 0
-        # fill ratio estimated from adds (k hashes per add) — cheap and
-        # deterministic, no popcount per insert
-        self._spill_after = int(num_bits * spill_at / DEFAULT_HASHES)
-
-    def add(self, url: str) -> None:
-        if self._adds < self._spill_after:
-            self.bloom.add(url)
-        else:
-            self.cuckoo.add(url)
-        self._adds += 1
-
-    def might_contain(self, url: str) -> bool:
-        return self.bloom.might_contain(url) or self.cuckoo.might_contain(url)
+    def from_bytes(cls, data: bytes) -> "SeenFilter":
+        """The filter serialized by to_bytes. Any other state (the older
+        bloom+cuckoo TSF1/TSFZ layout among them) is refused, never read
+        as an empty filter: rebuild such filters from seen."""
+        if data[:4] != cls._MAGIC:
+            raise ValueError(
+                f"not a layered Bloom filter state ({data[:4]!r}): rebuild the filters from seen"
+            )
+        (n,) = struct.unpack("<I", data[4:8])
+        heads = [struct.unpack("<QQIQ", data[8 + 28 * i : 36 + 28 * i]) for i in range(n)]
+        body = zlib.decompress(data[8 + 28 * n :])
+        f, off = cls(), 0
+        for cap, count, k, nbytes in heads:
+            bits = np.frombuffer(body, dtype=np.uint8, count=nbytes, offset=off).copy()
+            f.layers.append([cap, count, k, bits])
+            off += nbytes
+        return f
 
 
 # ---------------------------------------------------------------------------
 # Sharded `filters` table (N2 at scale)
 #
-# The tiered filter is built and UPDATED entirely on executors: keys are
-# shuffled to their url-hash shard, each shard's owning task folds the new
-# keys into that shard's (deserialized) filter state, and the states persist
-# as one binary row per shard in a `filters` table. Per-round update cost is
-# O(|delta| + num_shards * state_size) — independent of |seen|, which is the
-# property that makes 10^10 URLs feasible. Lookups probe the states where
-# they live (filter_new), so neither keys nor states cross the driver.
+# The filter is built and UPDATED entirely on executors: keys are shuffled
+# to their url-hash shard, each shard's owning task folds the new keys into
+# that shard's (deserialized) filter state, and the states persist as one
+# binary row per shard in a `filters` table. Per-round update cost is
+# O(|delta| + state of the touched shards) — independent of |seen| beyond
+# the state's own size, which is what makes 10^10 URLs feasible. Lookups
+# probe the states where they live (filter_new), so neither keys nor states
+# cross the driver.
 # ---------------------------------------------------------------------------
 
 FILTERS_SCHEMA = T.StructType(
@@ -164,64 +168,6 @@ FILTERS_SCHEMA = T.StructType(
         T.StructField("adds", T.LongType()),
     ]
 )
-
-_MAGIC = b"TSF1"
-_MAGIC_Z = b"TSFZ"  # zlib-compressed body (r3): sparse states are ~KB
-
-
-def serialize_tiered(t: TieredSeenFilter) -> bytes:
-    """Compact deterministic state: header + zlib(bloom bitmap + cuckoo
-    table + sorted overflow fingerprints). The bitmaps are zero-dominated
-    until near capacity, so compression turns the per-round state shuffle /
-    checkpoint from num_shards x 0.64 MB into a few KB per shard (it decays
-    gracefully to ~raw size as the filter fills)."""
-    import zlib
-
-    ov = np.array(sorted(t.cuckoo.overflowed), dtype=np.uint16)
-    header = _MAGIC_Z + struct.pack(
-        "<QQQQQQQ",
-        t.bloom.num_bits,
-        t.bloom.num_hashes,
-        t._adds,
-        t._spill_after,
-        t.cuckoo.num_buckets,
-        t.cuckoo.slots,
-        len(ov),
-    )
-    body = t.bloom.bits.tobytes() + t.cuckoo.table.tobytes() + ov.tobytes()
-    return header + zlib.compress(body, 1)
-
-
-def deserialize_tiered(data: bytes) -> TieredSeenFilter:
-    assert data[:4] in (_MAGIC, _MAGIC_Z), "bad filter state"
-    num_bits, num_hashes, adds, spill_after, n_buckets, slots, n_ov = struct.unpack(
-        "<QQQQQQQ", data[4:60]
-    )
-    if data[:4] == _MAGIC_Z:
-        import zlib
-
-        data = data[:60] + zlib.decompress(data[60:])
-    t = TieredSeenFilter(num_bits=int(num_bits))
-    t._adds = int(adds)
-    t._spill_after = int(spill_after)
-    off = 60
-    blen = int(num_bits) // 8
-    t.bloom = Bloom(
-        np.frombuffer(data[off : off + blen], dtype=np.uint8).copy(), int(num_hashes)
-    )
-    off += blen
-    clen = int(n_buckets) * int(slots) * 2
-    t.cuckoo = CuckooFilter(num_buckets=int(n_buckets), slots=int(slots))
-    t.cuckoo.table = (
-        np.frombuffer(data[off : off + clen], dtype=np.uint16)
-        .copy()
-        .reshape(int(n_buckets), int(slots))
-    )
-    off += clen
-    t.cuckoo.overflowed = set(
-        int(x) for x in np.frombuffer(data[off : off + int(n_ov) * 2], dtype=np.uint16)
-    )
-    return t
 
 
 def _shard_of(url: str, num_shards: int) -> int:
@@ -244,30 +190,26 @@ def update_filter_shards(
     existing: DataFrame | None = None,
     key: str = "canonical_url",
     num_shards: int = DEFAULT_SHARDS,
-    num_bits: int = DEFAULT_BITS,
 ) -> DataFrame:
     """Fold `delta`'s keys into the sharded filter states — executor-side.
 
-    cogroup(delta keys, existing states) by shard: each task deserializes
-    its shard's state (or starts fresh), adds the new keys, re-serializes.
-    Shards untouched by the delta pass through unchanged. Returns the new
-    `filters` DataFrame (shard, state, adds)."""
-    keys = (
-        delta.select(F.col(key).alias("k"))
-        .filter(F.col("k").isNotNull())
-        .withColumn("shard", shard_expr(F.col("k"), num_shards))
+    cogroup(delta key hashes, existing states) by shard: each task
+    deserializes its shard's state (or starts an empty one), adds the new
+    keys, re-serializes. Shards untouched by the delta pass through
+    unchanged. A legacy TSF1/TSFZ state cannot take new keys and raises:
+    rebuild those filters from seen (run_crawl does on resume). Returns the
+    new `filters` DataFrame (shard, state, adds)."""
+    keys = delta.filter(F.col(key).isNotNull()).select(
+        shard_expr(F.col(key), num_shards).alias("shard"), hash_expr(F.col(key)).alias("h")
     )
 
     def merge(key_tuple: tuple, new_keys: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key_tuple[0])
-        if len(state):
-            t = deserialize_tiered(bytes(state["state"].iloc[0]))
-        else:
-            t = TieredSeenFilter(num_bits=num_bits)
-        for u in new_keys["k"]:
-            t.add(u)
+        if not len(new_keys):
+            return state
+        f = SeenFilter.from_bytes(bytes(state["state"].iloc[0])) if len(state) else SeenFilter()
+        f.add(new_keys["h"].to_numpy())
         return pd.DataFrame(
-            [{"shard": shard, "state": serialize_tiered(t), "adds": t._adds}]
+            {"shard": [int(key_tuple[0])], "state": [f.to_bytes()], "adds": [f.adds]}
         )
 
     if existing is None:
@@ -287,6 +229,25 @@ def update_filter_shards(
     )
 
 
+def write_filters(spark: SparkSession, filters: DataFrame, path: str) -> DataFrame:
+    """Snapshot `filters` as parquet at `path` (a local directory) and
+    return the snapshot read back, so later rounds fold into the files
+    instead of recomputing the plan. A marker file beside `_SUCCESS` (Spark
+    readers skip `_` files) records that the states are SeenFilter states."""
+    filters.write.mode("overwrite").parquet(path)
+    open(os.path.join(path, FILTERS_MARKER), "w").close()
+    return read_filters(spark, path)
+
+
+def read_filters(spark: SparkSession, path: str) -> DataFrame | None:
+    """The filters snapshot at `path`, or None when there is none or it was
+    written before the marker (older bloom+cuckoo states): the caller then
+    rebuilds the filters from seen."""
+    if not os.path.exists(os.path.join(path, FILTERS_MARKER)):
+        return None
+    return spark.read.schema(FILTERS_SCHEMA).parquet(path)
+
+
 def load_sharded(filters: DataFrame, num_shards: int = DEFAULT_SHARDS) -> DataFrame:
     """Return `filters` unchanged. Kept because the e2ebench crawl trace
     calls it by name and passes its result positionally to filter_new."""
@@ -297,12 +258,12 @@ def load_sharded(filters: DataFrame, num_shards: int = DEFAULT_SHARDS) -> DataFr
 # Bucketed `seen` table (VERDICT r2 #1 — the 100 TB layout for the exact
 # anti-join backstop)
 #
-# The prefilter already shrinks the LEFT side of the anti-join to the
-# maybe-seen rows, but a plain-parquet `seen` re-SHUFFLES the full seen set
-# every round: O(rounds x |seen|) shuffle bytes. Stored hash-bucketed by the
-# url key (Spark bucketed table here; Iceberg bucket(canonical_url) in
-# production), the seen side of the left_anti co-locates with ZERO exchange —
-# per-round shuffle bytes are O(|maybe-seen|), independent of |seen|; the
+# A plain-parquet `seen` re-SHUFFLES the full seen set every round of a
+# sort-merge anti-join: O(rounds x |seen|) shuffle bytes. Stored
+# hash-bucketed by the url key (Spark bucketed table here; Iceberg
+# bucket(canonical_url) in production), the seen side of the left_anti
+# co-locates with ZERO exchange — per-round shuffle bytes are
+# O(|candidates|), independent of |seen|; the
 # remaining per-round cost is a sequential key-column scan (the classic
 # Mercator batch URL-seen merge). Appends are O(delta): each round adds one
 # file set per touched bucket.
@@ -401,41 +362,37 @@ def filter_new(
 
     `filters` is the sharded (shard, state, adds) table from
     update_filter_shards, built with the same `num_shards`. Candidates route
-    to their url-hash shard and the task owning each shard deserializes its
-    state once to probe them; only maybe-seen rows take the anti-join, rows
-    the filter proves new bypass it. Without `filters`, plain left_anti:
-    the correctness baseline the filtered path must equal (pinned by tests
-    and the url_seen_* oracles).
+    to their url-hash shard with their JVM-computed key hash, and the task
+    owning each shard deserializes its state once to flag them `_maybe` in
+    one vectorized probe. One left_anti then matches seen keys only where
+    `_maybe` holds. Every candidate enters that join, so its rows equal the
+    plain anti-join's and the probe saves the join no work. A state not
+    written by SeenFilter (the older TSF1/TSFZ layout) raises. Without
+    `filters`, plain left_anti: what run_crawl's rounds use, and the
+    baseline the filtered path must equal (pinned by tests and the
+    url_seen_* oracles).
     """
     if filters is None:
         return candidates.join(seen.select(key), key, "left_anti")
 
-    tagged = candidates.withColumn("_shard", shard_expr(F.col(key), num_shards))
+    tagged = candidates.withColumns(
+        {"_shard": shard_expr(F.col(key), num_shards), "_h": hash_expr(F.col(key))}
+    )
     out_schema = T.StructType(
-        list(tagged.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
+        list(candidates.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
     )
 
     def probe(key_tuple: tuple, cand: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
-        out = cand.copy()
-        if not len(cand):
-            out["_maybe"] = pd.Series(dtype="bool")
-            return out
-        if len(state):
-            t = deserialize_tiered(bytes(state["state"].iloc[0]))
-            out["_maybe"] = cand[key].map(
-                lambda u: bool(u is not None and t.might_contain(u))
-            )
-        else:
-            out["_maybe"] = False
-        return out
+        f = SeenFilter.from_bytes(bytes(state["state"].iloc[0])) if len(state) else SeenFilter()
+        maybe = f.might_contain(cand.pop("_h").to_numpy())
+        return cand.drop(columns="_shard").assign(_maybe=maybe)
 
     flagged = (
         tagged.groupBy("_shard")
         .cogroup(filters.groupBy("shard"))
         .applyInPandas(probe, out_schema)
-        .drop("_shard")
     )
-    definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    needs_check = flagged.filter(F.col("_maybe")).drop("_maybe")
-    confirmed_new = needs_check.join(seen.select(key), key, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
+    seen_keys = seen.select(F.col(key).alias("_seen_key"))
+    return flagged.join(
+        seen_keys, (F.col(key) == F.col("_seen_key")) & F.col("_maybe"), "left_anti"
+    ).drop("_maybe")
