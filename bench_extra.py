@@ -10,7 +10,7 @@ Usage:
   python bench_extra.py time  <query> [query...]   # noop-sink wall, 3 reps
   python bench_extra.py plan  <query> <suffix>     # write plans/r08/<q>_<suffix>.txt
   python bench_extra.py sweep                      # noop-sink wall for all bench queries
-  python bench_extra.py rounds [R] [seed]          # wall + Spark jobs per resumed crawl round
+  python bench_extra.py rounds [R] [seed]          # wall, Spark jobs, py4j commands per crawl round
 """
 
 from __future__ import annotations
@@ -33,11 +33,45 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+class Py4jTally:
+    """Counts the py4j commands the driver sends while active, and the
+    seconds spent in those shorter than `short_s`: plan construction and
+    analysis are many short round trips, job runs are few long ones."""
+
+    def __init__(self, short_s: float = 0.02):
+        self.short_s = short_s
+        self.commands = 0
+        self.short_total_s = 0.0
+
+    def __enter__(self) -> "Py4jTally":
+        from py4j.clientserver import ClientServerConnection
+
+        self._cls, self._orig = ClientServerConnection, ClientServerConnection.send_command
+        orig = self._orig
+
+        def send_command(conn, command):
+            t0 = time.perf_counter()
+            try:
+                return orig(conn, command)
+            finally:
+                dt = time.perf_counter() - t0
+                self.commands += 1
+                if dt < self.short_s:
+                    self.short_total_s += dt
+
+        self._cls.send_command = send_command
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._cls.send_command = self._orig
+
+
 def rounds(n_rounds: int = 3, seed: int = 1) -> None:
     """A resumable crawl at the e2ebench crawl sizes (10k documents, 400
     seeds, local[2], 1 GB heap, annotate + bucketed seen + out_dir), one
     run_crawl call per round as the benchmark drives it. Prints each
-    round's wall and the number of Spark jobs in its job group."""
+    round's wall, the number of Spark jobs in its job group, the py4j
+    commands it sent and the seconds spent in those under 20 ms."""
     import random
     import shutil
     import tempfile
@@ -72,14 +106,16 @@ def rounds(n_rounds: int = 3, seed: int = 1) -> None:
             group = f"rounds.r{r}"
             spark.sparkContext.setJobGroup(group, group)
             t0 = time.perf_counter()
-            m = run_crawl(
-                spark, docs, seeds, robots, rounds=r + 1, universe=2 * n_docs,
-                default_budget=2, out_dir=os.path.join(work, "crawl"),
-                annotate=True, bucketed_seen=True,
-            ).lineage[-1]
+            with Py4jTally() as tally:
+                m = run_crawl(
+                    spark, docs, seeds, robots, rounds=r + 1, universe=2 * n_docs,
+                    default_budget=2, out_dir=os.path.join(work, "crawl"),
+                    annotate=True, bucketed_seen=True,
+                ).lineage[-1]
             wall = time.perf_counter() - t0
             print(
                 f"round={r} wall_s={wall:.2f} jobs={len(tracker.getJobIdsForGroup(group))} "
+                f"py4j={tally.commands} short_s={tally.short_total_s:.2f} "
                 f"selected={m.selected} seen_after={m.seen_after}",
                 flush=True,
             )

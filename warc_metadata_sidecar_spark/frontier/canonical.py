@@ -20,6 +20,7 @@ from warc_metadata_sidecar_spark.functions.surt import (
     py_surt,
     with_surt,
 )
+from warc_metadata_sidecar_spark.session import per_context
 
 NUM_SALTS = 64
 
@@ -46,15 +47,20 @@ def canonicalize(frontier: DataFrame, num_salts: int = NUM_SALTS) -> DataFrame:
     """
     # staged SURT (with_surt): intermediates evaluate once per row instead
     # of once per downstream reference — ~2x on the loop's canonicalization
-    out = with_surt(frontier, "url", "canonical_url")
-    return (
-        out.withColumn("host", host_col(F.col("url")))
-        .withColumn(
-            "host_salt",
-            F.pmod(F.xxhash64(F.col("canonical_url")), F.lit(num_salts)).cast("int"),
-        )
-        .withColumn("priority", priority_col(F.col("canonical_url")))
-    )
+    host, keys = _key_cols(num_salts)
+    return with_surt(frontier, "url", "canonical_url").withColumn("host", host).withColumns(keys)
+
+
+@per_context
+def _key_cols(num_salts: int) -> tuple[Column, dict[str, Column]]:
+    """canonicalize's host column, then its salt and priority columns, built
+    once per Spark context. Host is projected on its own, so the optimizer
+    computes it next to canonical_url as before; the salt and priority read
+    only canonical_url and share one projection."""
+    return host_col(F.col("url")), {
+        "host_salt": F.pmod(F.xxhash64(F.col("canonical_url")), F.lit(num_salts)).cast("int"),
+        "priority": priority_col(F.col("canonical_url")),
+    }
 
 
 def py_canonicalize(url: str) -> tuple[str, str, float]:

@@ -19,7 +19,8 @@ that run anyway, so a round issues a fixed handful of driver actions —
      and partition lineage), plus the snapshot writes.
 Under AQE every shuffle stage is a Spark job of its own, so the e2ebench
 crawl's resumed round (10k documents, 400 seeds, annotate, bucketed seen)
-runs 32 Spark jobs (round 0: 29); `bench_extra.py rounds` prints the
+runs 30 Spark jobs (round 0: 28); snapshots are read with their schemas,
+so no read runs a schema-inference job. `bench_extra.py rounds` prints the
 count per round and tests/test_frontier.py pins a budget. `seen` is never
 separately materialized: it is the bucketed table or a lazy union of
 filters over the per-round checkpointed ranked frames.
@@ -52,10 +53,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from warc_metadata_sidecar_spark import schema
 from warc_metadata_sidecar_spark.frontier.canonical import canonicalize
 from warc_metadata_sidecar_spark.frontier.scheduler import DEFAULT_BUDGET, rank_round
 from warc_metadata_sidecar_spark.frontier.seen import DEFAULT_SHARDS, update_filter_shards
 from warc_metadata_sidecar_spark.frontier import seen as seen_mod
+from warc_metadata_sidecar_spark.session import per_context
 
 # deterministic link model: page p links to (p*31+17)%N, (p*57+5)%N,
 # (p*91+1)%N in the same 50-host universe (simulator twin in simulator.py)
@@ -459,6 +462,12 @@ def extract_anchor_texts(
 
 def extract_links(fetched: DataFrame, universe: int) -> DataFrame:
     """Discovered URLs from fetched pages — native expressions only."""
+    pages, links = _link_cols(universe)
+    return fetched.select(*pages).select(*links)
+
+
+@per_context
+def _link_cols(universe: int) -> tuple[tuple, tuple]:
     page = F.regexp_extract(F.col("url"), r"/page/(\d+)$", 1).cast("long")
     links = F.array(
         *[
@@ -466,15 +475,40 @@ def extract_links(fetched: DataFrame, universe: int) -> DataFrame:
             for m, a in zip(LINK_MULTS, LINK_ADDS)
         ]
     )
-    return (
-        fetched.select(F.col("url").alias("parent_url"), F.explode(links).alias("p"))
-        .select(
-            F.format_string(
-                "https://host%02d.example.com/page/%d", (F.col("p") % 50).cast("int"), F.col("p")
-            ).alias("url"),
-            "parent_url",
-        )
+    return (F.col("url").alias("parent_url"), F.explode(links).alias("p")), (
+        F.format_string(
+            "https://host%02d.example.com/page/%d", (F.col("p") % 50).cast("int"), F.col("p")
+        ).alias("url"),
+        F.col("parent_url"),
     )
+
+
+@per_context
+def _round_cols() -> dict:
+    """run_crawl's per-round columns that do not change between rounds,
+    built once per Spark context."""
+    count = F.count(F.lit(1))
+    return {
+        "candidates": count.alias("candidates"),
+        "selected": F.sum(F.when(F.col("scheduled"), 1).otherwise(0)).alias("selected"),
+        "fetched": count.alias("fetched"),
+        "new_links": count.alias("new_links"),
+        "scheduled": F.col("scheduled"),
+        "unscheduled": ~F.col("scheduled"),
+        "fetch_page": (
+            F.col("url"), F.col("doc_id").alias("f_doc_id"), F.col("spans").alias("f_spans")
+        ),
+        # the frontier columns canonicalize fills, empty on discovered links
+        "unkeyed": (
+            F.lit(None).cast("string").alias("canonical_url"),
+            F.lit(None).cast("string").alias("host"),
+            F.lit(None).cast("int").alias("host_salt"),
+            F.lit(None).cast("double").alias("priority"),
+        ),
+        "first_seq": F.lit(0).cast("long").alias("seq"),
+        "no_parent": F.lit(None).cast("string"),
+        "seen_delta": (F.col("canonical_url"), F.col("round").alias("first_round")),
+    }
 
 
 @dataclass
@@ -707,18 +741,23 @@ def run_crawl(
     filters_df: DataFrame | None = None
     seen_tbl: str | None = None
     n_seen = 0
-    frontier = canonicalize(seeds)
-    seen = spark.createDataFrame([], seen_schema)
     done = resume_round(spark, out_dir) if out_dir is not None else -1
-    if done >= 0:
+    if done < 0:
+        frontier = canonicalize(seeds)
+        seen = spark.createDataFrame([], seen_schema)
+    else:
         start_round = done + 1
-        frontier = spark.read.parquet(_ckpt_dir(out_dir, done, "frontier"))
+        # explicit schemas: inferring one runs a Spark job per read
+        frontier = spark.read.schema(schema.FRONTIER).parquet(
+            _ckpt_dir(out_dir, done, "frontier")
+        )
         # Reconstruct seen across MIXED layouts (a union-layout history
         # continued in bucketed mode writes full `seen` snapshots for
         # early rounds and O(delta) `seen_delta` for later ones): take
         # the LATEST full snapshot as the base, then every delta after
         # it — dropping either side would silently re-schedule
-        # already-crawled URLs. Counted from the parquet footers.
+        # already-crawled URLs. Counted from the parquet footers; never
+        # empty, since resume_round only returns a round with a seen chain.
         base_round = next(
             (r for r in range(done, -1, -1) if _snapshot_ok(out_dir, r, "seen")), -1
         )
@@ -728,9 +767,8 @@ def run_crawl(
             for r in range(base_round + 1, done + 1)
             if _snapshot_ok(out_dir, r, "seen_delta")
         ]
-        if paths:
-            seen = spark.read.schema(seen_schema).parquet(*paths)
-            n_seen = _parquet_rows(paths)
+        seen = spark.read.schema(seen_schema).parquet(*paths)
+        n_seen = _parquet_rows(paths)
         if use_bloom:
             # only use_bloom rounds write filters snapshots, so the latest
             # one never lacks keys of a later round
@@ -769,6 +807,7 @@ def run_crawl(
     ]
     lineage: list[RoundMetrics] = []
 
+    c = _round_cols()
     for rnd in range(start_round, rounds):
         shuffle_before = shuffle_totals(spark)
         # N2: the exact anti-join against seen (the bucketed table: no
@@ -779,9 +818,7 @@ def run_crawl(
         # candidate count observed upstream: fills when the ranked
         # checkpoint (the one action consuming this plan) executes
         obs_cand = Observation(f"cand_r{rnd}")
-        new_candidates = new_candidates.observe(
-            obs_cand, F.count(F.lit(1)).alias("candidates")
-        )
+        new_candidates = new_candidates.observe(obs_cand, c["candidates"])
         obs_rank = Observation(f"rank_r{rnd}")
         # N3 mega-host guard (VERDICT r2 #2): two-phase top-k is the default
         # — the per-host window's single task sorts <= budget*prune_salts
@@ -791,20 +828,14 @@ def run_crawl(
             new_candidates, robots, default_budget, round_no=rnd,
             prune_salts=prune_salts,
         ).withColumn("round", F.lit(rnd))
-        ranked = ranked.observe(
-            obs_rank,
-            F.sum(F.when(F.col("scheduled"), 1).otherwise(0)).alias("selected"),
-        )
+        ranked = ranked.observe(obs_rank, c["selected"])
         # THE round materialization: selected/carryover/schedule/seen are all
         # cheap filters over this one in-memory frame
         ranked = ranked.localCheckpoint(eager=True)
         n_candidates = _obs_int(obs_cand, "candidates", new_candidates)
-        n_selected = _obs_int(
-            obs_rank, "selected", ranked.filter(F.col("scheduled"))
-        )
-
-        selected = ranked.filter(F.col("scheduled")).drop("eligible", "scheduled")
-        carryover = ranked.filter(~F.col("scheduled")).drop(
+        selected = ranked.filter(c["scheduled"]).drop("eligible", "scheduled")
+        n_selected = _obs_int(obs_rank, "selected", selected)
+        carryover = ranked.filter(c["unscheduled"]).drop(
             "eligible", "scheduled", "rnk", "round"
         )
 
@@ -835,13 +866,9 @@ def run_crawl(
                 annotated_parts.append(ann)
 
         obs_fetch = Observation(f"fetch_r{rnd}")
-        fetched = selected.join(
-            pages.select(
-                "url", F.col("doc_id").alias("f_doc_id"), F.col("spans").alias("f_spans")
-            ),
-            "url",
-            "inner",
-        ).observe(obs_fetch, F.count(F.lit(1)).alias("fetched"))
+        fetched = selected.join(pages.select(*c["fetch_page"]), "url", "inner").observe(
+            obs_fetch, c["fetched"]
+        )
 
         if link_fn is not None or discovery == "hrefs":
             # real discovery consumes the SAME fetched plan (the fetch
@@ -858,19 +885,14 @@ def run_crawl(
         new_frontier = canonicalize(
             links.select(
                 "url",
-                F.lit(None).cast("string").alias("canonical_url"),
-                F.lit(None).cast("string").alias("host"),
-                F.lit(None).cast("int").alias("host_salt"),
-                F.lit(None).cast("double").alias("priority"),
+                *c["unkeyed"],
                 F.lit(rnd + 1).alias("discovery_round"),
-                F.lit(0).cast("long").alias("seq"),
+                c["first_seq"],
                 "parent_url",
             )
-        ).observe(obs_links, F.count(F.lit(1)).alias("new_links"))
+        ).observe(obs_links, c["new_links"])
 
-        seen_delta = selected.select(
-            "canonical_url", F.col("round").alias("first_round")
-        )
+        seen_delta = selected.select(*c["seen_delta"])
         if bucketed_seen:
             # O(delta) bucketed append; next round's anti-join reads the
             # table snapshot including these files, exchange-free
@@ -880,13 +902,17 @@ def run_crawl(
             seen = seen.unionByName(seen_delta)
         n_seen += n_selected
 
-        # N7: keep the frontier partitioned on the salted url-hash key so the
-        # next round's dedup groupBy reuses the partitioning; carryover rows
-        # (budget overflow + crawl-delay-gated hosts) re-enter the queue
-        # (fills the fetch/link observations upstream of it)
+        # N7: spread the checkpointed frontier over the partitions by its
+        # salted url-hash key, so a hot host's links do not pile into one
+        # partition (the skew stats count these partitions). The next round
+        # does not reuse this partitioning: its dedup groups by canonical_url,
+        # and the executed plan shuffles on hashpartitioning(canonical_url)
+        # above the anti-join. Carryover rows (budget overflow +
+        # crawl-delay-gated hosts) re-enter the queue. The checkpoint fills
+        # the fetch/link observations upstream of it.
         frontier = (
             new_frontier.unionByName(
-                carryover.withColumn("parent_url", F.lit(None).cast("string")),
+                carryover.withColumn("parent_url", c["no_parent"]),
                 allowMissingColumns=True,
             )
             .repartition(max(spark.sparkContext.defaultParallelism, 4), "host_salt")
@@ -974,7 +1000,7 @@ def run_crawl(
         # from an unrelated prior run are excluded by construction)
         ann_dirs = [_ckpt_dir(out_dir, r, "annotated") for r in sorted(ann_rounds)]
         if ann_dirs:
-            annotated = spark.read.parquet(*ann_dirs)
+            annotated = spark.read.schema(schema.SIDECAR).parquet(*ann_dirs)
     elif annotated_parts:
         annotated = annotated_parts[0]
         for a in annotated_parts[1:]:

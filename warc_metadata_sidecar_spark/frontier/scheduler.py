@@ -16,8 +16,10 @@ the candidate dedup, which keys on canonical_url (uniform by construction).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from warc_metadata_sidecar_spark.session import per_context
 
 DEFAULT_BUDGET = 2
 
@@ -26,13 +28,14 @@ def dedup_candidates(candidates: DataFrame) -> DataFrame:
     """One row per canonical_url: min discovery_round, min seq, min url as
     the deterministic representative (priority/host are functions of the
     canonical URL, so any representative agrees on them)."""
-    return candidates.groupBy("canonical_url").agg(
-        F.min("url").alias("url"),
-        F.min("host").alias("host"),
-        F.min("host_salt").alias("host_salt"),
-        F.min("priority").alias("priority"),
-        F.min("discovery_round").alias("discovery_round"),
-        F.min("seq").alias("seq"),
+    return candidates.groupBy("canonical_url").agg(*_dedup_aggs())
+
+
+@per_context
+def _dedup_aggs() -> tuple[Column, ...]:
+    return tuple(
+        F.min(c).alias(c)
+        for c in ("url", "host", "host_salt", "priority", "discovery_round", "seq")
     )
 
 
@@ -81,45 +84,65 @@ def apply_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
     verdict inline (struct max orders by length then allowed, so ties break
     to Allow exactly per the RFC). With deny-only tables this reduces to
     the classic any-deny-match drop."""
-    rule_rows = robots.filter(F.col("path_prefix").isNotNull()).select(
-        "host",
-        F.col("path_prefix").alias("p"),
-        F.col("allowed").alias("a"),
-        # wildcard machinery resolved ONCE per rule row, before the
-        # per-candidate fold ever sees it
-        ((F.instr("path_prefix", "*") > 0) | F.col("path_prefix").endswith("$")).alias("w"),
-        _regexify_rule(F.col("path_prefix")).alias("re"),
+    c = _robots_cols()
+    rules = (
+        robots.filter(c["is_rule"]).select(*c["rule"]).groupBy("host").agg(c["rules"])
     )
-    rules = rule_rows.groupBy("host").agg(
-        F.collect_list(F.struct("p", "a", "w", "re")).alias("_rules")
-    )
-    # the path is hoisted to a named column so its two regexp_replace calls
-    # evaluate once per candidate row — inlined in the filter lambda they
-    # re-evaluate once per RULE element (r8)
-    path_expr = F.regexp_replace(
-        F.regexp_replace(F.col("url"), "^[a-zA-Z][a-zA-Z0-9+.-]*://", ""), "^[^/]*", ""
-    )
-    joined = candidates.withColumn("_path", path_expr).join(
+    joined = candidates.withColumn("_path", c["path"]).join(
         F.broadcast(rules), "host", "left"
     )
-    matches = F.filter(F.col("_rules"), lambda r: _rule_match(F.col("_path"), r))
+    return joined.filter(c["allowed"]).drop("_rules", "_path")
+
+
+@per_context
+def _robots_cols() -> dict:
+    """apply_robots' columns, built once per Spark context."""
     best = F.array_max(
-        F.transform(matches, lambda r: F.struct(F.length(r["p"]).alias("l"), r["a"].alias("a")))
+        F.transform(
+            F.filter(F.col("_rules"), lambda r: _rule_match(F.col("_path"), r)),
+            lambda r: F.struct(F.length(r["p"]).alias("l"), r["a"].alias("a")),
+        )
     )
-    return joined.filter(best.isNull() | best["a"]).drop("_rules", "_path")
+    return {
+        "is_rule": F.col("path_prefix").isNotNull(),
+        "rule": (
+            "host",
+            F.col("path_prefix").alias("p"),
+            F.col("allowed").alias("a"),
+            # wildcard machinery resolved ONCE per rule row, before the
+            # per-candidate fold ever sees it
+            ((F.instr("path_prefix", "*") > 0) | F.col("path_prefix").endswith("$")).alias(
+                "w"
+            ),
+            _regexify_rule(F.col("path_prefix")).alias("re"),
+        ),
+        "rules": F.collect_list(F.struct("p", "a", "w", "re")).alias("_rules"),
+        # the path is hoisted to a named column so its two regexp_replace
+        # calls evaluate once per candidate row — inlined in the filter
+        # lambda they re-evaluate once per RULE element (r8)
+        "path": F.regexp_replace(
+            F.regexp_replace(F.col("url"), "^[a-zA-Z][a-zA-Z0-9+.-]*://", ""), "^[^/]*", ""
+        ),
+        "allowed": best.isNull() | best["a"],
+    }
 
 
 def host_budgets(robots: DataFrame, default_budget: int = DEFAULT_BUDGET) -> DataFrame:
     """(host, budget, crawl_delay_s) from the allow rows (path_prefix null)."""
+    c = _budget_cols(default_budget)
     return (
-        robots.filter(F.col("allowed") & F.col("path_prefix").isNull())
-        .groupBy("host")
-        .agg(
-            F.min("budget").alias("budget"),
-            F.min("crawl_delay_s").alias("crawl_delay_s"),
-        )
-        .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
+        robots.filter(c["is_allow"]).groupBy("host").agg(*c["aggs"])
+        .withColumn("budget", c["budget"])
     )
+
+
+@per_context
+def _budget_cols(default_budget: int) -> dict:
+    return {
+        "is_allow": F.col("allowed") & F.col("path_prefix").isNull(),
+        "aggs": (F.min("budget").alias("budget"), F.min("crawl_delay_s").alias("crawl_delay_s")),
+        "budget": F.coalesce("budget", F.lit(default_budget)),
+    }
 
 
 def select_round(
@@ -170,35 +193,48 @@ def rank_round(
     deduped = dedup_candidates(candidates)
     allowed = apply_robots(deduped, robots)
     budgets = host_budgets(robots, default_budget)
-    ranked = (
-        allowed.join(F.broadcast(budgets), "host", "left")
-        .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
-        .withColumn("crawl_delay_s", F.coalesce("crawl_delay_s", F.lit(1)))
-        .withColumn(
-            "eligible",
-            F.lit(True)
-            if round_no is None
-            else F.lit(round_no) % F.col("crawl_delay_s") == 0,
-        )
+    c = _rank_cols(default_budget, prune_salts if prune_salts and prune_salts > 1 else None)
+    ranked = allowed.join(F.broadcast(budgets), "host", "left").withColumns(
+        {
+            "budget": c["budget"],
+            "crawl_delay_s": c["delay"],
+            # the crawl-delay gate is the one per-round expression
+            "eligible": F.lit(True) if round_no is None else F.lit(round_no) % c["delay"] == 0,
+        }
     )
     pruned = None
-    if prune_salts and prune_salts > 1:
-        wp = Window.partitionBy(
-            "host", F.pmod(F.xxhash64("canonical_url"), F.lit(prune_salts))
-        ).orderBy(F.desc("priority"), F.asc("canonical_url"))
-        ranked = ranked.withColumn("_prnk", F.row_number().over(wp))
+    if "prnk" in c:
+        ranked = ranked.withColumn("_prnk", c["prnk"])
         pruned = (
-            ranked.filter(F.col("_prnk") > F.col("budget"))
-            .drop("_prnk")
-            .withColumn("rnk", F.lit(None).cast("int"))
-            .withColumn("scheduled", F.lit(False))
+            ranked.filter(c["pruned"]).drop("_prnk")
+            .withColumns({"rnk": c["no_rnk"], "scheduled": c["unscheduled"]})
         )
-        ranked = ranked.filter(F.col("_prnk") <= F.col("budget")).drop("_prnk")
-    w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("canonical_url"))
-    out = ranked.withColumn("rnk", F.row_number().over(w)).withColumn(
-        "scheduled", F.col("eligible") & (F.col("rnk") <= F.col("budget"))
-    )
+        ranked = ranked.filter(c["kept"]).drop("_prnk")
+    out = ranked.withColumn("rnk", c["rnk"]).withColumn("scheduled", c["scheduled"])
     if pruned is not None:
         out = out.unionByName(pruned)
     return out.drop("budget", "crawl_delay_s")
 
+
+@per_context
+def _rank_cols(default_budget: int, prune_salts: int | None) -> dict:
+    """rank_round's columns, built once per Spark context and setting."""
+    order = (F.desc("priority"), F.asc("canonical_url"))
+    c = {
+        "budget": F.coalesce("budget", F.lit(default_budget)),
+        "delay": F.coalesce("crawl_delay_s", F.lit(1)),
+        "rnk": F.row_number().over(Window.partitionBy("host").orderBy(*order)),
+        "scheduled": F.col("eligible") & (F.col("rnk") <= F.col("budget")),
+    }
+    if prune_salts:
+        wp = Window.partitionBy(
+            "host", F.pmod(F.xxhash64("canonical_url"), F.lit(prune_salts))
+        ).orderBy(*order)
+        c |= {
+            "prnk": F.row_number().over(wp),
+            "pruned": F.col("_prnk") > F.col("budget"),
+            "kept": F.col("_prnk") <= F.col("budget"),
+            "no_rnk": F.lit(None).cast("int"),
+            "unscheduled": F.lit(False),
+        }
+    return c

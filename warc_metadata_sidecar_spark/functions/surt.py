@@ -48,6 +48,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from warc_metadata_sidecar_spark.session import per_context
+
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
 _SCHEME_CAPTURE_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://")
 _AUTHORITY_RE = re.compile(r"^([^/?#]*)")
@@ -314,31 +316,22 @@ def with_surt(df, url_col: str = "url", out_col: str = "canonical_url"):
     Column form re-evaluates each subchain at every downstream reference
     (no let-binding in expression trees; measured 2.7x slower over 2M URLs
     at local[32]). Use this in frontier/CDXJ scans; surt_col remains for
-    expression contexts."""
+    expression contexts. The stage columns are built once per Spark
+    context (_surt_stages)."""
+    *stages, key = _surt_stages(url_col)
+    d = df
+    for name, col in stages:
+        d = d.withColumn(name, col)
+    return d.withColumn(out_col, key).drop(*_SURT_TEMPS)
+
+
+_SURT_TEMPS = ("_surt_u", "_surt_ns", "_surt_auth", "_surt_rest", "_surt_nu", "_surt_host")
+
+
+@per_context
+def _surt_stages(url_col: str) -> tuple:
+    """with_surt's (name, column) stages in order, then the key column."""
     u = F.col(url_col)
-    d = df.withColumn(
-        "_surt_u",
-        F.when(F.instr(u, "%") == 0, u).otherwise(_decode_unreserved_col(u)),
-    )
-    d = d.withColumn("_surt_ns", F.regexp_replace("_surt_u", SCHEME_PATTERN, ""))
-    d = d.withColumn("_surt_auth", F.regexp_extract("_surt_ns", "^([^/?#]*)", 1))
-    d = d.withColumn(
-        "_surt_rest",
-        _canonical_rest_col(
-            F.expr(f"substring(_surt_ns, length(_surt_auth) + 1, {1 << 30})")
-        ),
-    )
-    d = d.withColumn("_surt_nu", F.regexp_replace("_surt_auth", USERINFO_PATTERN, ""))
-    d = d.withColumn(
-        "_surt_host",
-        F.regexp_replace(
-            F.lower(F.regexp_replace("_surt_nu", PORT_PATTERN, "")), WWW_PATTERN, ""
-        ),
-    )
-    # staged separately: the idna gate references the host 3x, which would
-    # re-run the host regex chain at every reference if inlined (no
-    # let-binding in expression trees; see with_surt docstring)
-    d = d.withColumn("_surt_host", _idna_host_col(F.col("_surt_host")))
     port = F.regexp_extract("_surt_nu", PORT_CAPTURE_PATTERN, 1)
     scheme = F.when(
         F.length("_surt_u") > F.length("_surt_ns"),
@@ -354,16 +347,35 @@ def with_surt(df, url_col: str = "url", out_col: str = "canonical_url"):
             F.concat(F.lit(":"), port),
         ).otherwise(F.lit(""))
     )
-    key = F.when(u.isNull() | (F.length(u) == 0), F.lit(None).cast("string")).otherwise(
-        F.concat(
-            F.array_join(F.reverse(F.split("_surt_host", "\\.")), ","),
-            suffix,
-            F.lit(")"),
-            F.col("_surt_rest"),
-        )
-    )
-    return d.withColumn(out_col, key).drop(
-        "_surt_u", "_surt_ns", "_surt_auth", "_surt_rest", "_surt_nu", "_surt_host"
+    return (
+        ("_surt_u", F.when(F.instr(u, "%") == 0, u).otherwise(_decode_unreserved_col(u))),
+        ("_surt_ns", F.regexp_replace("_surt_u", SCHEME_PATTERN, "")),
+        ("_surt_auth", F.regexp_extract("_surt_ns", "^([^/?#]*)", 1)),
+        (
+            "_surt_rest",
+            _canonical_rest_col(
+                F.expr(f"substring(_surt_ns, length(_surt_auth) + 1, {1 << 30})")
+            ),
+        ),
+        ("_surt_nu", F.regexp_replace("_surt_auth", USERINFO_PATTERN, "")),
+        (
+            "_surt_host",
+            F.regexp_replace(
+                F.lower(F.regexp_replace("_surt_nu", PORT_PATTERN, "")), WWW_PATTERN, ""
+            ),
+        ),
+        # staged separately: the idna gate references the host 3x, which
+        # would re-run the host regex chain at every reference if inlined
+        # (no let-binding in expression trees; see with_surt docstring)
+        ("_surt_host", _idna_host_col(F.col("_surt_host"))),
+        F.when(u.isNull() | (F.length(u) == 0), F.lit(None).cast("string")).otherwise(
+            F.concat(
+                F.array_join(F.reverse(F.split("_surt_host", "\\.")), ","),
+                suffix,
+                F.lit(")"),
+                F.col("_surt_rest"),
+            )
+        ),
     )
 
 

@@ -22,11 +22,12 @@ partition-iteration accident.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from warc_metadata_sidecar_spark.functions.surt import surt_col, timestamp14_col
+from warc_metadata_sidecar_spark.session import per_context
 
 # cld2 code -> ISO-639-3 (merge_cdxj.py:12-27 uses langcodes; cld2 emits a
 # closed code set so a static map is exact — SURVEY.md S10). The table is
@@ -125,6 +126,18 @@ def sidecar_to_cdxj(sidecar: DataFrame) -> DataFrame:
     warcinfo rows never exist in our sidecar table (F5 is structural), the
     JSON block carries the five title-keyed fields, absent fields omitted
     (to_json drops nulls)."""
+    # staged SURT (with_surt), not the one-Column surt_col: the IDN gate
+    # references the host subchain several times, and Catalyst CSE skips
+    # conditional branches — inlined, the host regex chain would re-run
+    # per reference for every record of the export (see with_surt docs)
+    from warc_metadata_sidecar_spark.functions.surt import with_surt
+
+    return with_surt(sidecar, "url", "urlkey").select(*_cdxj_cols())
+
+
+@per_context
+def _cdxj_cols() -> tuple:
+    """sidecar_to_cdxj's output columns, built once per Spark context."""
     lang_block = F.when(
         F.col("languages").isNotNull(),
         F.struct(
@@ -146,14 +159,8 @@ def sidecar_to_cdxj(sidecar: DataFrame) -> DataFrame:
             F.col("soft404").alias("Soft-404-Detected"),
         )
     )
-    # staged SURT (with_surt), not the one-Column surt_col: the IDN gate
-    # references the host subchain several times, and Catalyst CSE skips
-    # conditional branches — inlined, the host regex chain would re-run
-    # per reference for every record of the export (see with_surt docs)
-    from warc_metadata_sidecar_spark.functions.surt import with_surt
-
-    return with_surt(sidecar, "url", "urlkey").select(
-        "urlkey",
+    return (
+        F.col("urlkey"),
         timestamp14_col(F.col("warc_date")).alias("ts"),
         json_block.alias("json"),
     )
@@ -218,7 +225,13 @@ def alpha3_codes_col(lang_struct_col: str = "meta.`Languages-cld2`"):
     (merge_cdxj.py:12-27). Mapped via ALPHA3; codes cld2 already emits as
     bare 3-letter (haw, ceb, hmn...) pass through, everything else (script
     extensions, 'un') drops — the reference's LookupError/len!=3 path.
-    '' when none convert."""
+    '' when none convert. Built once per Spark context: the map is 400
+    literals."""
+    return _alpha3_codes(lang_struct_col)
+
+
+@per_context
+def _alpha3_codes(lang_struct_col: str) -> Column:
     mapping = F.create_map(*[F.lit(x) for kv in ALPHA3.items() for x in kv])
     return F.array_join(
         F.filter(
@@ -242,8 +255,14 @@ def canonical_json_col(col: str = "json"):
     (merge_cdxj.py:75-77): field order preserved, whitespace normalized to
     the Python dumps defaults (', ' / ': ' separators, ensure_ascii). The
     block is schemaless so this is a pandas UDF (a fixed StructType cannot
-    express it); unparseable blocks pass through raw."""
+    express it); unparseable blocks pass through raw. The UDF is applied
+    per call (one result id per use), its JVM function built once per Spark
+    context."""
+    return _canonical_json_udf()(F.col(col))
 
+
+@per_context
+def _canonical_json_udf():
     @F.pandas_udf(T.StringType())
     def _canon(vals: pd.Series) -> pd.Series:
         import json
@@ -258,7 +277,7 @@ def canonical_json_col(col: str = "json"):
 
         return vals.map(one)
 
-    return _canon(F.col(col))
+    return _canon
 
 
 def merge_cdxj(
@@ -288,21 +307,13 @@ def merge_cdxj(
         like the reference.
     Returns (line_id, urlkey, ts, json, edited) ordered by line_id.
     """
-    meta_cols = ["urlkey", "ts", F.from_json("json", META_JSON_SCHEMA).alias("meta")]
-    if "line_id" in meta.columns:
-        order_col = F.col("line_id")
-    else:
-        order_col = F.monotonically_increasing_id()
-    meta_parsed = meta.select(*meta_cols, order_col.alias("_ord"))
+    c = _merge_cols()
+    order_col = F.col("line_id") if "line_id" in meta.columns else c["ord"]
+    meta_parsed = meta.select(*c["meta"], order_col.alias("_ord"))
     # build side assumes unique keys; a duplicate key overwrites — LAST line
     # wins (merge_cdxj.py:92). row_number over desc(_ord) reproduces that.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("urlkey", "ts").orderBy(F.desc("_ord"))
     meta_unique = (
-        meta_parsed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("urlkey", "ts", "meta")
+        meta_parsed.withColumn("_rn", c["rn"]).filter(c["last"]).select(*c["unique"])
     )
 
     # the reference materializes the entire build side in a driver dict
@@ -313,6 +324,26 @@ def merge_cdxj(
     # outgrows executor memory.
     build = F.broadcast(meta_unique) if meta_is_small else meta_unique
     joined = original.join(build, ["urlkey", "ts"], "left")
+
+    # the block the string surgery operates on: matched lines get the
+    # reference's loads->dumps normalization when requested; unmatched lines
+    # never see it (their raw json is selected by the meta-null branch below,
+    # so the UDF value is computed-but-unused there)
+    merged_json = (
+        _merged_json(canonical_json_col("json"), c["fragments"])
+        if canonicalize_json
+        else c["merged_json"]
+    )
+    return joined.select(
+        *c["out_head"], merged_json.alias("json"), c["edited"]
+    ).orderBy("line_id")
+
+
+@per_context
+def _merge_cols() -> dict:
+    """merge_cdxj's columns, built once per Spark context; the JSON overlay
+    is rebuilt per call only around the per-call canonicalizing UDF."""
+    from pyspark.sql import Window
 
     mime = F.coalesce(
         F.col("meta.`Identified-Payload-Type`").getItem("python-magic"),
@@ -344,13 +375,25 @@ def merge_cdxj(
             F.concat(F.lit('"soft-404-detected": '), soft404.cast("string")),
         ),
     )
+    w = Window.partitionBy("urlkey", "ts").orderBy(F.desc("_ord"))
+    return {
+        "meta": (
+            F.col("urlkey"), F.col("ts"), F.from_json("json", META_JSON_SCHEMA).alias("meta")
+        ),
+        "ord": F.monotonically_increasing_id(),
+        "rn": F.row_number().over(w),
+        "last": F.col("_rn") == 1,
+        "unique": (F.col("urlkey"), F.col("ts"), F.col("meta")),
+        "fragments": fragments,
+        "merged_json": _merged_json(F.col("json"), fragments),
+        "out_head": (F.col("line_id"), F.col("urlkey"), F.col("ts")),
+        "edited": F.col("meta").isNotNull().alias("edited"),
+    }
 
-    # the block the string surgery operates on: matched lines get the
-    # reference's loads->dumps normalization when requested; unmatched lines
-    # never see it (their raw json is selected by the meta-null branch below,
-    # so the UDF value is computed-but-unused there)
-    base_json = canonical_json_col("json") if canonicalize_json else F.col("json")
-    merged_json = F.when(F.col("meta").isNull(), F.col("json")).otherwise(
+
+def _merged_json(base_json: Column, fragments: Column) -> Column:
+    """The original JSON block with the sidecar fragments appended."""
+    return F.when(F.col("meta").isNull(), F.col("json")).otherwise(
         # matched: reference re-dumps even when no field survives the
         # truthiness gates (json.dumps(updated_obj) unconditionally, :77)
         F.when(F.length(fragments) == 0, base_json)
@@ -367,14 +410,6 @@ def merge_cdxj(
             )
         )
     )
-
-    return joined.select(
-        "line_id",
-        "urlkey",
-        "ts",
-        merged_json.alias("json"),
-        F.col("meta").isNotNull().alias("edited"),
-    ).orderBy("line_id")
 
 
 def merge_counters(merged: DataFrame) -> DataFrame:

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark.functions.detectors import detect_all
 from warc_metadata_sidecar_spark.schema import LANGUAGES
+from warc_metadata_sidecar_spark.session import per_context
 
 # reference regexes (warc_metadata_sidecar.py:33,37)
 DNS_PREFIX = "^dns:"
@@ -85,10 +86,7 @@ def first_media_ref_col() -> Column:
 def header_filters(documents: DataFrame) -> DataFrame:
     """F1+F2: rec_type + dns filters — header columns only, so a branch
     using just these never decodes the spans (payload) column."""
-    return documents.filter(
-        F.col("rec_type").isin("response", "resource")
-        & ~F.coalesce(F.col("url"), F.lit("")).rlike(DNS_PREFIX)
-    )
+    return documents.filter(_cols()["header"])
 
 
 NON_EMPTY_PAYLOAD = (
@@ -100,7 +98,7 @@ NON_EMPTY_PAYLOAD = (
 def base_filters(documents: DataFrame) -> DataFrame:
     """F1+F2+F3: the cheap native filters placed BEFORE the Python stage so
     Catalyst keeps them at the scan (Python UDFs are a pushdown barrier)."""
-    return header_filters(documents).filter(F.expr(NON_EMPTY_PAYLOAD))
+    return header_filters(documents).filter(_cols()["non_empty"])
 
 
 def _with_payload_projection(filtered: DataFrame, media: DataFrame | None) -> DataFrame:
@@ -115,19 +113,13 @@ def _with_payload_projection(filtered: DataFrame, media: DataFrame | None) -> Da
     head_ref would route every NULL-key row into one straggler partition.
     Only media-first rows enter the join; text rows bypass it entirely and
     the two legs union back."""
-    out = filtered.withColumn("payload_text", payload_text_col()).withColumn(
-        "head_ref", first_media_ref_col()
-    )
+    c = _cols()
+    out = filtered.withColumns(c["payload"])
     if media is None:
-        return out.withColumn("head", F.lit(None).cast("binary")).drop("head_ref")
-    heads = media.select(
-        F.col("media_ref").alias("head_ref"),
-        F.expr("substring(bytes, 1, 1024)").alias("head"),
-    )
-    media_first = out.filter(F.col("head_ref").isNotNull()).join(heads, "head_ref", "left")
-    text_first = out.filter(F.col("head_ref").isNull()).withColumn(
-        "head", F.lit(None).cast("binary")
-    )
+        return out.withColumn("head", c["no_head"]).drop("head_ref")
+    heads = media.select(*c["heads"])
+    media_first = out.filter(c["media_first"]).join(heads, "head_ref", "left")
+    text_first = out.filter(c["text_first"]).withColumn("head", c["no_head"])
     return media_first.drop("head_ref").unionByName(text_first.drop("head_ref"))
 
 
@@ -149,11 +141,9 @@ def extract_sidecar(documents: DataFrame, media: DataFrame | None = None) -> Dat
     # NULL column keeps the artifact-ladder fallback, and the head rides
     # ONLY the representative rows (detector cardinality, never shuffled
     # at record cardinality).
+    c = _cols()
     if "charset_head" not in documents.columns:
-        documents = documents.withColumn("charset_head", F.lit(None).cast("binary"))
-    dedup_key = F.coalesce(
-        F.col("payload_digest"), F.concat(F.lit("__row__:"), F.col("doc_id"))
-    )
+        documents = documents.withColumn("charset_head", c["no_head"])
     # Phase 1 elects a representative per distinct digest by shuffling only
     # (payload_digest, warc_date, doc_id) — a few dozen bytes per row.
     # Phase 2 routes ONLY representative rows into the detector via a
@@ -179,9 +169,7 @@ def extract_sidecar(documents: DataFrame, media: DataFrame | None = None) -> Dat
     # whole job. F3 is enforced structurally instead — an empty-payload
     # row's digest group is filtered out of the detector branch, so no
     # detected row exists for it and `_detected` stays false.
-    probe = header_filters(documents).select(
-        "doc_id", "url", "warc_date", "warcinfo_id", "is_arc", dedup_key.alias("dedup_key")
-    )
+    probe = header_filters(documents).select(*c["probe"])
     # Rep election runs ONLY on digest-bearing rows, grouped on the RAW
     # payload_digest column: null-digest (ARC) rows have per-row keys and
     # are trivially their own representatives — they never need the
@@ -189,13 +177,9 @@ def extract_sidecar(documents: DataFrame, media: DataFrame | None = None) -> Dat
     # payload_digest-bucketed documents table (tables.write_documents_bucketed,
     # Iceberg bucket(payload_digest) in production) satisfies the grouping
     # with ZERO shuffle.
-    digest_probe = header_filters(documents).filter(
-        F.col("payload_digest").isNotNull()
-    )
+    digest_probe = header_filters(documents).filter(c["has_digest"])
     digest_reps = (
-        digest_probe.groupBy("payload_digest")
-        .agg(F.min(F.struct(F.col("warc_date").alias("_o1"), F.col("doc_id").alias("_o2"))).alias("o"))
-        .select("payload_digest", F.col("o._o2").alias("doc_id"))
+        digest_probe.groupBy("payload_digest").agg(c["first_seen"]).select(*c["rep_id"])
     )
     # The semi-join runs on the BARE filtered scan, before the payload
     # projection / media head join, for three reasons: (a) the left side's
@@ -208,84 +192,131 @@ def extract_sidecar(documents: DataFrame, media: DataFrame | None = None) -> Dat
     # (null digest, per-row key) are trivially their own representatives
     # and bypass the join on a disjoint filter leg.
     filtered = base_filters(documents)
-    digest_rep_docs = filtered.filter(F.col("payload_digest").isNotNull()).join(
+    digest_rep_docs = filtered.filter(c["has_digest"]).join(
         digest_reps, ["payload_digest", "doc_id"], "left_semi"
     )
-    rep_docs = digest_rep_docs.unionByName(filtered.filter(F.col("payload_digest").isNull()))
+    rep_docs = digest_rep_docs.unionByName(filtered.filter(c["no_digest"]))
 
-    rep_rows = _with_payload_projection(rep_docs, media).withColumn("dedup_key", dedup_key)
+    rep_rows = _with_payload_projection(rep_docs, media).withColumn("dedup_key", c["dedup_key"])
 
-    # detect_all is pure, but asNondeterministic() stops Catalyst from
-    # duplicating the Arrow stage when the downstream F4 filter is pushed
-    # through the projection (observed: two ArrowEvalPython nodes = detectors
-    # run twice per distinct payload)
-    detect_once = detect_all.asNondeterministic()
-    detected = rep_rows.withColumn(
-        "det",
-        detect_once(
-            F.col("payload_text"), F.col("head"), F.col("http_status"), F.col("charset_head")
-        ),
-    ).select("dedup_key", F.lit(True).alias("_detected"), "det.*")
+    # the UDF column is applied per call: a cached one would carry one
+    # result id into every plan that uses it
+    detected = rep_rows.withColumn("det", _detect_once()(*c["detect_args"])).select(
+        *c["detected"]
+    )
 
     annotated = probe.join(detected, "dedup_key", "left")
+    return annotated.select(*c["sidecar"])
 
-    return annotated.select(
-        "doc_id",
-        "url",
-        "warc_date",
-        F.when(F.col("is_arc"), F.lit(None).cast("string"))
-        .otherwise(F.col("doc_id"))
-        .alias("concurrent_id"),
-        F.when(F.col("is_arc"), F.lit(None).cast("string"))
-        .otherwise(F.col("warcinfo_id"))
-        .alias("warcinfo_id"),
-        F.map_filter(
-            F.create_map(
-                F.lit("fido"), F.col("mime_fido"), F.lit("python-magic"), F.col("mime_magic")
-            ),
-            lambda _, v: v.isNotNull(),
-        ).alias("mime"),
-        "puid",
-        F.when(
-            F.col("charset_encoding").isNotNull(),
-            F.struct(
-                F.col("charset_encoding").alias("encoding"),
-                F.col("charset_confidence").alias("confidence"),
-            ),
-        ).alias("charset"),
-        F.from_json(F.col("languages_json"), LANGUAGES).alias("languages"),
-        "soft404",
-        "payload",
-        # text/non-text classification for counters: the reference classifies
-        # cache hits from line 1 of the cached payload (:234) and misses from
-        # mimes_found (:255) — provably equivalent to this expression for
-        # every reachable payload (both reduce to the detected mime strings).
-        # NULL when the row never reached the detectors (F3-dropped): those
-        # rows never increment text/non-text in the reference (:213-215).
-        F.when(
-            F.col("_detected"),
-            F.concat_ws(" ", F.col("mime_fido"), F.col("mime_magic")).rlike(
-                TEXT_FORMAT_MIMES
-            ),
-        ).alias("is_text"),
+
+@per_context
+def _detect_once():
+    """detect_all is pure, but asNondeterministic() stops Catalyst from
+    duplicating the Arrow stage when the downstream F4 filter is pushed
+    through the projection (observed: two ArrowEvalPython nodes = detectors
+    run twice per distinct payload). The call rebuilds the JVM function, so
+    it runs once per Spark context, not per plan."""
+    return detect_all.asNondeterministic()
+
+
+@per_context
+def _cols() -> dict:
+    """The sidecar pipeline's columns, built once per Spark context. Columns
+    are referenced as Column objects, not names: a name costs three py4j
+    commands at every use."""
+    dedup_key = F.coalesce(
+        F.col("payload_digest"), F.concat(F.lit("__row__:"), F.col("doc_id"))
     )
+    no_head = F.lit(None).cast("binary")
+    return {
+        "header": F.col("rec_type").isin("response", "resource")
+        & ~F.coalesce(F.col("url"), F.lit("")).rlike(DNS_PREFIX),
+        "non_empty": F.expr(NON_EMPTY_PAYLOAD),
+        "payload": {"payload_text": payload_text_col(), "head_ref": first_media_ref_col()},
+        "no_head": no_head,
+        "heads": (
+            F.col("media_ref").alias("head_ref"),
+            F.expr("substring(bytes, 1, 1024)").alias("head"),
+        ),
+        "media_first": F.col("head_ref").isNotNull(),
+        "text_first": F.col("head_ref").isNull(),
+        "dedup_key": dedup_key,
+        "probe": (
+            *map(F.col, ("doc_id", "url", "warc_date", "warcinfo_id", "is_arc")),
+            dedup_key.alias("dedup_key"),
+        ),
+        "has_digest": F.col("payload_digest").isNotNull(),
+        "no_digest": F.col("payload_digest").isNull(),
+        "first_seen": F.min(
+            F.struct(F.col("warc_date").alias("_o1"), F.col("doc_id").alias("_o2"))
+        ).alias("o"),
+        "rep_id": (F.col("payload_digest"), F.col("o._o2").alias("doc_id")),
+        "detect_args": (
+            F.col("payload_text"), F.col("head"), F.col("http_status"), F.col("charset_head")
+        ),
+        "detected": (F.col("dedup_key"), F.lit(True).alias("_detected"), F.col("det.*")),
+        "sidecar": (
+            *map(F.col, ("doc_id", "url", "warc_date")),
+            F.when(F.col("is_arc"), F.lit(None).cast("string"))
+            .otherwise(F.col("doc_id"))
+            .alias("concurrent_id"),
+            F.when(F.col("is_arc"), F.lit(None).cast("string"))
+            .otherwise(F.col("warcinfo_id"))
+            .alias("warcinfo_id"),
+            F.map_filter(
+                F.create_map(
+                    F.lit("fido"), F.col("mime_fido"),
+                    F.lit("python-magic"), F.col("mime_magic"),
+                ),
+                lambda _, v: v.isNotNull(),
+            ).alias("mime"),
+            F.col("puid"),
+            F.when(
+                F.col("charset_encoding").isNotNull(),
+                F.struct(
+                    F.col("charset_encoding").alias("encoding"),
+                    F.col("charset_confidence").alias("confidence"),
+                ),
+            ).alias("charset"),
+            F.from_json(F.col("languages_json"), LANGUAGES).alias("languages"),
+            F.col("soft404"),
+            F.col("payload"),
+            # text/non-text classification for counters: the reference
+            # classifies cache hits from line 1 of the cached payload (:234)
+            # and misses from mimes_found (:255) — provably equivalent to this
+            # expression for every reachable payload (both reduce to the
+            # detected mime strings). NULL when the row never reached the
+            # detectors (F3-dropped): those rows never increment
+            # text/non-text in the reference (:213-215).
+            F.when(
+                F.col("_detected"),
+                F.concat_ws(" ", F.col("mime_fido"), F.col("mime_magic")).rlike(
+                    TEXT_FORMAT_MIMES
+                ),
+            ).alias("is_text"),
+        ),
+        "detected_row": F.col("payload").isNotNull(),
+        "counters": (
+            F.sum(F.when(F.col("payload").isNotNull(), 1).otherwise(0)).alias(
+                "records_written"
+            ),
+            F.sum(F.when(F.col("is_text"), 1).otherwise(0)).alias("text_mime"),
+            F.sum(F.when(~F.col("is_text"), 1).otherwise(0)).alias("non_text"),
+        ),
+    }
 
 
 def sidecar_rows(documents: DataFrame, media: DataFrame | None = None) -> DataFrame:
     """F4: only rows where at least one detector fired survive
     (warc_metadata_sidecar.py:270-271)."""
-    return extract_sidecar(documents, media).filter(F.col("payload").isNotNull()).drop("is_text")
+    return extract_sidecar(documents, media).filter(_cols()["detected_row"]).drop("is_text")
 
 
 def counter_aggs() -> list[Column]:
     """The A1 counter aggregate expressions over an extract_sidecar frame —
     the single definition shared by sidecar_counters and the CLI's
     observe() (reference semantics documented in sidecar_counters)."""
-    return [
-        F.sum(F.when(F.col("payload").isNotNull(), 1).otherwise(0)).alias("records_written"),
-        F.sum(F.when(F.col("is_text"), 1).otherwise(0)).alias("text_mime"),
-        F.sum(F.when(~F.col("is_text"), 1).otherwise(0)).alias("non_text"),
-    ]
+    return list(_cols()["counters"])
 
 
 def sidecar_counters(documents: DataFrame, media: DataFrame | None = None) -> DataFrame:

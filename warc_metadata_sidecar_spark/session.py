@@ -8,9 +8,17 @@ and the memory knobs change.
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
+import weakref
+from typing import Callable, TypeVar
 
+from pyspark import SparkContext
+from pyspark.errors import utils as pyspark_errors_utils
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -30,6 +38,14 @@ def build_session(
       - AQE is on: runtime coalescing, skew-join splitting, and plan
         re-optimization using runtime stats.
       - Arrow is on: every pandas UDF moves data in columnar batches.
+
+    DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``) is
+    off. PySpark turns it on by default, and then every ``Column`` method
+    and ``F.*`` call first sends its Python call site to the JVM: ``F.col``
+    becomes 13 py4j commands instead of 3, and a crawl round's plan
+    construction about three times as many round trips. It only adds the
+    Python line to analysis-error messages. Turn it back on with
+    ``extra={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
@@ -54,10 +70,14 @@ def build_session(
         # the storage-partitioned-join behavior the bucketed layouts here
         # are designed around.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for key, value in (extra or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
+    # PySpark reads the debugging flag once per process; forget that read so
+    # this session's value applies (a rebuilt session may set another)
+    pyspark_errors_utils._enable_debugging_cache = None
     spark.sparkContext.setLogLevel("WARN")
     _warm(spark)
     return spark
@@ -95,3 +115,39 @@ def _warm(spark: SparkSession) -> None:
         ).save()
     except Exception:
         pass
+
+
+_TREES: "weakref.WeakKeyDictionary[SparkContext, dict]" = weakref.WeakKeyDictionary()
+_TREES_LOCK = threading.Lock()
+
+
+def per_context(build: Callable[..., T]) -> Callable[..., T]:
+    """Memoize a Column-tree builder per live SparkContext.
+
+    Building a tree costs py4j round trips for every function and literal in
+    it, and the hot paths (a crawl round, a sidecar micro-batch) rebuild the
+    same trees each time. Unresolved `Column` trees carry no plan state, so
+    one copy serves every DataFrame of the context; callers share it and
+    must not mutate it. The key is the context object itself: a stopped
+    context's columns are never handed to the next one. `build`'s arguments
+    must be hashable and it must not apply Python UDFs — a UDF column holds
+    one result id, which two uses in one plan would share — so UDF columns
+    are applied per call. A streaming batch may build on another thread:
+    the first tree stored wins.
+    """
+
+    @functools.wraps(build)
+    def cached(*args):
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return build(*args)
+        key = (build, args)
+        with _TREES_LOCK:
+            trees = _TREES.setdefault(sc, {})
+            if key in trees:
+                return trees[key]
+        tree = build(*args)
+        with _TREES_LOCK:
+            return trees.setdefault(key, tree)
+
+    return cached

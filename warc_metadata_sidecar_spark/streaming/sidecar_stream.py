@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from warc_metadata_sidecar_spark import schema
 from warc_metadata_sidecar_spark.operators.sidecar import base_filters, sidecar_rows
+from warc_metadata_sidecar_spark.session import per_context
 from warc_metadata_sidecar_spark.streaming import ledger
 
 # metadata keyed by payload digest — exactly what DIGEST_CACHE memoizes
@@ -58,28 +59,35 @@ def split_by_ledger(
     side co-locates, and AQE may still broadcast while it is small). NULL
     digests (ARC) never equi-join, so they stay on the detector path,
     matching the reference's never-cache-ARC rule."""
-    filtered = base_filters(batch_df)
-    served = filtered.join(known, "payload_digest", "inner").select(
-        "doc_id",
-        "url",
-        "warc_date",
-        F.when(F.col("is_arc"), F.lit(None).cast("string"))
-        .otherwise(F.col("doc_id"))
-        .alias("concurrent_id"),
-        F.when(F.col("is_arc"), F.lit(None).cast("string"))
-        .otherwise(F.col("warcinfo_id"))
-        .alias("warcinfo_id"),
-        "mime",
-        "puid",
-        "charset",
-        "languages",
-        "soft404",
-        "payload",
+    c = _cols()
+    served = base_filters(batch_df).join(known, "payload_digest", "inner").select(
+        *c["served"]
     )
-    fresh_docs = batch_df.join(
-        known.select("payload_digest"), "payload_digest", "left_anti"
-    )
+    fresh_docs = batch_df.join(known.select(c["digest"]), "payload_digest", "left_anti")
     return served, fresh_docs
+
+
+@per_context
+def _cols() -> dict:
+    """The stream's split and fill columns, built once per Spark context."""
+    return {
+        "served": (
+            F.col("doc_id"),
+            F.col("url"),
+            F.col("warc_date"),
+            F.when(F.col("is_arc"), F.lit(None).cast("string"))
+            .otherwise(F.col("doc_id"))
+            .alias("concurrent_id"),
+            F.when(F.col("is_arc"), F.lit(None).cast("string"))
+            .otherwise(F.col("warcinfo_id"))
+            .alias("warcinfo_id"),
+            *map(F.col, ("mime", "puid", "charset", "languages", "soft404", "payload")),
+        ),
+        "digest": F.col("payload_digest"),
+        "doc_digest": (F.col("doc_id"), F.col("payload_digest")),
+        "has_digest": F.col("payload_digest").isNotNull(),
+        "ledger": tuple(map(F.col, LEDGER.fieldNames())),
+    }
 
 
 def compact_ledger(spark: SparkSession, ledger_dir: str) -> bool:
@@ -123,15 +131,14 @@ def start_sidecar_stream(
             # freshly detected rows only (all their digests are new by
             # construction of the anti-join above); one row per digest, F4
             # survivors only (:270-276)
+            c = _cols()
             additions = (
                 fresh.join(
-                    new_docs.select("doc_id", "payload_digest").filter(
-                        F.col("payload_digest").isNotNull()
-                    ),
+                    new_docs.select(*c["doc_digest"]).filter(c["has_digest"]),
                     "doc_id",
                     "inner",
                 )
-                .select(*LEDGER.fieldNames())
+                .select(*c["ledger"])
                 .dropDuplicates(["payload_digest"])
             )
             mode = "append" if known is not None else "overwrite"
