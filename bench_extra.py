@@ -10,7 +10,7 @@ Usage:
   python bench_extra.py time  <query> [query...]   # noop-sink wall, 3 reps
   python bench_extra.py plan  <query> <suffix>     # write plans/r08/<q>_<suffix>.txt
   python bench_extra.py sweep                      # noop-sink wall for all bench queries
-  python bench_extra.py rounds [R] [seed]          # wall, Spark jobs, py4j commands per crawl round
+  python bench_extra.py rounds [R] [seed]          # wall, job wall, Spark jobs, py4j commands per crawl round
 """
 
 from __future__ import annotations
@@ -66,12 +66,26 @@ class Py4jTally:
         self._cls.send_command = self._orig
 
 
+def _job_wall_s(sc, job_ids) -> float:
+    """Summed submission-to-completion wall of the given Spark jobs, from the
+    driver's status store. Above the round's own wall, jobs overlapped."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    total_ms = 0
+    for j in job_ids:
+        job = store.job(j)
+        if job.submissionTime().isDefined() and job.completionTime().isDefined():
+            total_ms += job.completionTime().get().getTime() - job.submissionTime().get().getTime()
+    return total_ms / 1000
+
+
 def rounds(n_rounds: int = 3, seed: int = 1) -> None:
     """A resumable crawl at the e2ebench crawl sizes (10k documents, 400
     seeds, local[2], 1 GB heap, annotate + bucketed seen + out_dir), one
     run_crawl call per round as the benchmark drives it. Prints each
-    round's wall, the number of Spark jobs in its job group, the py4j
-    commands it sent and the seconds spent in those under 20 ms."""
+    round's wall, the summed wall of the Spark jobs in its job group and
+    their number, the py4j commands it sent and the seconds spent in those
+    under 20 ms."""
     import random
     import shutil
     import tempfile
@@ -101,10 +115,11 @@ def rounds(n_rounds: int = 3, seed: int = 1) -> None:
               "seq": k, "parent_url": None} for k, i in enumerate(ids)],
             schema.FRONTIER,
         )
-        tracker = spark.sparkContext.statusTracker()
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
         for r in range(n_rounds):
             group = f"rounds.r{r}"
-            spark.sparkContext.setJobGroup(group, group)
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             with Py4jTally() as tally:
                 m = run_crawl(
@@ -113,8 +128,10 @@ def rounds(n_rounds: int = 3, seed: int = 1) -> None:
                     annotate=True, bucketed_seen=True,
                 ).lineage[-1]
             wall = time.perf_counter() - t0
+            jobs = tracker.getJobIdsForGroup(group)
             print(
-                f"round={r} wall_s={wall:.2f} jobs={len(tracker.getJobIdsForGroup(group))} "
+                f"round={r} wall_s={wall:.2f} job_wall_s={_job_wall_s(sc, jobs):.2f} "
+                f"jobs={len(jobs)} "
                 f"py4j={tally.commands} short_s={tally.short_total_s:.2f} "
                 f"selected={m.selected} seen_after={m.seen_after}",
                 flush=True,

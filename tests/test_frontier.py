@@ -319,38 +319,59 @@ def test_crawl_round_action_budget(spark, corpus, robots_df, seeds, monkeypatch)
 def resumed_round(spark, corpus, robots_df, seeds, tmp_path_factory):
     """Round 0 of a crawl with every snapshot on, then round 1 resumed from
     its checkpoints in a job group of its own, the way the e2ebench crawl
-    drives run_crawl: (round 1's lineage row, its Spark job count)."""
+    drives run_crawl: (round 1's lineage row, its Spark job count, the
+    number of Spark jobs the resumed call ran in all)."""
     out = str(tmp_path_factory.mktemp("resumed") / "crawl")
     kw = dict(universe=UNIVERSE, out_dir=out, annotate=True, bucketed_seen=True)
     run_crawl(spark, corpus, seeds, robots_df, rounds=1, **kw)
     sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def all_jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None).size()
+
+    before = all_jobs()
     sc.setJobGroup("resumed_round", "resumed_round")
     try:
         m = run_crawl(spark, corpus, seeds, robots_df, rounds=2, **kw).lineage[-1]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return m, len(sc.statusTracker().getJobIdsForGroup("resumed_round"))
+    ran = all_jobs() - before
+    return m, len(sc.statusTracker().getJobIdsForGroup("resumed_round")), ran
 
 
 def test_resumed_round_job_budget(resumed_round):
     """A resumed round's fixed per-job cost dominates it at small inputs, so
-    its Spark jobs are budgeted: resume, the exact anti-join inside the
-    ranked checkpoint, one fetched-documents checkpoint feeding both the
-    annotation and the fetch join, one partition count, lineage written
-    without a job, and snapshots read with their schemas, so no read runs a
-    schema-inference job: 34 jobs here. The round before this budget ran
-    48, and 36 while the resumed frontier and the annotated scan inferred
-    their schemas."""
-    m, jobs = resumed_round
+    its Spark jobs are budgeted: resume (the bucketed table's row count
+    from its footers), the exact anti-join inside the ranked checkpoint,
+    one fetched-documents checkpoint feeding both the annotation and the
+    fetch join, the frontier snapshot as the frontier's materialization
+    (partition rows from its footers), lineage written without a job, and
+    snapshots read with their schemas, so no read runs a schema-inference
+    job: 29 jobs here. The round before this budget ran 48; 36 while the
+    resumed frontier and the annotated scan inferred their schemas; 34
+    while the frontier was checkpointed and counted apart from its
+    snapshot, and resume counted the table with a Spark job."""
+    m, jobs, _ = resumed_round
     assert m.round == 1 and m.selected > 0
-    assert jobs <= 38, jobs
+    assert jobs <= 33, jobs
+
+
+def test_resumed_round_jobs_stay_in_callers_group(resumed_round):
+    """The round's side actions run on driver threads that inherit the
+    caller's local properties, so every Spark job of the resumed call is
+    in the caller's job group (the e2ebench crawl's per-layer attribution
+    relies on it)."""
+    _, jobs, ran = resumed_round
+    assert ran == jobs, (ran, jobs)
 
 
 def test_lineage_shuffle_bytes_measured_with_ui_off(spark, resumed_round):
     """Lineage shuffle bytes come from the driver's status store, which the
     session keeps with the UI off: measured, never the -1 placeholder."""
     assert spark.sparkContext.uiWebUrl is None
-    m, _ = resumed_round
+    m, _, _ = resumed_round
     assert m.shuffle_read_bytes >= 0 and m.shuffle_write_bytes >= 0
     assert m.shuffle_read_bytes + m.shuffle_write_bytes > 0
 
@@ -782,6 +803,70 @@ def test_resume_round_rejects_gap_in_delta_chain(
     assert resume_round(spark, out) == 2
     shutil.rmtree(os.path.join(out, "round=1", "seen_delta"))
     assert resume_round(spark, out) == 0
+
+
+@pytest.mark.parametrize("action", ["append_seen_bucketed", "write_filters"])
+def test_failed_side_action_leaves_round_unresumable(
+    spark, corpus, robots_df, seeds, tmp_path, monkeypatch, action
+):
+    """A side action of round 1 fails after its own write landed (the
+    bucketed seen append, or the filters snapshot): run_crawl raises, the
+    round has no seen_delta resume marker, resume_round stays at round 0,
+    and a rerun (whose seen table ran ahead of the checkpoints) gives the
+    schedule and seen set of an uninterrupted crawl."""
+    import os
+
+    from warc_metadata_sidecar_spark.frontier import seen as seen_mod
+
+    out = str(tmp_path / "ck")
+    kw = dict(universe=UNIVERSE, skew_stats=False, out_dir=out, bucketed_seen=True)
+    run_crawl(spark, corpus, seeds, robots_df, rounds=1, **kw)
+
+    orig = getattr(seen_mod, action)
+
+    def write_then_fail(*a, **k):
+        orig(*a, **k)
+        raise RuntimeError(f"injected {action} failure")
+
+    monkeypatch.setattr(seen_mod, action, write_then_fail)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_crawl(spark, corpus, seeds, robots_df, rounds=2, **kw)
+    monkeypatch.setattr(seen_mod, action, orig)
+    assert not os.path.exists(os.path.join(out, "round=1", "seen_delta"))
+    assert resume_round(spark, out) == 0
+
+    rerun = run_crawl(spark, corpus, seeds, robots_df, rounds=3, **kw)
+    assert [m.round for m in rerun.lineage] == [1, 2]
+    full = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
+                     skew_stats=False)
+    sched = lambda r: (r.round, r.canonical_url, r.rnk)  # noqa: E731
+    assert {sched(r) for r in rerun.schedule.collect()} == {
+        sched(r) for r in full.schedule.collect() if r.round > 0
+    }
+    assert {(r.canonical_url, r.first_round) for r in rerun.seen.collect()} == {
+        (r.canonical_url, r.first_round) for r in full.seen.collect()
+    }
+
+
+def test_footer_partition_rows_equal_partition_count(spark, corpus, tmp_path):
+    """The per-partition rows read from a written frontier's part-file
+    footers equal the partition count of the same frame, empty partitions
+    left out, as the frame's checkpoint counted them."""
+    from warc_metadata_sidecar_spark.frontier.crawl import (
+        _footer_partition_rows,
+        _partition_rows,
+    )
+
+    frame = (
+        canonicalize(gen.seed_frontier(spark, n_seeds=20))
+        .repartition(16, "host_salt")
+        .localCheckpoint(eager=True)
+    )
+    path = str(tmp_path / "frontier")
+    frame.write.parquet(path)
+    want = _partition_rows(frame)
+    assert 0 < len(want) < 16  # some partitions are empty
+    assert _footer_partition_rows(path) == want
 
 
 def test_reuse_seen_bucketed_rebuilds_on_count_mismatch(spark, tmp_path):

@@ -379,3 +379,54 @@ def test_export_wet_conversion_records_roundtrip(spark):
     # byte determinism
     again = {x.wet_file: bytes(x.warc_bytes) for x in export_wet(docs).collect()}
     assert again[b.wet_file] == bytes(b.warc_bytes)
+
+
+def _unbounded_first_blank_line(data: bytes, pos: int) -> tuple[int, int]:
+    """The header terminator by its definition: the earlier of the first
+    \\r\\n\\r\\n and the first \\n\\n at or after `pos`, each searched to the end."""
+    hits = [(ix, n) for ix, n in ((data.find(b"\r\n\r\n", pos), 4), (data.find(b"\n\n", pos), 2))
+            if ix != -1]
+    return min(hits) if hits else (-1, 0)
+
+
+def test_first_blank_line_equals_unbounded_search():
+    """The bounded \\n\\n search finds the same terminator as searching the
+    whole buffer for both, on inputs mixing both terminators."""
+    import random
+
+    from warc_metadata_sidecar_spark.sources.warc_ingest import _first_blank_line
+
+    rng = random.Random(7)
+    pieces = [b"a", b"WARC/1.0", b"\r\n", b"\n", b"\r", b"\r\n\r\n", b"\n\n", b" "]
+    for _ in range(300):
+        data = b"".join(rng.choice(pieces) for _ in range(rng.randrange(0, 40)))
+        for pos in {0, len(data), *(rng.randrange(0, len(data) + 1) for _ in range(5))}:
+            assert _first_blank_line(data, pos) == _unbounded_first_blank_line(data, pos), (
+                data, pos,
+            )
+
+
+def test_warc_records_linear_in_file_size():
+    """A CRLF-framed archive of ~6 MiB parses record by record without
+    searching to the end of the buffer per record: the unbounded \\n\\n
+    search made this quadratic (tens of seconds for this file)."""
+    import time
+
+    from warc_metadata_sidecar_spark.sources.warc_ingest import _warc_records
+
+    def record(i: int) -> bytes:
+        body = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                + b"<html>" + b"x" * 700 + b"</html>")
+        head = (f"WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: <urn:uuid:{i}>\r\n"
+                f"WARC-Target-URI: https://example.com/{i}\r\n"
+                f"Content-Length: {len(body)}\r\n\r\n").encode()
+        return head + body + b"\r\n\r\n"
+
+    data = b"".join(record(i) for i in range(8000))
+    assert len(data) > 6 << 20
+    t0 = time.perf_counter()
+    recs = _warc_records(data)
+    assert time.perf_counter() - t0 < 5.0
+    assert len(recs) == 8000
+    assert recs[-1][0]["WARC-Record-ID"] == "<urn:uuid:7999>"
+    assert recs[5][1].endswith(b"</html>")

@@ -202,31 +202,32 @@ def update_filter_shards(
     keys = delta.filter(F.col(key).isNotNull()).select(
         shard_expr(F.col(key), num_shards).alias("shard"), hash_expr(F.col(key)).alias("h")
     )
-
-    def merge(key_tuple: tuple, new_keys: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
-        if not len(new_keys):
-            return state
-        f = SeenFilter.from_bytes(bytes(state["state"].iloc[0])) if len(state) else SeenFilter()
-        f.add(new_keys["h"].to_numpy())
-        return pd.DataFrame(
-            {"shard": [int(key_tuple[0])], "state": [f.to_bytes()], "adds": [f.adds]}
-        )
-
     if existing is None:
         # fresh build: plain grouped apply — no cogroup against a
-        # synthesized empty frame (one less plan leg; same merge fn).
-        # Every parameter is annotated so PySpark's eval-type inference
-        # succeeds instead of warning on each call.
-        def build(key_tuple: tuple, new_keys: pd.DataFrame) -> pd.DataFrame:
-            return merge(key_tuple, new_keys, pd.DataFrame(columns=["state"]))
-
-        return keys.groupBy("shard").applyInPandas(build, FILTERS_SCHEMA)
-
+        # synthesized empty frame (one less plan leg; same merge fn)
+        return keys.groupBy("shard").applyInPandas(_build_state, FILTERS_SCHEMA)
     return (
         keys.groupBy("shard")
         .cogroup(existing.groupBy("shard"))
-        .applyInPandas(merge, FILTERS_SCHEMA)
+        .applyInPandas(_merge_state, FILTERS_SCHEMA)
     )
+
+
+# Module-level: each applyInPandas pickles them by reference, not a new
+# closure by value (it still wraps a new Python UDF per call). Every
+# parameter is annotated so PySpark's eval-type inference succeeds instead
+# of warning on each call.
+def _merge_state(key_tuple: tuple, new_keys: pd.DataFrame, state: pd.DataFrame) -> pd.DataFrame:
+    """One shard's state with `new_keys`' hashes added (update_filter_shards)."""
+    if not len(new_keys):
+        return state
+    f = SeenFilter.from_bytes(bytes(state["state"].iloc[0])) if len(state) else SeenFilter()
+    f.add(new_keys["h"].to_numpy())
+    return pd.DataFrame({"shard": [int(key_tuple[0])], "state": [f.to_bytes()], "adds": [f.adds]})
+
+
+def _build_state(key_tuple: tuple, new_keys: pd.DataFrame) -> pd.DataFrame:
+    return _merge_state(key_tuple, new_keys, pd.DataFrame(columns=["state"]))
 
 
 def write_filters(spark: SparkSession, filters: DataFrame, path: str) -> DataFrame:
@@ -317,7 +318,8 @@ def reuse_or_create_seen_bucketed(
     over 10^10 seen rows must not rewrite the whole seen store).
 
     Reuse requires the existing table to hold exactly `expected_rows` rows
-    (the count of the checkpoint-reconstructed seen set): fewer/more means
+    (the count of the checkpoint-reconstructed seen set, checked against
+    the table files' parquet footers without a Spark job): fewer/more means
     the table and the round checkpoints diverged (e.g. a crash between the
     bucketed append and the snapshot write), and the checkpoints are the
     source of truth — rebuild. A table written by a previous PROCESS is not
@@ -332,9 +334,17 @@ def reuse_or_create_seen_bucketed(
                 f"SORTED BY (canonical_url) INTO {buckets} BUCKETS "
                 f"LOCATION '{path}'"
             )
-        if spark.table(tbl).count() == expected_rows:
+        if parquet_rows([path]) == expected_rows:
             return tbl
     return create_seen_bucketed(spark, path, df=df, table=tbl, buckets=buckets)
+
+
+def parquet_rows(paths: list[str]) -> int:
+    """Row count of parquet directories from their footers — no Spark job.
+    Like Spark's readers, it skips `_` and `.` files (markers, temporaries)."""
+    import pyarrow.dataset as ds
+
+    return sum(ds.dataset(p, format="parquet").count_rows() for p in paths)
 
 
 def append_seen_bucketed(

@@ -119,9 +119,13 @@ def _strip_http(body: bytes) -> tuple[str | None, bytes]:
 
 def _first_blank_line(data: bytes, pos: int) -> tuple[int, int]:
     """(offset, separator_len) of the earliest header terminator — the
-    first of \\r\\n\\r\\n / \\n\\n, or (-1, 0) when neither occurs."""
+    first of \\r\\n\\r\\n / \\n\\n, or (-1, 0) when neither occurs.
+
+    The \\n\\n search stops at the first \\r\\n\\r\\n: a later \\n\\n cannot
+    win, and in a CRLF-framed archive an unbounded search would run to the
+    end of the buffer for every record (quadratic in the file size)."""
     ix_crlf = data.find(b"\r\n\r\n", pos)
-    ix_lf = data.find(b"\n\n", pos)
+    ix_lf = data.find(b"\n\n", pos, len(data) if ix_crlf == -1 else ix_crlf)
     if ix_crlf != -1 and (ix_lf == -1 or ix_crlf <= ix_lf):
         return ix_crlf, 4
     if ix_lf != -1:

@@ -130,11 +130,14 @@ def start_sidecar_stream(
             # serve this batch's rows a second time. Ledger-fill from the
             # freshly detected rows only (all their digests are new by
             # construction of the anti-join above); one row per digest, F4
-            # survivors only (:270-276)
+            # survivors only (:270-276). Their digests come from the batch
+            # itself: doc_id (the WARC-Record-ID) is unique within a batch,
+            # and joining `new_docs` instead would re-run its anti-join
+            # against the ledger, bucketed scan included.
             c = _cols()
             additions = (
                 fresh.join(
-                    new_docs.select(*c["doc_digest"]).filter(c["has_digest"]),
+                    batch_df.select(*c["doc_digest"]).filter(c["has_digest"]),
                     "doc_id",
                     "inner",
                 )
