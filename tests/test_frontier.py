@@ -869,6 +869,21 @@ def test_footer_partition_rows_equal_partition_count(spark, corpus, tmp_path):
     assert _footer_partition_rows(path) == want
 
 
+def test_resumed_round_reuses_generated_code(spark, corpus, robots_df, seeds, tmp_path):
+    """A resumed round takes its whole-stage classes from the codegen cache:
+    after rounds 0 and 1, round 2 compiles only the stages whose code embeds
+    the round number (8 Janino compiles at the e2ebench crawl sizes). While
+    the cache held 100 classes and class names carried stage ids, each
+    round recompiled nearly every stage: 151 compiles here."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    kw = dict(universe=UNIVERSE, out_dir=str(tmp_path / "crawl"), annotate=True,
+              bucketed_seen=True)
+    run_crawl(spark, corpus, seeds, robots_df, rounds=2, **kw)
+    before = compiles.getCount()
+    run_crawl(spark, corpus, seeds, robots_df, rounds=3, **kw)
+    assert compiles.getCount() - before <= 20
+
+
 def test_reuse_seen_bucketed_rebuilds_on_count_mismatch(spark, tmp_path):
     """A seen table that ran AHEAD of the checkpoints (crash between the
     bucketed append and the snapshot write) must be rebuilt from the

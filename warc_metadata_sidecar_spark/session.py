@@ -71,6 +71,16 @@ def build_session(
         # are designed around.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-code reuse. A crawl round runs about 150 distinct
+        # whole-stage classes, more than the default 100-entry LRU holds,
+        # and a class evicted between rounds is compiled again and warmed
+        # again by the JIT. Stage ids in class names would keep identical
+        # stages of different plans in separate entries. A resumed round
+        # then compiles only the stages whose code embeds the round
+        # number. The cache size is a static conf: the first session of a
+        # JVM sets it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for key, value in (extra or {}).items():
         builder = builder.config(key, value)
