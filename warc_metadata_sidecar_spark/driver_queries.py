@@ -1907,79 +1907,6 @@ SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(neighbor_id AS BIGINT) AS neighbor
 FROM ranked WHERE rnk = 1 ORDER BY vec_id
 """
 
-# lm_perplexity / ccnet_buckets: the canonical LM_CTES re-explode the char
-# bigrams once per model-CTE reference (counts, ctx, vocab x2, docbg — five
-# explode chains at runtime). The char-bigram model is BOUNDED (<= 27^2
-# entries), so the Spark side folds the whole model into one single-row CTE
-# of maps — counts map, per-context totals map, vocab size — computed from
-# ONE explode, and scores docbg (the second and last explode) against the
-# broadcast single row. This is the module path's broadcast-model shape
-# (operators/lm.py) expressed in SQL; every quantity is an integer-valued
-# double (exact), lookups replace equi-joins, arithmetic is unchanged.
-_LM_CTES_SPARK = """
-norm AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z ]', ' '),
-                             ' +', ' ')) AS t
-  FROM documents
-),
-nz AS (SELECT * FROM norm WHERE length(t) >= 2),
-bg AS (
-  SELECT doc_id, substr(t, i, 2) AS b
-  FROM nz @LATB
-),
-docbg AS (
-  SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS n FROM bg GROUP BY doc_id, b
-),
-counts AS (SELECT b, CAST(count(*) AS DOUBLE) AS c FROM bg GROUP BY b),
-model AS (
-  SELECT cm,
-         map_from_entries(transform(
-           array_distinct(transform(map_keys(cm), bb -> substr(bb, 1, 1))),
-           c1 -> struct(c1, aggregate(
-             filter(map_entries(cm), e -> substr(e.key, 1, 1) = c1),
-             CAST(0 AS DOUBLE), (acc, e) -> acc + e.value)))) AS tm,
-         CAST(size(array_distinct(flatten(transform(map_keys(cm),
-              bb -> array(substr(bb, 1, 1), substr(bb, 2, 1)))))) AS DOUBLE) AS v
-  FROM (SELECT map_from_entries(collect_list(struct(b, c))) AS cm FROM counts) m0
-),
-scored AS (
-  SELECT d.doc_id,
-         SUM(d.n) AS n_bigrams,
-         SUM(d.n * log2((element_at(m.cm, d.b) + 1)
-                        / (element_at(m.tm, substr(d.b, 1, 1)) + m.v))) AS logsum
-  FROM docbg d CROSS JOIN model m
-  GROUP BY d.doc_id
-)"""
-
-_Q_SPARK["lm_perplexity"] = (
-    "WITH "
-    + _LM_CTES_SPARK
-    + """
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(n_bigrams AS BIGINT) AS n_bigrams,
-       CAST(round(-logsum / n_bigrams, 4) AS DOUBLE) AS bits_per_char
-FROM scored ORDER BY doc_id
-"""
-)
-
-_Q_SPARK["ccnet_buckets"] = (
-    "WITH "
-    + _LM_CTES_SPARK
-    + """,
-final AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(round(-logsum / n_bigrams, 4) AS DOUBLE) AS bits_per_char
-  FROM scored
-)
-SELECT doc_id, bits_per_char,
-       CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-FROM (SELECT *, ntile(3) OVER (ORDER BY bits_per_char, doc_id) AS nt FROM final) t
-ORDER BY doc_id
-"""
-)
-
-
 def _render_query(name: str, dialect: dict) -> str:
     sql = _Q_SPARK[name] if (dialect is SPARK and name in _Q_SPARK) else _Q[name]
     if "@SHINGLES" in sql:
@@ -3618,10 +3545,13 @@ bg AS (
 SELECT doc_id, b, CAST(count(*) AS DOUBLE) AS n FROM bg GROUP BY doc_id, b
 """
 
-# model + scoring over a MATERIALIZED docbg view (see lm_perplexity_q):
-# counts.c = SUM of per-doc counts — integer-valued doubles, exactly the
-# canonical count(*) over the raw bigrams; everything else is the
-# _LM_CTES_SPARK arithmetic unchanged.
+# model + scoring over a MATERIALIZED docbg view (see lm_perplexity_q).
+# The char-bigram model is BOUNDED (<= 27^2 entries), so it folds into one
+# single-row CTE of maps (counts, per-context totals, vocab size) and docbg
+# is scored against that broadcast row: lookups replace the canonical
+# LM_CTES equi-joins, the arithmetic is unchanged. counts.c = SUM of per-doc
+# counts — integer-valued doubles, exactly the canonical count(*) over the
+# raw bigrams.
 _LM_SCORED_SQL = """
 counts AS (SELECT b, SUM(n) AS c FROM _r8_lm_docbg GROUP BY b),
 model AS (
@@ -3661,7 +3591,7 @@ def _lm_docbg_view(spark: SparkSession, sf_dir: str) -> None:
 
 def lm_perplexity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side physical form of lm_perplexity (oracle unchanged):
-    materialized docbg + the single-row maps model of _LM_CTES_SPARK."""
+    materialized docbg + the single-row maps model of _LM_SCORED_SQL."""
     _lm_docbg_view(spark, sf_dir)
     return spark.sql(
         "WITH "
@@ -3697,7 +3627,7 @@ ORDER BY doc_id
 
 def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side physical form of the canonical dedup_minhash_lsh twin
-    (oracle side unchanged: duck_sql_for renders _Q["dedup_minhash_lsh"]).
+    (oracle side unchanged: duck_sql_for("dedup_minhash_lsh")).
     The canonical statement reads the shingle CTE from EIGHT consumers and
     Spark re-executes the corpus scan + explode + distinct per consumer
     (24 parquet scans / 8 Generates at runtime —
