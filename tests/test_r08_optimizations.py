@@ -16,7 +16,7 @@ would not isolate on their own:
      materialize=False rows exactly.
   5. the scale-adaptive `<t>_fan` views: repartitioned exactly when the
      split estimate is below parallelism, and row-identical to the
-     canonical statements for the _FAN_QUERIES rewrites.
+     canonical statements for the queries registered with `fan` tables.
 """
 
 from __future__ import annotations
@@ -132,8 +132,8 @@ def test_tfidf_keywords_materialize_equals_recompute(spark):
 def test_fan_views_adaptive_and_row_identical(spark, monkeypatch):
     """r8 scale-adaptive fan-out: register_views publishes `<t>_fan` views
     that are repartitioned to defaultParallelism ONLY when the file-size
-    estimate yields fewer splits than cores, and the _FAN_QUERIES rewrite
-    returns exactly the canonical rows."""
+    estimate yields fewer splits than cores, and the rewrite of a query
+    registered with `fan` tables returns exactly the canonical rows."""
     from warc_metadata_sidecar_spark import driver_queries as dq
 
     sf = "/root/testdata/sf0.001"

@@ -19,9 +19,12 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Callable
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from warc_metadata_sidecar_spark.functions.text import PII_EMAIL, PII_IP, PII_PHONE
 
 TABLES = [
     "region",
@@ -116,56 +119,40 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         _REGISTERED_VIEWS[key] = sf_dir
 
 
+def _oracle_sf_dir(sf_dir: str | None) -> str:
+    """The sf dir a sequential twin reads: `sf_dir` when given, else
+    $SPARK_GRAFT_ORACLE_SF_DIR, else the sf0.01 test data."""
+    return sf_dir or os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+
 # --- dialect rendering -------------------------------------------------------
-
-def _lat_spark(n_expr: str, alias: str = "i") -> str:
-    return f"LATERAL VIEW explode(sequence(1, {n_expr})) _lat AS {alias}"
-
-
-def _lat_duck(n_expr: str, alias: str = "i") -> str:
-    return f", LATERAL (SELECT unnest(generate_series(1, ({n_expr}))) AS {alias}) _lat"
-
-
-SPARK = {
-    "PRINTF": "format_string",
-    "SPLIT": "split",  # literal single-space delimiter in all uses
-    "LEN": "size",
-    "STRPOS": "instr",
-    "LIST_DISTINCT": "array_distinct",
-    "SLICE_JOIN": "concat_ws(' ', slice({arr}, {i}, 3))",
-    "SLICE8": "concat_ws(' ', slice(ws, i, 8))",
-    "LAT": _lat_spark,
-    "SHIFTLEFT": "shiftleft(1, {b})",
-    "SHIFTRIGHT": "shiftright({v}, {b})",
-    "EPOCH": "unix_timestamp({t})",
-    "ANTI": "LEFT ANTI JOIN",
-}
-DUCK = {
-    "PRINTF": "printf",
-    "SPLIT": "string_split",
-    "LEN": "len",
-    "STRPOS": "strpos",
-    "LIST_DISTINCT": "list_distinct",
-    "SLICE_JOIN": "array_to_string({arr}[{i}:{i}+2], ' ')",
-    "SLICE8": "array_to_string(ws[i:i+7], ' ')",
-    "LAT": _lat_duck,
-    "SHIFTLEFT": "(CAST(1 AS BIGINT) << {b})",
-    "SHIFTRIGHT": "({v} >> {b})",
-    "EPOCH": "epoch({t})",
-    "ANTI": "ANTI JOIN",
-}
+#
+# A template is one SQL text with @TOKENs where Spark SQL and DuckDB differ.
+# SPARK and DUCK map every token to its replacement, in the order _render
+# applies them; both are filled from _TOKENS, once every helper a
+# replacement needs is defined.
+SPARK: dict[str, str | Callable[[str], str]] = {}
+DUCK: dict[str, str | Callable[[str], str]] = {}
 
 
-def _render(template: str, d: dict) -> str:
-    out = template
-    out = out.replace("@PRINTF", d["PRINTF"])
-    out = out.replace("@SPLIT", d["SPLIT"])
-    out = out.replace("@LIST_DISTINCT", d["LIST_DISTINCT"])
-    out = out.replace("@LEN", d["LEN"])
-    out = out.replace("@STRPOS", d["STRPOS"])
-    out = out.replace("@ANTI", d["ANTI"])
-    out = out.replace("@CHR10", "char(10)" if d is SPARK else "chr(10)")
-    return out
+def _render(sql: str, d: dict) -> str:
+    """`sql` in dialect `d`: each token replaced in table order (a token
+    absent from `sql` is a no-op)."""
+    for tok, rep in d.items():
+        sql = rep(sql) if callable(rep) else sql.replace(tok, rep)
+    return sql
+
+
+def _lat(d: dict, n_expr: str) -> str:
+    """One lateral row per i in 1..n_expr."""
+    if d is SPARK:
+        return f"LATERAL VIEW explode(sequence(1, {n_expr})) _lat AS i"
+    return f", LATERAL (SELECT unnest(generate_series(1, ({n_expr}))) AS i) _lat"
+
+
+def _both(f: Callable[..., str], *args) -> tuple[str, str]:
+    """(Spark, DuckDB) renderings of f(dialect, *args)."""
+    return f(SPARK, *args), f(DUCK, *args)
 
 
 # --- shared derivations ------------------------------------------------------
@@ -221,35 +208,76 @@ corpus AS (
 )
 """
 
+# --- the query registry -----------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Query:
+    """One driver query: what queries() runs and what oracle_sql() checks
+    it against.
+
+    template: the canonical SQL with dialect tokens, or None.
+    spark: a Spark-only rewrite of `template` (see "Spark-side physical
+        rewrites"), or None.
+    engine: a module callable, or None to run the Spark rendering of
+        `spark`, else of `template`.
+    oracle: None for the DuckDB rendering of `template`, the name of
+        another query whose template's DuckDB rendering it shares, or a
+        builder of the oracle SQL (a VALUES list from a sequential twin,
+        or an independent restatement).
+    fan: the tables the Spark SQL reads through the `<t>_fan` views
+        (see _fan_sql)."""
+
+    template: str | None = None
+    spark: str | None = None
+    engine: Callable[[SparkSession, str], DataFrame] | None = None
+    oracle: str | Callable[[], str] | None = None
+    fan: tuple[str, ...] = ()
+
+
+_QUERIES: dict[str, Query] = {}
+
+
+def _register(name: str, template: str | None = None, **fields) -> None:
+    """Declare driver query `name` once, next to its definition."""
+    if name in _QUERIES:
+        raise ValueError(f"driver query {name!r} is already registered")
+    q = Query(template, **fields)
+    if q.template is None and (q.engine is None or q.oracle is None):
+        raise ValueError(f"driver query {name!r} needs a template, or an engine and an oracle")
+    _QUERIES[name] = q
+
+
 # --- query templates ---------------------------------------------------------
 
-_Q: dict[str, str] = {}
-
 # F1-F3: record-type / dns / empty-payload filters
-_Q["sidecar_filters"] = (
-    "WITH "
+_register(
+    "sidecar_filters",
+    template="WITH "
     + KEPT_CTE
     + """
 SELECT rec_type, CAST(count(*) AS BIGINT) AS n_kept
 FROM kept GROUP BY rec_type ORDER BY rec_type
-"""
+""",
 )
 
 # D1: digest memoization as groupBy — one detector run per distinct digest
-_Q["digest_dedup"] = (
-    "WITH "
+_register(
+    "digest_dedup",
+    template="WITH "
     + KEPT_CTE
     + """
 SELECT digest,
        CAST(count(*) AS BIGINT) AS n_rows,
        CAST(min(doc_id) AS BIGINT) AS first_doc
 FROM kept GROUP BY digest ORDER BY digest
-"""
+""",
 )
 
 # A1: the four run counters (warc_metadata_sidecar.py:193-196,299-303)
-_Q["sidecar_counters"] = (
-    "WITH "
+_register(
+    "sidecar_counters",
+    template="WITH "
     + KEPT_CTE
     + """
 SELECT
@@ -259,13 +287,14 @@ SELECT
   CAST(sum(CASE WHEN is_media THEN 1 ELSE 0 END) AS BIGINT) AS non_text,
   CAST(count(*) AS BIGINT) AS records_written
 FROM kept
-"""
+""",
 )
 
 # J1+A2: CDXJ merge join — left-outer many-to-one, duplicate probe keys each
 # merged (merge_cdxj.py:59-93); build side = every 3rd record
-_Q["cdxj_merge_counts"] = (
-    "WITH "
+_register(
+    "cdxj_merge_counts",
+    template="WITH "
     + KEPT_CTE
     + """,
 original AS (
@@ -287,12 +316,13 @@ SELECT
   CAST(sum(CASE WHEN m.urlkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS non_edited_count,
   CAST(count(*) AS BIGINT) AS total_lines
 FROM original o LEFT JOIN meta m ON o.urlkey = m.urlkey
-"""
+""",
 )
 
 # N3: partitioned priority queue — per-host window rank <= robots budget
-_Q["frontier_schedule"] = (
-    "WITH "
+_register(
+    "frontier_schedule",
+    template="WITH "
     + KEPT_CTE
     + """,
 frontier AS (
@@ -309,12 +339,13 @@ ranked AS (
 SELECT host, url, CAST(rnk AS BIGINT) AS rnk,
        CAST(round(priority, 6) AS DOUBLE) AS priority
 FROM ranked WHERE rnk <= budget ORDER BY host, rnk
-"""
+""",
 )
 
 # N2: URL-seen exactness backstop — anti-join candidates against crawled set
-_Q["url_seen_antijoin"] = (
-    "WITH "
+_register(
+    "url_seen_antijoin",
+    template="WITH "
     + KEPT_CTE
     + """,
 frontier AS (SELECT host, url, doc_id FROM kept),
@@ -322,12 +353,13 @@ seen AS (SELECT url FROM kept WHERE doc_id % 3 = 0)
 SELECT f.host, CAST(count(*) AS BIGINT) AS n_new
 FROM frontier f @ANTI seen s ON f.url = s.url
 GROUP BY f.host ORDER BY f.host
-"""
+""",
 )
 
 # N4: politeness — per-host robots allow/deny + crawl-delay budget join
-_Q["politeness_budget"] = (
-    "WITH "
+_register(
+    "politeness_budget",
+    template="WITH "
     + KEPT_CTE
     + """,
 frontier AS (
@@ -340,12 +372,12 @@ SELECT host,
        CAST(sum(CASE WHEN allowed THEN 1 ELSE 0 END) AS BIGINT) AS n_allowed,
        CAST(sum(CASE WHEN allowed THEN 0 ELSE 1 END) AS BIGINT) AS n_denied
 FROM frontier GROUP BY host ORDER BY host
-"""
+""",
 )
 
 # --- relational coverage over the star schema --------------------------------
 
-_Q["tpch_q1"] = """
+_register("tpch_q1", template="""
 SELECT l_returnflag, l_linestatus,
        CAST(round(sum(l_quantity), 2) AS DOUBLE) AS sum_qty,
        CAST(round(sum(l_extendedprice), 2) AS DOUBLE) AS sum_base_price,
@@ -357,11 +389,11 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
-"""
+""")
 
 # TPC-H Q6 shape: tight filter conjunction + single agg — the predicate-
 # pushdown showcase (every filter reaches the parquet scan)
-_Q["tpch_q6"] = """
+_register("tpch_q6", template="""
 SELECT CAST(round(sum(l_extendedprice * l_discount), 2) AS DOUBLE) AS revenue,
        CAST(count(*) AS BIGINT) AS n_rows
 FROM lineitem
@@ -369,11 +401,11 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
-"""
+""")
 
 # TPC-H Q3 shape: 3-way join + grouped revenue + top-10 — join-order and
 # broadcast decisions left to Catalyst/AQE
-_Q["tpch_q3"] = """
+_register("tpch_q3", template="""
 SELECT l.l_orderkey,
        CAST(round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS DOUBLE) AS revenue,
        o.o_orderdate
@@ -386,9 +418,9 @@ WHERE c.c_mktsegment = 'BUILDING'
 GROUP BY l.l_orderkey, o.o_orderdate
 ORDER BY revenue DESC, l.l_orderkey
 LIMIT 10
-"""
+""")
 
-_Q["revenue_by_nation"] = """
+_register("revenue_by_nation", template="""
 SELECT n.n_name AS nation,
        CAST(round(sum(o.o_totalprice), 2) AS DOUBLE) AS revenue,
        CAST(count(*) AS BIGINT) AS n_orders
@@ -396,9 +428,9 @@ FROM orders o
 JOIN customer c ON o.o_custkey = c.c_custkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY n.n_name ORDER BY nation
-"""
+""")
 
-_Q["top_events_per_type"] = """
+_register("top_events_per_type", template="""
 WITH ranked AS (
   SELECT event_type, event_id, value,
          row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rnk
@@ -407,9 +439,9 @@ WITH ranked AS (
 SELECT event_type, CAST(event_id AS BIGINT) AS event_id,
        CAST(round(value, 2) AS DOUBLE) AS value, CAST(rnk AS BIGINT) AS rnk
 FROM ranked WHERE rnk <= 3 ORDER BY event_type, rnk
-"""
+""")
 
-_Q["sessionize_events"] = """
+_register("sessionize_events", template="""
 WITH gaps AS (
   SELECT user_id, ts,
          CASE WHEN @EPOCH_TS - @EPOCH_PREV > 1800 THEN 1 ELSE 0 END AS new_session
@@ -423,29 +455,31 @@ SELECT user_id,
        CAST(1 + sum(new_session) AS BIGINT) AS n_sessions,
        CAST(count(*) AS BIGINT) AS n_events
 FROM gaps GROUP BY user_id ORDER BY user_id
-"""
+""")
 
 # S2: timestamp-14 key (warcio iso_date_to_timestamp, sidecar2cdxj.py:36)
-_Q["timestamp14"] = """
+_register("timestamp14", template="""
 SELECT CAST(event_id AS BIGINT) AS event_id, @TS14 AS ts14
 FROM events WHERE event_id % 97 = 0 ORDER BY event_id
-"""
+""")
 
 # S1: SURT canonicalization — fully native in both engines
-_Q["surt_native"] = (
-    "WITH "
+_register(
+    "surt_native",
+    template="WITH "
     + KEPT_CTE
     + """
 SELECT host,
        concat(@REV_HOST, ')/page/', CAST(doc_id AS STRING)) AS urlkey,
        CAST(count(*) OVER (PARTITION BY host) AS BIGINT) AS host_rows
 FROM kept ORDER BY urlkey
-"""
+""",
 )
 
 # F6/F7: text-format + soft-404 gating counts (warc_metadata_sidecar.py:255-265)
-_Q["soft404_gate"] = (
-    "WITH "
+_register(
+    "soft404_gate",
+    template="WITH "
     + KEPT_CTE
     + """
 SELECT
@@ -455,29 +489,29 @@ SELECT
   CAST(sum(CASE WHEN NOT is_media AND http_status <> '200' THEN 1 ELSE 0 END) AS BIGINT)
     AS n_charset_only
 FROM kept
-"""
+""",
 )
 
 # S10: cld2 code -> alpha-3 (merge_cdxj.py:12-27), non-convertible dropped
-_Q["alpha3_codes"] = """
+_register("alpha3_codes", template="""
 SELECT lang,
        CASE lang WHEN 'en' THEN 'eng' WHEN 'es' THEN 'spa' WHEN 'fr' THEN 'fra'
                  WHEN 'de' THEN 'deu' WHEN 'pt' THEN 'por' WHEN 'it' THEN 'ita'
                  WHEN 'da' THEN 'dan' WHEN 'zh' THEN 'zho' ELSE NULL END AS alpha3,
        CAST(count(*) AS BIGINT) AS n_docs
 FROM documents GROUP BY 1, 2 ORDER BY lang
-"""
+""")
 
 # time rollup: hourly tumbling aggregation over the events stream table
-_Q["events_hourly"] = """
+_register("events_hourly", template="""
 SELECT date_trunc('hour', ts) AS hour_start, event_type,
        CAST(count(*) AS BIGINT) AS n,
        CAST(round(sum(value), 2) AS DOUBLE) AS total_value
 FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type
-"""
+""")
 
 # S3/S4 fast path: native content sniffing (the UDF-free mime classifier)
-_Q["mime_sniff_native"] = """
+_register("mime_sniff_native", template="""
 WITH payloads AS (
   SELECT doc_id,
          CASE WHEN doc_id % 4 = 0 THEN concat('<!DOCTYPE html><p>', text, '</p>')
@@ -496,10 +530,10 @@ classified AS (
 )
 SELECT mime, CAST(count(*) AS BIGINT) AS n_docs
 FROM classified GROUP BY mime ORDER BY mime
-"""
+""")
 
 # rollup: multi-level aggregation over the star schema (relational coverage)
-_Q["orders_rollup"] = """
+_register("orders_rollup", template="""
 SELECT coalesce(o_orderstatus, 'ALL') AS status,
        coalesce(o_orderpriority, 'ALL') AS priority,
        CAST(count(*) AS BIGINT) AS n_orders,
@@ -507,18 +541,19 @@ SELECT coalesce(o_orderstatus, 'ALL') AS status,
 FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 ORDER BY status, priority
-"""
+""")
 
 # --- training-data pipeline: dedup family ------------------------------------
 
-_Q["dedup_exact"] = (
-    "WITH "
+_register(
+    "dedup_exact",
+    template="WITH "
     + CORPUS_CTE
     + """
 SELECT fp, CAST(count(*) AS BIGINT) AS n_dups, CAST(min(doc_id) AS BIGINT) AS keeper
 FROM (SELECT doc_id, md5(lower(text)) AS fp FROM corpus) t
 GROUP BY fp HAVING count(*) > 1 ORDER BY fp
-"""
+""",
 )
 
 # MinHash + LSH: 3-word shingles -> 8 string-min hashes -> 2 bands of 4 ->
@@ -528,8 +563,8 @@ toks AS (
   SELECT doc_id, @SPLIT(text, ' ') AS ws FROM corpus
 ),
 shingles AS (
-  SELECT DISTINCT doc_id, @SLICE AS sh
-  FROM toks @LAT
+  SELECT DISTINCT doc_id, @SLICE3 AS sh
+  FROM toks @LAT3
   WHERE @LEN(ws) >= 3
 ),
 sigs AS (
@@ -564,13 +599,7 @@ verified AS (
 """
 
 
-def _shingle_cte(d: dict) -> str:
-    t = _SHINGLE_CTE.replace("@SLICE", d["SLICE_JOIN"].format(arr="ws", i="i"))
-    t = t.replace("@LAT", d["LAT"]("@LEN(ws) - 2"))
-    return t
-
-
-_Q["dedup_minhash_lsh"] = (
+_DEDUP_MINHASH_LSH_SQL = (
     "WITH "
     + CORPUS_CTE
     + ", @SHINGLES"
@@ -585,8 +614,9 @@ ORDER BY id_a, id_b
 
 # n-gram Jaccard (exhaustive definition over LSH candidates is above; this is
 # the word-set Jaccard on the SAME candidate pairs — a second dedup signal)
-_Q["dedup_ngram_jaccard"] = (
-    "WITH "
+_register(
+    "dedup_ngram_jaccard",
+    template="WITH "
     + CORPUS_CTE
     + ", @SHINGLES"
     + """,
@@ -605,11 +635,11 @@ JOIN wsizes wa ON wa.doc_id = c.id_a
 JOIN wsizes wb ON wb.doc_id = c.id_b
 GROUP BY c.id_a, c.id_b
 ORDER BY c.id_a, c.id_b
-"""
+""",
 )
 
 # SimHash (16-bit) near-dup buckets
-_Q["dedup_simhash"] = (
+_DEDUP_SIMHASH_SQL = (
     "WITH "
     + CORPUS_CTE
     + """,
@@ -649,8 +679,9 @@ FROM sim GROUP BY simhash HAVING count(*) > 1 ORDER BY simhash
 # rides CORPUS_CTE: +1M exact copies share every 10-gram, +2M first-word-
 # dropped copies share all but the head window. Token positions 1-based.
 # Composable module twin: operators/dedup.exact_substring_spans.
-_Q["substring_spans"] = (
-    "WITH "
+_register(
+    "substring_spans",
+    template="WITH "
     + CORPUS_CTE
     + """,
 w AS (SELECT doc_id, @SPLIT(text, ' ') AS ws FROM corpus),
@@ -676,12 +707,12 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(gid AS BIGINT) AS span_id,
        CAST(max(e) AS BIGINT) AS tok_end,
        CAST(max(e) - min(i) + 1 AS BIGINT) AS n_tokens
 FROM grp GROUP BY doc_id, gid ORDER BY doc_id, tok_start
-"""
+""",
 )
 
 # --- text analysis family -----------------------------------------------------
 
-_Q["text_quality"] = """
+_register("text_quality", template="""
 WITH scored AS (
   SELECT source,
          @LEN(@SPLIT(text, ' ')) AS n_tokens,
@@ -696,12 +727,12 @@ SELECT source,
        CAST(round(avg(avg_tok_len), 4) AS DOUBLE) AS avg_token_len,
        CAST(round(avg(distinct_ratio), 4) AS DOUBLE) AS avg_distinct_ratio
 FROM scored GROUP BY source ORDER BY source
-"""
+""")
 
-_Q["token_count_hist"] = """
+_register("token_count_hist", template="""
 SELECT @LEN(@SPLIT(text, ' ')) AS n_tokens, CAST(count(*) AS BIGINT) AS n_docs
 FROM documents GROUP BY @LEN(@SPLIT(text, ' ')) ORDER BY n_tokens
-"""
+""")
 
 # deterministic stratified sampling (per-source budgets, CCNet-style):
 # keep iff the first-3-nibble md5 bucket of the key falls under the
@@ -712,7 +743,7 @@ FROM documents GROUP BY @LEN(@SPLIT(text, ' ')) ORDER BY n_tokens
 # (stratified_sample); tests/test_sampling.py pins module == this
 # statement's rows. Strata absent from the rates table drop (rate 0.0
 # default == inner join).
-_Q["stratified_sample"] = """
+_register("stratified_sample", template="""
 SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.source,
        CAST(@HEXBUCKET AS INT) AS bucket
 FROM documents d
@@ -725,7 +756,7 @@ JOIN (VALUES ('src0', CAST(1.0 AS DOUBLE)),
   ON d.source = rates.source
 WHERE @HEXBUCKET < rate * 4096
 ORDER BY doc_id
-"""
+""")
 
 # temperature-based mixture weighting (XLM-R / mC4): q_s ∝ p_s^0.5 flattens
 # the skewed lang distribution; rate_s = min(1, budget·q_s/n_s) converts the
@@ -743,23 +774,25 @@ scored AS (
   FROM counts
 )"""
 
-_Q["mixture_weights"] = (
-    "WITH "
+_register(
+    "mixture_weights",
+    template="WITH "
     + MIXTURE_CTES
     + """
 SELECT lang, n_docs,
        CAST(round(sp / sum(sp) OVER (), 6) AS DOUBLE) AS q,
        CAST(least(1.0, round(sp / sum(sp) OVER () * 250 / n_docs, 6)) AS DOUBLE) AS rate
 FROM scored ORDER BY lang
-"""
+""",
 )
 
 # ...and the composed selection: mixture rates applied through the same
 # hash-threshold rule (floor quantizes the rounded rate to 1/4096 so the
 # comparison never sits on a cross-engine ulp). Module twin:
 # operators/sampling.temperature_sample.
-_Q["temperature_sample"] = (
-    "WITH "
+_register(
+    "temperature_sample",
+    template="WITH "
     + MIXTURE_CTES
     + """,
 rates AS (
@@ -771,7 +804,7 @@ SELECT CAST(d.doc_id AS BIGINT) AS doc_id, d.lang
 FROM documents d JOIN rates r ON d.lang = r.lang
 WHERE @HEXBUCKET < floor(r.rate * 4096)
 ORDER BY doc_id
-"""
+""",
 )
 
 # GPT-style sequence packing ("concatenate then cut"): per group, docs are
@@ -779,7 +812,7 @@ ORDER BY doc_id
 # tokens; a doc may straddle cuts. Pure prefix-sum arithmetic — one window
 # cumsum + a bounded explode over the chunk range each doc spans. Module
 # twin: operators/packing.pack_chunked (tests/test_packing.py pins rows).
-_Q["pack_chunked"] = """
+_register("pack_chunked", template="""
 WITH toks AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
          CAST(doc_id % 4 AS BIGINT) AS grp,
@@ -807,7 +840,7 @@ SELECT grp, chunk_id, doc_id,
        CAST(least((chunk_id + 1) * 128, before + n_toks)
             - greatest(chunk_id * 128, before) AS BIGINT) AS span_len
 FROM spans ORDER BY grp, chunk_id, doc_id
-"""
+""")
 
 # character-bigram LM perplexity (the CCNet-style fluency gate): train
 # add-one-smoothed bigram counts over the normalized corpus, score every
@@ -848,7 +881,7 @@ scored AS (
   GROUP BY d.doc_id
 )"""
 
-_Q["lm_perplexity"] = (
+_LM_PERPLEXITY_SQL = (
     "WITH "
     + LM_CTES
     + """
@@ -865,7 +898,7 @@ FROM scored ORDER BY doc_id
 # the op's honest shape at oracle scale; the module's approx=True path
 # (approxQuantile thresholds + native CASE) is the 100 TB form. Module:
 # operators/lm.perplexity_buckets.
-_Q["ccnet_buckets"] = (
+_CCNET_BUCKETS_SQL = (
     "WITH "
     + LM_CTES
     + """,
@@ -888,7 +921,7 @@ ORDER BY doc_id
 # finite). Module twin: operators/lm.stupid_backoff (single melted join
 # against the vocabulary-scaled model — never broadcast); this SQL twin
 # takes the five explicit LEFT JOINs instead.
-_Q["lm_backoff"] = """
+_LM_BACKOFF_SQL = """
 WITH norm AS (
   SELECT doc_id,
          trim(regexp_replace(regexp_replace(lower(text), '[^a-z ]', ' '),
@@ -942,7 +975,6 @@ FROM sc GROUP BY doc_id ORDER BY doc_id
 # tripled (duplicate-5gram trigger, top2 stays under threshold), % 13 docs
 # get 40x " click here" boilerplate (top-2gram trigger) — so both drop
 # rules fire on deterministic rows while most docs keep=True.
-GOPHER_BOILER = " click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here click here"
 GOPHER_CTE = """
 gdocs AS (
   SELECT doc_id,
@@ -953,8 +985,9 @@ gdocs AS (
 )
 """
 
-_Q["gopher_repetition"] = (
-    "WITH "
+_register(
+    "gopher_repetition",
+    template="WITH "
     + GOPHER_CTE
     + """,
 w AS (
@@ -988,7 +1021,7 @@ FROM w5
 JOIN a2 ON a2.doc_id = w5.doc_id
 JOIN a5 ON a5.doc_id = w5.doc_id
 ORDER BY 1
-"""
+""",
 )
 
 # training-shard manifest: deterministic shard = md5_bucket(doc_id) % 8,
@@ -996,7 +1029,7 @@ ORDER BY 1
 # content hashes (xor commutes, so the checksum survives Spark's row
 # order while any changed doc flips it). Composable module twin:
 # operators/shards.shard_manifest (+ write_shards for the files).
-_Q["shard_manifest"] = """
+_register("shard_manifest", template="""
 WITH sharded AS (
   SELECT CAST(@SHARDBUCKET % 8 AS INT) AS shard,
          @LEN(@SPLIT(text, ' ')) AS n_toks,
@@ -1007,7 +1040,7 @@ SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(n_toks) AS BIGINT) AS n_tokens,
        CAST(bit_xor(h) AS BIGINT) AS checksum
 FROM sharded GROUP BY shard ORDER BY shard
-"""
+""")
 
 # fastText-shaped hashed-BoW linear classifier scoring (the DCLM /
 # RedPajama quality-classifier stage): score = sigmoid(bias + mean
@@ -1015,7 +1048,7 @@ FROM sharded GROUP BY shard ORDER BY shard
 # formula w(b) = ((b*37) % 101 - 50)/25.0 over the md5 two-nibble bucket;
 # the module twin (operators/classifier.score_documents) takes the same
 # weights as a broadcast dict — tests pin module == this statement.
-_Q["classifier_score"] = """
+_register("classifier_score", template="""
 WITH corpus AS (SELECT doc_id, text FROM documents),
 words AS (
   SELECT doc_id, @EXPLODE_W FROM corpus
@@ -1036,14 +1069,14 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
        CAST(n_words AS BIGINT) AS n_words,
        CAST(round(1.0 / (1.0 + exp(-(0.25 + acc / n_words))), 6) AS DOUBLE) AS score
 FROM sc ORDER BY doc_id
-"""
+""")
 
 # sitemap discovery (RFC 9309 §2.3 + sitemaps.org): Sitemap: directives
 # from planted robots.txt bodies (case-insensitive directive, verbatim URL,
 # second directive for hn%3==0), <loc> extraction from planted XML, ONE
 # bounded index-resolution level for hn%5==0 (the spec's nesting bound).
 # Module twins: frontier/robots.extract_sitemaps + extract_sitemap_locs.
-_Q["sitemap_discovery"] = """
+_register("sitemap_discovery", template="""
 WITH hosts AS (SELECT DISTINCT CAST(doc_id % 50 AS INT) AS hn FROM documents),
 robots AS (
   SELECT hn, @PRINTF('host%02d.example.com', hn) AS host,
@@ -1097,12 +1130,12 @@ SELECT host, loc FROM (
   SELECT host, loc FROM lv1 WHERE NOT is_index
   UNION ALL SELECT host, loc FROM lv2
 ) u ORDER BY host, loc
-"""
+""")
 
 # corpus n-gram heavy hitters (word bigrams, top-20 by (count desc, gram))
 # — the boilerplate-discovery analysis pass. Module twin:
 # operators/quality.top_ngrams.
-_Q["top_ngrams"] = """
+_TOP_NGRAMS_SQL = """
 WITH corpus AS (SELECT doc_id, text FROM documents),
 wsd AS (SELECT doc_id, @SPLIT(text, ' ') AS ws FROM corpus),
 wsd2 AS (SELECT doc_id, ws FROM wsd WHERE @LEN(ws) >= 2),
@@ -1118,7 +1151,7 @@ LIMIT 20
 # log importance weight (round 4, the lm_perplexity float-sum contract),
 # deterministic top-100 selection on (lw desc, doc_id). Module twin:
 # operators/sampling.dsir_weights / dsir_select.
-_Q["dsir_select"] = """
+_DSIR_SELECT_SQL = """
 WITH corpus AS (SELECT doc_id, lang, text FROM documents),
 wsd AS (SELECT doc_id, lang, @SPLIT(text, ' ') AS ws FROM corpus),
 uni AS (SELECT doc_id, lang, @WORDI AS g FROM wsd @LATW),
@@ -1205,8 +1238,9 @@ gq AS (
 )
 """
 
-_Q["gopher_quality"] = (
-    "WITH "
+_register(
+    "gopher_quality",
+    template="WITH "
     + GQUAL_CTE
     + """,
 feat AS (
@@ -1235,7 +1269,7 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, n_words,
         AND symr <= 0.1 AND bulletf <= 0.9 AND ellf <= 0.3
         AND alphaf >= 0.8 AND n_stop >= 2) AS keep
 FROM m ORDER BY doc_id
-"""
+""",
 )
 
 # C4 heuristics (Raffel et al. 2020 §2.2): retain lines ending in terminal
@@ -1275,8 +1309,9 @@ gc4 AS (
 """.replace("@G", C4_GOOD)
 )
 
-_Q["c4_filters"] = (
-    "WITH "
+_register(
+    "c4_filters",
+    template="WITH "
     + GC4_CTE
     + """,
 feat AS (
@@ -1304,15 +1339,16 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, n_lines, n_kept_lines, n_sentences,
        (n_sentences >= 5 AND NOT has_lorem AND NOT has_brace
         AND NOT has_blockword) AS keep
 FROM m ORDER BY doc_id
-"""
+""",
 )
 
 # end-to-end training-data CURATION pipeline (the composition users run):
 # exact dedup (content fingerprint, first-id keeper) -> language gate ->
 # quality gate (length + lexical diversity) -> token accounting, over the
 # planted-duplicates corpus. One statement, fully oracled in both dialects.
-_Q["corpus_curation"] = (
-    "WITH "
+_register(
+    "corpus_curation",
+    template="WITH "
     + CORPUS_CTE
     + """,
 fp AS (
@@ -1343,12 +1379,12 @@ SELECT CAST(floor(n_tokens / 32.0) AS INT) AS token_bucket,
        CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
        CAST(round(avg(distinct_ratio), 4) AS DOUBLE) AS avg_distinct_ratio
 FROM curated GROUP BY 1 ORDER BY token_bucket
-"""
+""",
 )
 
 # PII scrubbing accounting: plant deterministic emails/IPs/phones, count them
 # with the SAME regexes the engine's redact_pii_col uses (functions/text.py)
-_Q["pii_scrub"] = """
+_register("pii_scrub", template="""
 WITH planted AS (
   SELECT doc_id,
          CASE WHEN doc_id % 7 = 0
@@ -1372,12 +1408,12 @@ SELECT CAST(doc_id % 7 AS INT) AS plant_kind,
        CAST(sum(n_ip) AS BIGINT) AS ips,
        CAST(sum(n_phone) AS BIGINT) AS phones
 FROM counts GROUP BY 1 ORDER BY 1
-"""
+""")
 
 # benchmark-contamination check: 8-gram overlap between a held-out benchmark
 # slice and the training corpus (with planted leaks, so the join has known
 # positives); the n-gram equi-join is the shape this runs at 100 TB
-_Q["benchmark_contamination"] = """
+_register("benchmark_contamination", template="""
 WITH bench AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0
 ),
@@ -1403,9 +1439,9 @@ SELECT CAST(count(*) AS BIGINT) AS contaminated_docs,
        CAST(coalesce(sum(n_shared), 0) AS BIGINT) AS shared_8grams,
        CAST(max(n_shared) AS BIGINT) AS max_shared
 FROM hits
-"""
+""")
 
-_Q["lang_id_markers"] = """
+_register("lang_id_markers", template="""
 WITH guessed AS (
   SELECT lang,
          @LEN(@LIST_DISTINCT(@SPLIT(lower(text), ' '))) AS nw,
@@ -1420,9 +1456,9 @@ WITH guessed AS (
 )
 SELECT lang, guess, CAST(count(*) AS BIGINT) AS n_docs
 FROM guessed GROUP BY lang, guess ORDER BY lang, guess
-"""
+""")
 
-_Q["fingerprint_winnow"] = """
+_register("fingerprint_winnow", template="""
 WITH grams AS (
   SELECT doc_id, md5(substr(text, i, 8)) AS h
   FROM documents @LATG
@@ -1434,12 +1470,12 @@ kept AS (
 )
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp, min(h) AS min_fp
 FROM kept GROUP BY doc_id ORDER BY doc_id
-"""
+""", fan=("documents",))
 
 # --- embedding similarity family ----------------------------------------------
 
 # brute-force cosine pairs within label blocks (exact baseline)
-_Q["embedding_cosine_pairs"] = """
+_EMBEDDING_COSINE_PAIRS_SQL = """
 WITH pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, @COSINE(a.embedding, b.embedding) AS sim
   FROM embeddings a JOIN embeddings b
@@ -1452,7 +1488,7 @@ FROM pairs WHERE sim >= 0.35 ORDER BY id_a, id_b
 
 # IVF-style ANN: coarse bucket = argmax of the first 8 dims; top-1 neighbor
 # within bucket (the scale path: bucket prune instead of all-pairs)
-_Q["ann_ivf_top1"] = """
+_ANN_IVF_TOP1_SQL = """
 WITH bucketed AS (
   SELECT vec_id, embedding, @ARGMAX8 AS bucket FROM embeddings
 ),
@@ -1504,7 +1540,7 @@ def _pded_cte(d: dict) -> str:
     return t
 
 
-_Q["paragraph_dedup"] = """
+_PARAGRAPH_DEDUP_SQL = """
 WITH @PDED,
 lined AS (SELECT doc_id, @LINES AS lines FROM pd),
 paras AS (
@@ -1533,7 +1569,7 @@ ORDER BY doc_id
 # any naturally colliding 8-word slices must all disappear. Module twin:
 # operators/dedup.boilerplate_filter (module==SQL parity pinned in
 # tests/test_module_oracle_parity.py).
-_Q["boilerplate_lines"] = """
+_BOILERPLATE_LINES_SQL = """
 WITH @PDED,
 lined AS (SELECT doc_id, @LINES AS lines FROM pd),
 paras AS (
@@ -1561,7 +1597,7 @@ ORDER BY doc_id
 # retrieval scorer for query-targeted corpus selection. ln lacks a
 # cross-engine correct-rounding guarantee, so the contract rounds to 4
 # (the ann twins' discipline). Module twin: operators/quality.bm25_score.
-_Q["bm25_score"] = """
+_BM25_SCORE_SQL = """
 WITH base AS (SELECT doc_id, @SPLIT(text, ' ') AS ws FROM documents),
 dl AS (SELECT doc_id, CAST(@LEN(ws) AS DOUBLE) AS dl FROM base),
 stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
@@ -1592,7 +1628,7 @@ ORDER BY doc_id
 # ROUNDED sim so ordering is engine-stable. Module twin:
 # operators/similarity.hard_negatives (SRP-blocked at scale; exact=True
 # here).
-_Q["hard_negatives"] = """
+_HARD_NEGATIVES_SQL = """
 WITH e AS (
   SELECT vec_id, embedding, vec_id % 7 AS label
   FROM embeddings WHERE vec_id < 300
@@ -1645,7 +1681,7 @@ def _cont_cte(d: dict) -> str:
     return t
 
 
-_Q["containment_pairs"] = """
+_CONTAINMENT_PAIRS_SQL = """
 WITH @CONT,
 wsd AS (SELECT doc_id, @SPLIT(text, ' ') AS ws FROM qc),
 grams AS (
@@ -1675,7 +1711,7 @@ ORDER BY id_a, id_b
 # reconstruction audit. Module twin: operators/pq.sq_roundtrip (params as
 # literals, one projection after a 1-row train agg); this SQL computes the
 # identical arithmetic with the params as joined CTE rows instead.
-_Q["embedding_sq"] = """
+_EMBEDDING_SQ_SQL = """
 WITH emb AS (SELECT vec_id, embedding AS v FROM embeddings),
 vals AS (
   SELECT vec_id, i, CAST(@VECI AS DOUBLE) AS x
@@ -1701,7 +1737,7 @@ FROM q GROUP BY vec_id ORDER BY vec_id
 # Per-doc top-3 tf-idf keywords (r7): weight = tf * ln(N/df), round-4
 # (ln's cross-engine ulp), ties break on the term. Module twin:
 # operators/quality.tfidf_keywords.
-_Q["tfidf_keywords"] = """
+_TFIDF_KEYWORDS_SQL = """
 WITH base AS (SELECT doc_id, @SPLIT(text, ' ') AS ws FROM documents),
 toks AS (SELECT doc_id, @WORDI AS w FROM base @LATW),
 nd AS (SELECT count(*) AS n FROM base),
@@ -1755,6 +1791,10 @@ def _pat_lit(dialect: dict, pat: str) -> str:
     return pat.replace("'", "''")
 
 
+def _pat_str(dialect: dict, pat: str) -> str:
+    return "'" + _pat_lit(dialect, pat) + "'"
+
+
 def _re_count(dialect: dict, expr: str, pat: str) -> str:
     lit = _pat_lit(dialect, pat)
     if dialect is SPARK:
@@ -1785,17 +1825,16 @@ def _md5_int(dialect: dict, hexpr: str, nibbles: int) -> str:
 
 # --- Spark-side physical rewrites (optimization r8) --------------------------
 #
-# The canonical templates in _Q are shared by both dialects and FROZEN on the
+# The canonical templates are shared by both dialects and FROZEN on the
 # DuckDB side (the driver fingerprints oracle_sql() text). Spark, unlike
 # DuckDB, re-executes a CTE's full lineage once per reference (CTEs are
 # inlined; ReuseExchange did not fire on any of these plans — see
 # plans/r08/*_before.txt), so templates that read an exploded CTE several
-# times pay the explode several times. The entries below are SPARK-ONLY
+# times pay the explode several times. The `spark` forms below are SPARK-ONLY
 # rewrites of the same computation with the repetition factored out; each one
 # is bit-equivalent (integer arithmetic, or identical IEEE operation order)
 # and is verified against the unchanged DuckDB oracle by
-# BENCH/sweep_preflight.py. duck_sql_for() never reads this dict.
-_Q_SPARK: dict[str, str] = {}
+# BENCH/sweep_preflight.py. duck_sql_for() never reads them.
 
 # dedup_simhash: the canonical form explodes every distinct (doc, word) 16x
 # (one lateral row per bit) and computes md5(w) anew for every bit — 16
@@ -1805,8 +1844,10 @@ _Q_SPARK: dict[str, str] = {}
 # groupBy(doc_id). Bit b reads nibble b div 4, shift b mod 4 — exactly the
 # canonical hv/shift arithmetic; sums of +-1 integers and the final
 # shiftleft-sum are integer-exact, so rows hash-match the oracle.
-_Q_SPARK["dedup_simhash"] = (
-    "WITH "
+_register(
+    "dedup_simhash",
+    template=_DEDUP_SIMHASH_SQL,
+    spark="WITH "
     + CORPUS_CTE
     + """,
 words AS (
@@ -1841,7 +1882,7 @@ sim AS (
 )
 SELECT simhash, CAST(count(*) AS BIGINT) AS n_docs, CAST(min(doc_id) AS BIGINT) AS keeper
 FROM sim GROUP BY simhash HAVING count(*) > 1 ORDER BY simhash
-"""
+""",
 )
 
 
@@ -1868,7 +1909,10 @@ def _ssq64_spark(a: str) -> str:
 # dot per pair, sim = dot / (nrm_a * nrm_b) — the exact expression the
 # canonical form evaluates (sqrt(ssq_a) * sqrt(ssq_b)), same operation order,
 # bit-identical.
-_Q_SPARK["embedding_cosine_pairs"] = f"""
+_register(
+    "embedding_cosine_pairs",
+    template=_EMBEDDING_COSINE_PAIRS_SQL,
+    spark=f"""
 WITH e AS (
   SELECT vec_id, label, CAST(embedding AS ARRAY<DOUBLE>) AS v,
          sqrt({_ssq64_spark("CAST(embedding AS ARRAY<DOUBLE>)")}) AS nrm
@@ -1883,9 +1927,14 @@ pairs AS (
 SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
        CAST(round(sim, 4) AS DOUBLE) AS sim
 FROM pairs WHERE sim >= 0.35 ORDER BY id_a, id_b
-"""
+""",
+    fan=("embeddings",),
+)
 
-_Q_SPARK["ann_ivf_top1"] = f"""
+_register(
+    "ann_ivf_top1",
+    template=_ANN_IVF_TOP1_SQL,
+    spark=f"""
 WITH bucketed AS (
   SELECT vec_id, @ARGMAX8 AS bucket, CAST(embedding AS ARRAY<DOUBLE>) AS v,
          sqrt({_ssq64_spark("CAST(embedding AS ARRAY<DOUBLE>)")}) AS nrm
@@ -1905,245 +1954,176 @@ ranked AS (
 SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(neighbor_id AS BIGINT) AS neighbor_id,
        CAST(round(sim, 4) AS DOUBLE) AS sim
 FROM ranked WHERE rnk = 1 ORDER BY vec_id
-"""
+""",
+    fan=("embeddings",),
+)
 
-def _render_query(name: str, dialect: dict) -> str:
-    sql = _Q_SPARK[name] if (dialect is SPARK and name in _Q_SPARK) else _Q[name]
-    if "@SHINGLES" in sql:
-        sql = sql.replace("@SHINGLES", _shingle_cte(dialect))
-    if "@N_EMAIL" in sql:
-        from warc_metadata_sidecar_spark.functions.text import (
-            PII_EMAIL,
-            PII_IP,
-            PII_PHONE,
-        )
-
-        # SEQUENTIAL counting in redaction order — the oracle twin of
-        # functions/text.pii_counts_col (a digit run inside an email must
-        # not double-count as a phone)
-        after_email = _re_replace_all(dialect, "text", PII_EMAIL, "<EMAIL>")
-        after_ip = _re_replace_all(dialect, after_email, PII_IP, "<IP>")
-        sql = sql.replace("@N_EMAIL", _re_count(dialect, "text", PII_EMAIL))
-        sql = sql.replace("@N_IP", _re_count(dialect, after_email, PII_IP))
-        sql = sql.replace("@N_PHONE", _re_count(dialect, after_ip, PII_PHONE))
-    if "@GRAM8" in sql:
-        sql = sql.replace("@GRAM8", dialect["SLICE8"])
-        sql = sql.replace("@LAT8", dialect["LAT"]("@LEN(ws) - 7"))
-    if "@EXPLODE_W" in sql:
-        if dialect is SPARK:
-            sql = sql.replace(
-                "SELECT doc_id, @EXPLODE_W FROM corpus",
-                "SELECT doc_id, explode(split(text, ' ')) AS w FROM corpus",
-            )
-        else:
-            sql = sql.replace(
-                "SELECT doc_id, @EXPLODE_W FROM corpus",
-                "SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus",
-            )
-    if "@LAT16" in sql:
-        sql = sql.replace("@LAT16", dialect["LAT"]("16"))
-    if "@LATG" in sql:
-        sql = sql.replace("@LATG", dialect["LAT"]("length(text) - 7"))
-    if "@LATB" in sql:
-        sql = sql.replace("@LATB", dialect["LAT"]("length(t) - 1"))
-    if "@LAT10W" in sql:
-        arrlen = "size(ws)" if dialect is SPARK else "len(ws)"
-        sql = sql.replace("@LAT10W", dialect["LAT"](f"{arrlen} - 9"))
-        if dialect is SPARK:
-            sql = sql.replace("@SLICE10", "concat_ws(' ', slice(ws, i, 10))")
-        else:
-            sql = sql.replace("@SLICE10", "array_to_string(ws[i:i+9], ' ')")
-    if "@LATW" in sql:
-        # dsir_select: unigram lateral over the full word array
-        arrlen = "size(ws)" if dialect is SPARK else "len(ws)"
-        sql = sql.replace("@LATW", dialect["LAT"](arrlen))
-        sql = sql.replace(
-            "@WORDI", "element_at(ws, i)" if dialect is SPARK else "ws[i]"
-        )
-    if "@GRAMBUCKET" in sql:
-        sql = sql.replace("@GRAMBUCKET", _md5_int(dialect, "md5(g)", 2))
-    if "@SMPAT" in sql:
-        # sitemap_discovery: the Sitemap: directive line pattern
-        sql = sql.replace(
-            "@SMPAT",
-            "'" + _pat_lit(dialect, r"(?i)^\s*sitemap\s*:\s*(\S+)\s*$") + "'",
-        )
-    if "@LOCS" in sql:
-        pat = "'" + _pat_lit(dialect, r"<loc>\s*([^<]+?)\s*</loc>") + "'"
-        sql = sql.replace("@LOCS", f"regexp_extract_all(body, {pat}, 1)")
-    if "@LAT2W" in sql:
-        arrlen = "size(ws)" if dialect is SPARK else "len(ws)"
-        sql = sql.replace("@LAT2W", dialect["LAT"](f"{arrlen} - 1"))
-        sql = sql.replace("@LAT5W", dialect["LAT"](f"{arrlen} - 4"))
-        if dialect is SPARK:
-            sql = sql.replace("@SLICE2", "concat_ws(' ', slice(ws, i, 2))")
-            sql = sql.replace("@SLICE5", "concat_ws(' ', slice(ws, i, 5))")
-        else:
-            sql = sql.replace("@SLICE2", "array_to_string(ws[i:i+1], ' ')")
-            sql = sql.replace("@SLICE5", "array_to_string(ws[i:i+4], ' ')")
-    if "@LATV" in sql:
-        # embedding_sq: per-dimension lateral over the vector
-        arrlen = "size(v)" if dialect is SPARK else "len(v)"
-        sql = sql.replace("@LATV", dialect["LAT"](arrlen))
-        sql = sql.replace("@VECI", "element_at(v, i)" if dialect is SPARK else "v[i]")
-    if "@BI23" in sql:
-        # lm_backoff: the trigram position's backoff keys (w2 w3), w2, w3
-        if dialect is SPARK:
-            sql = sql.replace("@BI23", "concat_ws(' ', slice(ws, i + 1, 2))")
-            sql = sql.replace("@W2", "element_at(ws, i + 1)")
-            sql = sql.replace("@W3", "element_at(ws, i + 2)")
-        else:
-            sql = sql.replace("@BI23", "array_to_string(ws[i+1:i+2], ' ')")
-            sql = sql.replace("@W2", "ws[i+1]")
-            sql = sql.replace("@W3", "ws[i+2]")
-    if "@SHIFTR" in sql:
-        sql = sql.replace("@SHIFTR", dialect["SHIFTRIGHT"].format(v="hv", b="CAST((i - 1) % 4 AS INT)"))
-    if "@SHIFTL" in sql:
-        sql = sql.replace("@SHIFTL", dialect["SHIFTLEFT"].format(b="CAST(b AS INT)"))
-    if "@TS14" in sql:
-        ts14 = (
-            "date_format(ts, 'yyyyMMddHHmmss')"
-            if dialect is SPARK
-            else "strftime(ts, '%Y%m%d%H%M%S')"
-        )
-        sql = sql.replace("@TS14", ts14)
-    if "@REV_HOST" in sql:
-        rev = (
-            "array_join(reverse(split(host, '\\\\.')), ',')"
-            if dialect is SPARK
-            else "array_to_string(list_reverse(string_split(host, '.')), ',')"
-        )
-        sql = sql.replace("@REV_HOST", rev)
-    if "@EPOCH_TS" in sql:
-        sql = sql.replace("@EPOCH_TS", dialect["EPOCH"].format(t="ts"))
-        sql = sql.replace("@EPOCH_PREV", dialect["EPOCH"].format(t="prev_ts"))
-    if "@COSINE" in sql:
-        cos = _COSINE_SPARK if dialect is SPARK else _COSINE_DUCK
-        # expand @COSINE(x, y)
-        import re
-
-        sql = re.sub(
-            r"@COSINE\(([^,]+), ([^)]+)\)",
-            lambda m: cos.format(a=m.group(1), b=m.group(2)),
-            sql,
-        )
-    if "@ARGMAX8" in sql:
-        sql = sql.replace("@ARGMAX8", _ARGMAX8_SPARK if dialect is SPARK else _ARGMAX8_DUCK)
-    if "@LATPACK" in sql:
-        sql = sql.replace("@LATPACK", dialect["LAT"]("k1 - k0 + 1"))
-    if "@PDED" in sql:
-        sql = sql.replace("@PDED", _pded_cte(dialect))
-    if "@CONT" in sql:
-        sql = sql.replace("@CONT", _cont_cte(dialect))
-    if "@SLICE3" in sql:
-        sql = sql.replace("@SLICE3", dialect["SLICE_JOIN"].format(arr="ws", i="i"))
-        sql = sql.replace("@LAT3", dialect["LAT"]("@LEN(ws) - 2"))
-    if "@LINEI" in sql:
-        # 1-based element access into the split-lines array
-        sql = sql.replace(
-            "@LINEI", "element_at(lines, i)" if dialect is SPARK else "lines[i]"
-        )
-    if "@LATL" in sql:
-        sql = sql.replace("@LATL", dialect["LAT"]("@LEN(lines)"))
-    if "@AGGLINES" in sql:
-        # order-preserving reassembly of kept paragraphs
-        sql = sql.replace(
-            "@AGGLINES",
-            "array_join(transform(array_sort(collect_list(struct(idx, para))),"
-            " s -> s.para), char(10))"
-            if dialect is SPARK
-            else "string_agg(para, chr(10) ORDER BY idx)",
-        )
-    if "@LINES" in sql:
-        sql = sql.replace(
-            "@LINES",
-            "split(text, '\\\\n')" if dialect is SPARK else "string_split(text, chr(10))",
-        )
-    if "@KEPTLINES" in sql:
-        # c4_filters: the line-retention lambda (terminal punctuation,
-        # >=3 words, no 'javascript') and the kept-lines join
-        if dialect is SPARK:
-            sql = sql.replace(
-                "@KEPTLINES",
-                "filter(lines, l -> (l like '%.' or l like '%!' or l like '%?' "
-                "or l like '%\"') and size(split(l, ' ')) >= 3 "
-                "and not lower(l) like '%javascript%')",
-            )
-            sql = sql.replace("@JOINKEPT", "array_join(kept, ' ')")
-        else:
-            sql = sql.replace(
-                "@KEPTLINES",
-                "list_filter(lines, l -> (l LIKE '%.' OR l LIKE '%!' OR l LIKE '%?' "
-                "OR l LIKE '%\"') AND len(string_split(l, ' ')) >= 3 "
-                "AND NOT lower(l) LIKE '%javascript%')",
-            )
-            sql = sql.replace("@JOINKEPT", "array_to_string(kept, ' ')")
-    if "@SPLITWS" in sql:
-        # gopher_quality: whitespace-regex words, newline lines, lambda
-        # filters over both, and the 8-stop-word membership sum
-        stop = ("the", "be", "to", "of", "and", "that", "have", "with")
-        if dialect is SPARK:
-            contains = "array_contains(ws, '{w}')"
-            sql = sql.replace("@SPLITWS", "split(text, '\\\\s+')")
-            sql = sql.replace("@NOWS", "regexp_replace(text, '\\\\s', '')")
-            sql = sql.replace(
-                "@NBULLET", "size(filter(lines, l -> l like '- %' or l like '* %'))"
-            )
-            sql = sql.replace("@NELL", "size(filter(lines, l -> l like '%...'))")
-            sql = sql.replace(
-                "@NALPHA", "size(filter(ws, w -> w rlike '[a-zA-Z]'))"
-            )
-            sql = sql.replace(
-                "@N_ELLIPSIS", "size(regexp_extract_all(text, '\\\\.\\\\.\\\\.', 0))"
-            )
-        else:
-            contains = "list_contains(ws, '{w}')"
-            sql = sql.replace("@SPLITWS", "string_split_regex(text, '\\s+')")
-            sql = sql.replace("@NOWS", "regexp_replace(text, '\\s', '', 'g')")
-            sql = sql.replace(
-                "@NBULLET",
-                "len(list_filter(lines, l -> l LIKE '- %' OR l LIKE '* %'))",
-            )
-            sql = sql.replace("@NELL", "len(list_filter(lines, l -> l LIKE '%...'))")
-            sql = sql.replace(
-                "@NALPHA", "len(list_filter(ws, w -> regexp_matches(w, '[a-zA-Z]')))"
-            )
-            sql = sql.replace(
-                "@N_ELLIPSIS", "len(regexp_extract_all(text, '\\.\\.\\.'))"
-            )
-        nstop = " + ".join(
-            f"(CASE WHEN {contains.format(w=w)} THEN 1 ELSE 0 END)" for w in stop
-        )
-        sql = sql.replace("@NSTOP", nstop)
-    if "@WORDBUCKET" in sql:
-        # classifier_score: token -> 0..255 md5 two-nibble feature bucket
-        sql = sql.replace("@WORDBUCKET", _md5_int(dialect, "md5(w)", 2))
-    if "@DOCHASH" in sql:
-        # shard_manifest: 8-nibble (32-bit) content hash for the
-        # order-independent bit_xor shard checksum
-        sql = sql.replace("@DOCHASH", _md5_int(dialect, "md5(text)", 8))
-    if "@SHARDBUCKET" in sql:
-        sql = sql.replace(
-            "@SHARDBUCKET", _md5_int(dialect, "md5(CAST(d.doc_id AS STRING))", 3)
-        )
-    if "@HEXBUCKET" in sql:
-        # first 3 md5 hex nibbles as int 0..4095 — operators/sampling.py's
-        # hash_bucket
-        sql = sql.replace(
-            "@HEXBUCKET", _md5_int(dialect, "md5(CAST(d.doc_id AS STRING))", 3)
-        )
-    return _render(sql, dialect)
+def _pii_count(d: dict, i: int) -> str:
+    """Matches of the i-th PII pattern in `text` after redacting the ones
+    before it: SEQUENTIAL counting in redaction order, the oracle twin of
+    functions/text.pii_counts_col (a digit run inside an email must not
+    double-count as a phone)."""
+    pats = ((PII_EMAIL, "<EMAIL>"), (PII_IP, "<IP>"), (PII_PHONE, ""))
+    expr = "text"
+    for pat, repl in pats[:i]:
+        expr = _re_replace_all(d, expr, pat, repl)
+    return _re_count(d, expr, pats[i][0])
 
 
-ORACLE_QUERY_NAMES = list(_Q.keys())
+def _cosine(form: str) -> Callable[[str], str]:
+    """Expands every @COSINE(a, b) into `form` over a and b."""
+    return lambda sql: re.sub(
+        r"@COSINE\(([^,]+), ([^)]+)\)",
+        lambda m: form.format(a=m.group(1), b=m.group(2)),
+        sql,
+    )
+
+
+# gopher_quality: count of the 8 stop words present in `ws`
+_STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+_NSTOP = " + ".join(
+    f"(CASE WHEN {{c}}(ws, '{w}') THEN 1 ELSE 0 END)" for w in _STOP_WORDS
+)
+
+# (token, Spark SQL, DuckDB SQL) in replacement order. The order matters
+# where a replacement carries another token or one token is a prefix of
+# another: @SHINGLES, @PDED and @CONT insert CTEs with later tokens, the
+# @LAT8 / @LAT3 / @LATL laterals emit @LEN, and @SPLITWS comes before its
+# prefix @SPLIT.
+_TOKENS = (
+    ("@SHINGLES", _SHINGLE_CTE, _SHINGLE_CTE),
+    ("@N_EMAIL", *_both(_pii_count, 0)),
+    ("@N_IP", *_both(_pii_count, 1)),
+    ("@N_PHONE", *_both(_pii_count, 2)),
+    ("@GRAM8", "concat_ws(' ', slice(ws, i, 8))", "array_to_string(ws[i:i+7], ' ')"),
+    ("@LAT8", *_both(_lat, "@LEN(ws) - 7")),
+    ("@EXPLODE_W", "explode(split(text, ' ')) AS w", "unnest(string_split(text, ' ')) AS w"),
+    ("@LAT16", *_both(_lat, "16")),
+    ("@LATG", *_both(_lat, "length(text) - 7")),
+    ("@LATB", *_both(_lat, "length(t) - 1")),
+    ("@LAT10W", _lat(SPARK, "size(ws) - 9"), _lat(DUCK, "len(ws) - 9")),
+    ("@SLICE10", "concat_ws(' ', slice(ws, i, 10))", "array_to_string(ws[i:i+9], ' ')"),
+    # dsir_select: unigram lateral over the full word array
+    ("@LATW", _lat(SPARK, "size(ws)"), _lat(DUCK, "len(ws)")),
+    ("@WORDI", "element_at(ws, i)", "ws[i]"),
+    ("@GRAMBUCKET", *_both(_md5_int, "md5(g)", 2)),
+    # sitemap_discovery: the Sitemap: directive line pattern
+    ("@SMPAT", *_both(_pat_str, r"(?i)^\s*sitemap\s*:\s*(\S+)\s*$")),
+    ("@LOCS", *(
+        f"regexp_extract_all(body, {pat}, 1)"
+        for pat in _both(_pat_str, r"<loc>\s*([^<]+?)\s*</loc>")
+    )),
+    ("@LAT2W", _lat(SPARK, "size(ws) - 1"), _lat(DUCK, "len(ws) - 1")),
+    ("@LAT5W", _lat(SPARK, "size(ws) - 4"), _lat(DUCK, "len(ws) - 4")),
+    ("@SLICE2", "concat_ws(' ', slice(ws, i, 2))", "array_to_string(ws[i:i+1], ' ')"),
+    ("@SLICE5", "concat_ws(' ', slice(ws, i, 5))", "array_to_string(ws[i:i+4], ' ')"),
+    # embedding_sq: per-dimension lateral over the vector
+    ("@LATV", _lat(SPARK, "size(v)"), _lat(DUCK, "len(v)")),
+    ("@VECI", "element_at(v, i)", "v[i]"),
+    # lm_backoff: the trigram position's backoff keys (w2 w3), w2, w3
+    ("@BI23", "concat_ws(' ', slice(ws, i + 1, 2))", "array_to_string(ws[i+1:i+2], ' ')"),
+    ("@W2", "element_at(ws, i + 1)", "ws[i+1]"),
+    ("@W3", "element_at(ws, i + 2)", "ws[i+2]"),
+    ("@SHIFTR", "shiftright(hv, CAST((i - 1) % 4 AS INT))", "(hv >> CAST((i - 1) % 4 AS INT))"),
+    ("@SHIFTL", "shiftleft(1, CAST(b AS INT))", "(CAST(1 AS BIGINT) << CAST(b AS INT))"),
+    ("@TS14", "date_format(ts, 'yyyyMMddHHmmss')", "strftime(ts, '%Y%m%d%H%M%S')"),
+    (
+        "@REV_HOST",
+        "array_join(reverse(split(host, '\\\\.')), ',')",
+        "array_to_string(list_reverse(string_split(host, '.')), ',')",
+    ),
+    ("@EPOCH_TS", "unix_timestamp(ts)", "epoch(ts)"),
+    ("@EPOCH_PREV", "unix_timestamp(prev_ts)", "epoch(prev_ts)"),
+    ("@COSINE", _cosine(_COSINE_SPARK), _cosine(_COSINE_DUCK)),
+    ("@ARGMAX8", _ARGMAX8_SPARK, _ARGMAX8_DUCK),
+    ("@LATPACK", *_both(_lat, "k1 - k0 + 1")),
+    ("@PDED", *_both(_pded_cte)),
+    ("@CONT", *_both(_cont_cte)),
+    ("@SLICE3", "concat_ws(' ', slice(ws, i, 3))", "array_to_string(ws[i:i+2], ' ')"),
+    ("@LAT3", *_both(_lat, "@LEN(ws) - 2")),
+    # 1-based element access into the split-lines array
+    ("@LINEI", "element_at(lines, i)", "lines[i]"),
+    ("@LATL", *_both(_lat, "@LEN(lines)")),
+    # order-preserving reassembly of kept paragraphs
+    (
+        "@AGGLINES",
+        "array_join(transform(array_sort(collect_list(struct(idx, para))),"
+        " s -> s.para), char(10))",
+        "string_agg(para, chr(10) ORDER BY idx)",
+    ),
+    ("@LINES", "split(text, '\\\\n')", "string_split(text, chr(10))"),
+    # c4_filters: the line-retention lambda (terminal punctuation, >=3
+    # words, no 'javascript') and the kept-lines join
+    (
+        "@KEPTLINES",
+        "filter(lines, l -> (l like '%.' or l like '%!' or l like '%?' "
+        "or l like '%\"') and size(split(l, ' ')) >= 3 "
+        "and not lower(l) like '%javascript%')",
+        "list_filter(lines, l -> (l LIKE '%.' OR l LIKE '%!' OR l LIKE '%?' "
+        "OR l LIKE '%\"') AND len(string_split(l, ' ')) >= 3 "
+        "AND NOT lower(l) LIKE '%javascript%')",
+    ),
+    ("@JOINKEPT", "array_join(kept, ' ')", "array_to_string(kept, ' ')"),
+    # gopher_quality: whitespace-regex words, newline lines, lambda filters
+    # over both, and the 8-stop-word membership sum
+    ("@SPLITWS", "split(text, '\\\\s+')", "string_split_regex(text, '\\s+')"),
+    ("@NOWS", "regexp_replace(text, '\\\\s', '')", "regexp_replace(text, '\\s', '', 'g')"),
+    (
+        "@NBULLET",
+        "size(filter(lines, l -> l like '- %' or l like '* %'))",
+        "len(list_filter(lines, l -> l LIKE '- %' OR l LIKE '* %'))",
+    ),
+    (
+        "@NELL",
+        "size(filter(lines, l -> l like '%...'))",
+        "len(list_filter(lines, l -> l LIKE '%...'))",
+    ),
+    (
+        "@NALPHA",
+        "size(filter(ws, w -> w rlike '[a-zA-Z]'))",
+        "len(list_filter(ws, w -> regexp_matches(w, '[a-zA-Z]')))",
+    ),
+    (
+        "@N_ELLIPSIS",
+        "size(regexp_extract_all(text, '\\\\.\\\\.\\\\.', 0))",
+        "len(regexp_extract_all(text, '\\.\\.\\.'))",
+    ),
+    ("@NSTOP", _NSTOP.format(c="array_contains"), _NSTOP.format(c="list_contains")),
+    # classifier_score: token -> 0..255 md5 two-nibble feature bucket
+    ("@WORDBUCKET", *_both(_md5_int, "md5(w)", 2)),
+    # shard_manifest: 8-nibble (32-bit) content hash for the
+    # order-independent bit_xor shard checksum
+    ("@DOCHASH", *_both(_md5_int, "md5(text)", 8)),
+    ("@SHARDBUCKET", *_both(_md5_int, "md5(CAST(d.doc_id AS STRING))", 3)),
+    # first 3 md5 hex nibbles as int 0..4095 — operators/sampling.py's
+    # hash_bucket
+    ("@HEXBUCKET", *_both(_md5_int, "md5(CAST(d.doc_id AS STRING))", 3)),
+    ("@PRINTF", "format_string", "printf"),
+    ("@SPLIT", "split", "string_split"),  # literal single-space delimiter in all uses
+    ("@LIST_DISTINCT", "array_distinct", "list_distinct"),
+    ("@LEN", "size", "len"),
+    ("@STRPOS", "instr", "strpos"),
+    ("@ANTI", "LEFT ANTI JOIN", "ANTI JOIN"),
+    ("@CHR10", "char(10)", "chr(10)"),
+)
+SPARK.update((tok, rep) for tok, rep, _ in _TOKENS)
+DUCK.update((tok, rep) for tok, _, rep in _TOKENS)
+
+
+def _templated(name: str) -> Query:
+    q = _QUERIES[name]
+    if q.template is None:
+        raise KeyError(f"driver query {name!r} has no template")
+    return q
 
 
 def spark_sql_for(name: str) -> str:
-    return _render_query(name, SPARK)
+    q = _templated(name)
+    return _render(q.spark or q.template, SPARK)
 
 
 def duck_sql_for(name: str) -> str:
-    return _render_query(name, DUCK)
+    return _render(_templated(name).template, DUCK)
 
 
 # --- non-SQL-expressible queries (pandas-UDF pipelines; rows-only check) -----
@@ -2211,9 +2191,7 @@ def _flagship_twin(sf_dir: str | None = None) -> tuple[list[dict], dict]:
         _detect_one,
     )
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
@@ -2326,6 +2304,11 @@ ORDER BY doc_id
 """
 
 
+# flagship pipeline + counters vs the sequential per-record twin (the
+# reference's own loop shape) rendered as VALUES
+_register("flagship_sidecar", engine=flagship_sidecar, oracle=_flagship_sidecar_oracle_sql)
+
+
 def _flagship_counters_oracle_sql() -> str:
     _, c = _flagship_twin()
     return (
@@ -2344,6 +2327,9 @@ def flagship_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = engine_documents_from_driver_tables(spark, sf_dir)
     return sidecar_counters(docs)
+
+
+_register("flagship_counters", engine=flagship_counters, oracle=_flagship_counters_oracle_sql)
 
 
 def url_seen_shardjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2369,6 +2355,12 @@ def url_seen_shardjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_new"))
         .orderBy("host")
     )
+
+
+# the sharded-filter path must equal the exact anti-join — same oracle;
+# so must the bucketed-layout anti-join (plan changes, rows don't)
+_register("url_seen_sharded", engine=url_seen_shardjoin, oracle="url_seen_antijoin")
+_register("url_seen_shardjoin", engine=url_seen_shardjoin, oracle="url_seen_antijoin")
 
 
 def url_seen_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2415,6 +2407,9 @@ def url_seen_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+_register("url_seen_bucketed", engine=url_seen_bucketed, oracle="url_seen_antijoin")
 
 
 def ann_ivf_centroid_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2515,8 +2510,10 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM labels ORDER BY doc_id
 """
     )
-    body = body.replace("@SHINGLES", _shingle_cte(DUCK))
     return _render(body, DUCK)
+
+
+_register("dedup_clusters", engine=dedup_clusters, oracle=_dedup_clusters_oracle_sql)
 
 
 # --- sequential twins for the two approximate-ANN paths (VERDICT r4 #1) ------
@@ -2553,9 +2550,7 @@ def _norm_py(v: list[float]) -> float:
 def _load_embeddings(sf_dir: str | None = None) -> list[tuple[int, list[float]]]:
     import duckdb
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM read_parquet('{sf_dir}/embeddings.parquet') "
         "ORDER BY vec_id"
@@ -2672,6 +2667,14 @@ ORDER BY vec_id
 """
 
 
+# approximate-ANN path vs its sequential Python twin rendered as VALUES
+_register(
+    "ann_ivf_centroid_top1",
+    engine=ann_ivf_centroid_top1,
+    oracle=_ann_ivf_centroid_oracle_sql,
+)
+
+
 def _dedup_cosine_srp_twin(sf_dir: str | None = None) -> list[tuple[int, int, float]]:
     """Sequential twin of dedup_cosine_srp: the same planted corpus, the
     same literal md5-derived hyperplanes (srp_hyperplanes IS the shared
@@ -2723,6 +2726,10 @@ ORDER BY id_a, id_b
 """
 
 
+# approximate-ANN path vs its sequential Python twin rendered as VALUES
+_register("dedup_cosine_srp", engine=dedup_cosine_srp, oracle=_dedup_cosine_srp_oracle_sql)
+
+
 def top_ngrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram heavy-hitter MODULE path — the TakeOrderedAndProject plan —
     vs the dual-dialect SQL twin's ORDER BY/LIMIT formulation."""
@@ -2731,6 +2738,9 @@ def top_ngrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return top_ngrams(docs, n=2, k=20)
+
+
+_register("top_ngrams", template=_TOP_NGRAMS_SQL, engine=top_ngrams_q)
 
 
 def paragraph_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2758,6 +2768,9 @@ def paragraph_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_register("paragraph_dedup", template=_PARAGRAPH_DEDUP_SQL, engine=paragraph_dedup_q)
+
+
 def boilerplate_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate-removal MODULE path over the planted-paragraph fixture —
     same rows as the dual-dialect SQL twin, planned as the operator's
@@ -2783,6 +2796,9 @@ def boilerplate_lines_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_register("boilerplate_lines", template=_BOILERPLATE_LINES_SQL, engine=boilerplate_lines_q)
+
+
 def bm25_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 MODULE path (operators/quality.bm25_score, query =
     the/table/data) — same rows as the dual-dialect SQL twin, planned as
@@ -2802,6 +2818,9 @@ def bm25_score_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
+
+
+_register("bm25_score", template=_BM25_SCORE_SQL, engine=bm25_score_q)
 
 
 def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2827,6 +2846,9 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("vec_id")
     )
+
+
+_register("hard_negatives", template=_HARD_NEGATIVES_SQL, engine=hard_negatives_q)
 
 
 def pagerank_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2861,9 +2883,7 @@ def _pagerank_twin(sf_dir: str | None = None) -> list[tuple[int, float]]:
     for per-dst contributions and dangling mass — bit-identical doubles."""
     import duckdb
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     ids = [
         int(r[0])
         for r in duckdb.sql(
@@ -2912,6 +2932,11 @@ def _pagerank_oracle_sql(sf_dir: str | None = None) -> str:
     )
 
 
+# PageRank over the synthetic host graph vs the bit-exact sequential
+# twin rendered as VALUES (sorted-fold arithmetic on both sides)
+_register("pagerank_hosts", engine=pagerank_hosts, oracle=_pagerank_oracle_sql)
+
+
 def hits_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs/authorities over the synthetic host graph
     (frontier/graph.hits, r7): edges derived deterministically from
@@ -2947,9 +2972,7 @@ def _hits_twin(sf_dir: str | None = None) -> list[tuple[int, float, float]]:
     bit-identical to frontier/graph.hits(exact=True)."""
     import duckdb
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     ids = [
         int(r[0])
         for r in duckdb.sql(
@@ -2999,6 +3022,9 @@ def _hits_oracle_sql(sf_dir: str | None = None) -> str:
         f"FROM (VALUES\n    {values}) AS t(host, hub, authority)\n"
         "ORDER BY host"
     )
+
+
+_register("hits_hosts", engine=hits_hosts, oracle=_hits_oracle_sql)
 
 
 # URL-blocklist fixture: five URL shapes from doc_id — clean hosts, a
@@ -3093,6 +3119,9 @@ ORDER BY doc_id
 """
 
 
+_register("url_blocklist", engine=url_blocklist_q, oracle=_url_blocklist_oracle_sql)
+
+
 def authority_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-authority-boosted frontier scheduling (r7): the OPIC/
     PageRank-prior composition real schedulers run — pagerank over the
@@ -3170,6 +3199,9 @@ SELECT host, url, CAST(rank AS DOUBLE) AS rank,
 FROM ranked WHERE rnk <= 2
 ORDER BY host, rnk
 """
+
+
+_register("authority_schedule", engine=authority_schedule_q, oracle=_authority_schedule_oracle_sql)
 
 
 # paragraph fixture for language_mix: para 1 always English, para 2
@@ -3266,6 +3298,9 @@ ORDER BY doc_id
 """
 
 
+_register("language_mix", engine=language_mix_q, oracle=_language_mix_oracle_sql)
+
+
 def adaptive_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language adaptive quality thresholds (operators/quality.
     adaptive_quality_gate, exact-percentile oracle shape) over a
@@ -3310,6 +3345,9 @@ SELECT CAST(s.doc_id AS BIGINT) AS doc_id, s.lang,
 FROM scored s LEFT JOIN thr t ON s.lang = t.lang
 ORDER BY doc_id
 """
+
+
+_register("adaptive_quality", engine=adaptive_quality_q, oracle=_adaptive_quality_oracle_sql)
 
 
 _CMS_PROBES = ("table", "row", "key", "spark", "zz-absent-token")
@@ -3380,6 +3418,9 @@ ORDER BY e.token
 """
 
 
+_register("cms_counts", engine=cms_counts_q, oracle=_cms_counts_oracle_sql)
+
+
 def pmi_collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI collocation mining (operators/quality.pmi_collocations) over
     the documents token stream: top 25 adjacent pairs with support >= 5
@@ -3425,6 +3466,9 @@ ORDER BY pmi DESC, w1, w2 LIMIT 25
 """
 
 
+_register("pmi_collocations", engine=pmi_collocations_q, oracle=_pmi_collocations_oracle_sql)
+
+
 def mirror_hosts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mirror-site detection (frontier/graph.mirror_groups) over a
     planted capture fixture: hosts m0-m2 share one digest pool, m3-m4
@@ -3463,6 +3507,9 @@ FROM (VALUES
 ) AS t(host, group_id, group_size)
 ORDER BY host
 """
+
+
+_register("mirror_hosts", engine=mirror_hosts_q, oracle=_mirror_hosts_oracle_sql)
 
 
 # feed fixture: even docs serve RSS (item/link text form, one absolute +
@@ -3528,6 +3575,9 @@ expected AS (
 SELECT feed_url, url, feed_kind FROM expected
 ORDER BY feed_url, url, feed_kind
 """
+
+
+_register("feed_items", engine=feed_items_q, oracle=_feed_items_oracle_sql)
 
 
 _LM_DOCBG_SQL = """
@@ -3605,6 +3655,9 @@ FROM scored ORDER BY doc_id
     )
 
 
+_register("lm_perplexity", template=_LM_PERPLEXITY_SQL, engine=lm_perplexity_q)
+
+
 def ccnet_buckets_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-side physical form of ccnet_buckets (oracle unchanged)."""
     _lm_docbg_view(spark, sf_dir)
@@ -3623,6 +3676,9 @@ FROM (SELECT *, ntile(3) OVER (ORDER BY bits_per_char, doc_id) AS nt FROM final)
 ORDER BY doc_id
 """
     )
+
+
+_register("ccnet_buckets", template=_CCNET_BUCKETS_SQL, engine=ccnet_buckets_q)
 
 
 def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3696,6 +3752,9 @@ ORDER BY id_a, id_b"""
     )
 
 
+_register("dedup_minhash_lsh", template=_DEDUP_MINHASH_LSH_SQL, engine=dedup_minhash_lsh_q)
+
+
 def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment MODULE path over the planted quote-inclusion fixture —
     same rows as the dual-dialect SQL twin, planned as the operator's
@@ -3717,6 +3776,9 @@ def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("id_a", "id_b")
     )
+
+
+_register("containment_pairs", template=_CONTAINMENT_PAIRS_SQL, engine=containment_pairs_q)
 
 
 def tfidf_keywords_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3741,6 +3803,9 @@ def tfidf_keywords_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_register("tfidf_keywords", template=_TFIDF_KEYWORDS_SQL, engine=tfidf_keywords_q)
+
+
 def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR module path (operators/sampling.dsir_select, target=lang='en',
     k=100) — same rows as the dual-dialect SQL twin, but planned as
@@ -3757,6 +3822,12 @@ def dsir_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("doc_id", F.col("doc_id").cast("long"))
         .orderBy("doc_id")
     )
+
+
+# engine side = the MODULE (TakeOrdered top-k + broadcast membership), not
+# the SQL twin's global row_number window — the oracle stays the dual-dialect
+# SQL, so the comparison is module-vs-independent-SQL
+_register("dsir_select", template=_DSIR_SELECT_SQL, engine=dsir_select_q)
 
 
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3865,6 +3936,10 @@ ORDER BY vec_id
 """
 
 
+# SemDeDup (cluster + keep-lowest-centroid-sim) vs its sequential twin
+_register("semantic_dedup", engine=semantic_dedup_q, oracle=_semantic_dedup_oracle_sql)
+
+
 def classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed hashed-BoW classifier TRAINING (label: lang='en'),
     3 full-batch iterations with the algebraic fast-sigmoid surrogate.
@@ -3896,9 +3971,7 @@ def _classifier_train_twin(sf_dir: str | None = None) -> list[tuple[int, float]]
     import duckdb
     import hashlib
 
-    sf = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf = _oracle_sf_dir(sf_dir)
     raw = duckdb.sql(
         f"SELECT doc_id, lang, text FROM read_parquet('{sf}/documents.parquet') "
         "ORDER BY doc_id"
@@ -3961,6 +4034,10 @@ FROM (VALUES
 ) AS t(bucket, weight)
 ORDER BY bucket
 """
+
+
+# distributed classifier training vs the bit-exact sequential re-train
+_register("classifier_train", engine=classifier_train, oracle=_classifier_train_oracle_sql)
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4113,6 +4190,13 @@ ORDER BY media_ref
     )
 
 
+_register(
+    "multimodal_probe_meta",
+    engine=multimodal_probe_meta,
+    oracle=_multimodal_probe_meta_oracle_sql,
+)
+
+
 def video_frame_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe-driven frame sampling (operators/multimodal.probe_frame_plan,
     r7): durations come from the REAL MP4 mvhd / Matroska Duration walks
@@ -4146,6 +4230,9 @@ SELECT media_ref, fmt, CAST(width AS INT) AS width,
 FROM frames
 ORDER BY media_ref, frame_ms
 """
+
+
+_register("video_frame_plan", engine=video_frame_plan_q, oracle=_video_frame_plan_oracle_sql)
 
 
 def _multimodal_decode_real_oracle_sql() -> str:
@@ -4298,6 +4385,13 @@ ORDER BY r.media_ref
 """
 
 
+_register(
+    "multimodal_decode_real",
+    engine=multimodal_decode_real,
+    oracle=_multimodal_decode_real_oracle_sql,
+)
+
+
 def _multimodal_oracle_sql() -> str:
     """DuckDB twin of multimodal_features: the same blobs from hex literals,
     n_bytes via octet_length, mime via magic-prefix compare on hex(bytes),
@@ -4336,6 +4430,9 @@ SELECT media_ref,
             END AS n_frames
 FROM media ORDER BY media_ref
 """
+
+
+_register("multimodal_features", engine=multimodal_features, oracle=_multimodal_oracle_sql)
 
 
 def image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4437,6 +4534,10 @@ ORDER BY media_ref
 """
 
 
+# box-mean thumbnail pixels vs SUM // COUNT closed-form SQL
+_register("image_resize", engine=image_resize, oracle=_image_resize_oracle_sql)
+
+
 def trap_flags_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-trap heuristics (frontier/traps.py) over planted URL shapes:
     doc_id % 10 routes each doc to a normal page URL, a /cal/N/cal/N/
@@ -4517,6 +4618,10 @@ FROM calc ORDER BY url
 """
 
 
+# zero-shuffle HOF trap signals vs DuckDB list-lambda restatement
+_register("trap_flags", engine=trap_flags_q, oracle=_trap_flags_oracle_sql)
+
+
 def domain_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain quality aggregation (operators/quality.domain_stats)
     over hosts derived from doc_id (50 domains, www. prefix on half to
@@ -4575,6 +4680,10 @@ FROM agg ORDER BY domain
 """
 
 
+# integer-sum domain aggregate vs DuckDB twin (one mega-domain row)
+_register("domain_stats", engine=domain_stats_q, oracle=_domain_stats_oracle_sql)
+
+
 def unigram_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM Viterbi segmentation (operators/unigram.py, the
     SentencePiece apply path) over the documents corpus with the shared
@@ -4628,9 +4737,7 @@ def _unigram_counts_oracle_sql(sf_dir: str | None = None) -> str:
 
     from warc_metadata_sidecar_spark import gen
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     texts = [
         r[0] or ""
         for r in duckdb.sql(
@@ -4658,6 +4765,9 @@ WITH t(piece, n) AS (VALUES
 )
 SELECT piece, CAST(n AS BIGINT) AS n FROM t ORDER BY piece
 """
+
+
+_register("unigram_counts", engine=unigram_counts_q, oracle=_unigram_counts_oracle_sql)
 
 
 def _image_phash_oracle_cte() -> str:
@@ -4752,6 +4862,12 @@ ORDER BY media_ref
     )
 
 
+# decode(encode(raster)) perceptual hashes vs closed-form integer
+# arithmetic; banded near-dup vs brute-force xor-popcount (exact for
+# max_hamming < n_bands by pigeonhole)
+_register("image_phash", engine=image_phash, oracle=_image_phash_oracle_sql)
+
+
 def _image_neardup_oracle_sql() -> str:
     return (
         _image_phash_oracle_cte()
@@ -4770,6 +4886,9 @@ WHERE bit_count(xor(h1.d0, h2.d0)) + bit_count(xor(h1.d1, h2.d1))
 ORDER BY ref_a, ref_b
 """
     )
+
+
+_register("image_neardup", engine=image_neardup, oracle=_image_neardup_oracle_sql)
 
 
 def audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4856,6 +4975,11 @@ ORDER BY a.media_ref
     )
 
 
+# star-round components + keeper vs recursive min-reachability over
+# the same closed-form fingerprint pair set
+_register("media_dedup", engine=media_dedup, oracle=_media_dedup_oracle_sql)
+
+
 def recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adaptive recrawl scheduling (frontier/recrawl.py) over a
     closed-form change history: every doc becomes a URL observed at
@@ -4921,6 +5045,11 @@ FROM agg ORDER BY url
 """
 
 
+# module lag-window schedule vs an independent SQL restatement of the
+# smoothed inverse-change-rate arithmetic (integer-exact both sides)
+_register("recrawl_schedule", engine=recrawl_schedule_q, oracle=_recrawl_schedule_oracle_sql)
+
+
 def recrawl_frontier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """due_frontier over the same closed-form change history as
     recrawl_schedule: overdue URLs become next-crawl seeds with
@@ -4966,6 +5095,9 @@ FROM sched WHERE next_due <= 7 ORDER BY url
 """
 
 
+_register("recrawl_frontier", engine=recrawl_frontier_q, oracle=_recrawl_frontier_oracle_sql)
+
+
 def cdxj_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Playback-style CDXJ index lookup (operators/cdxj.lookup_cdxj — the
     cdx-server query over the reference's merged-index file shape): text
@@ -5008,6 +5140,10 @@ WHERE urlkey LIKE 'com,example,host07)%'
   AND ts >= '20260101000100' AND ts <= '20260101000500'
 ORDER BY urlkey, ts
 """
+
+
+# module parse+sargable-filter lookup vs independent LIKE+range SQL
+_register("cdxj_lookup", engine=cdxj_lookup, oracle=_cdxj_lookup_oracle_sql)
 
 
 # two-snapshot diff fixture, closed-form from doc_id: the OLD side skips
@@ -5075,6 +5211,9 @@ ORDER BY urlkey
 """
 
 
+_register("crawl_diff", engine=crawl_diff_q, oracle=_crawl_diff_oracle_sql)
+
+
 def batch_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-length-bucketed batch planning (operators/batching.
     plan_batches) over documents' whitespace token counts: floor-log2
@@ -5129,6 +5268,9 @@ ORDER BY doc_id
 """
 
 
+_register("batch_plan", engine=batch_plan_q, oracle=_batch_plan_oracle_sql)
+
+
 def balanced_shards_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-balanced shard assignment (operators/batching.
     balanced_shards): per-bucket size-ranked round-robin across 8
@@ -5175,6 +5317,9 @@ ORDER BY doc_id
 """
 
 
+_register("balanced_shards", engine=balanced_shards_q, oracle=_balanced_shards_oracle_sql)
+
+
 def postings_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Impact-ordered inverted-index build (operators/invindex.
     build_postings) over the documents table: whitespace terms, df-bound
@@ -5214,6 +5359,9 @@ SELECT term, CAST(doc_id AS BIGINT) AS doc_id, tf, df,
 FROM ranked WHERE impact_rank <= 10
 ORDER BY term, impact_rank
 """
+
+
+_register("postings_build", engine=postings_build_q, oracle=_postings_build_oracle_sql)
 
 
 def resolve_revisits_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5287,6 +5435,10 @@ ORDER BY r.doc_id
 """
 
 
+# first-occurrence revisit resolution vs min-by-id SQL restatement
+_register("resolve_revisits", engine=resolve_revisits_q, oracle=_resolve_revisits_oracle_sql)
+
+
 def main_content_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """jusText-style main-content extraction (operators/extract.py) over
     closed-form pages: each doc's (angle-bracket-sanitized) words build a
@@ -5355,6 +5507,9 @@ FROM blocks ORDER BY doc_id
 """
 
 
+_register("main_content", engine=main_content_q, oracle=_main_content_oracle_sql)
+
+
 def _audio_fp_oracle_cte() -> str:
     """Shared DuckDB CTE chain: closed-form PCM -> mono int sums ->
     windowed stride-band energies -> delta-sign bits -> four little-endian
@@ -5419,6 +5574,11 @@ ORDER BY media_ref
     )
 
 
+# fingerprint(decode(encode(pcm))) vs closed-form integer arithmetic,
+# across BOTH containers (WAV + lossless FLAC re-encode)
+_register("audio_fp", engine=audio_fp, oracle=_audio_fp_oracle_sql)
+
+
 def _audio_neardup_oracle_sql() -> str:
     return (
         _audio_fp_oracle_cte()
@@ -5437,6 +5597,9 @@ WHERE bit_count(xor(h1.b0, h2.b0)) + bit_count(xor(h1.b1, h2.b1))
 ORDER BY ref_a, ref_b
 """
     )
+
+
+_register("audio_neardup", engine=audio_neardup, oracle=_audio_neardup_oracle_sql)
 
 
 def audio_resample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5513,6 +5676,9 @@ ORDER BY media_ref
 """
 
 
+_register("audio_resample", engine=audio_resample_q, oracle=_audio_resample_oracle_sql)
+
+
 # dedup-key canonicalization fixture: six text shapes from doc_id — three
 # that must COLLAPSE to one key (case/whitespace variant, zero-width +
 # NBSP variant) and a precomposed-vs-DECOMPOSED NFC pair. The combining
@@ -5573,6 +5739,9 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, key,
 FROM norm
 ORDER BY doc_id
 """
+
+
+_register("text_normalize", engine=text_normalize_q, oracle=_text_normalize_oracle_sql)
 
 
 def cdc_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5667,6 +5836,9 @@ ORDER BY media_ref, idx
 """
 
 
+_register("cdc_chunks", engine=cdc_chunks_q, oracle=_cdc_chunks_oracle_sql)
+
+
 def _cdc_dedup_oracle_sql() -> str:
     return f"""
 WITH chunks(media_ref, idx, chunk_off, length, chunk_md5) AS (VALUES
@@ -5684,6 +5856,9 @@ FROM per
 """
 
 
+_register("cdc_dedup", engine=cdc_dedup_q, oracle=_cdc_dedup_oracle_sql)
+
+
 def _crawl_rounds_oracle_sql(sf_dir: str | None = None) -> str:
     """DuckDB VALUES oracle for crawl_rounds (VERDICT r3 #3): the
     single-threaded pure-Python simulator — an INDEPENDENT implementation
@@ -5699,9 +5874,7 @@ def _crawl_rounds_oracle_sql(sf_dir: str | None = None) -> str:
     from warc_metadata_sidecar_spark.frontier.scheduler import DEFAULT_BUDGET
     from warc_metadata_sidecar_spark.frontier.simulator import simulate_crawl
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     ids = [
         r[0]
         for r in duckdb.sql(
@@ -5764,6 +5937,9 @@ def crawl_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.schedule
 
 
+_register("crawl_rounds", engine=crawl_rounds, oracle=_crawl_rounds_oracle_sql)
+
+
 def href_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real link discovery's RFC 3986 resolution (extract_hrefs) oracled
     against an INDEPENDENT implementation: CPython's urllib.parse.urljoin
@@ -5804,9 +5980,7 @@ def _href_resolution_oracle_sql(sf_dir: str | None = None) -> str:
     import duckdb
     from urllib.parse import urljoin
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     ids = [
         int(r[0])
         for r in duckdb.sql(
@@ -5839,6 +6013,9 @@ FROM (VALUES
 ) AS t(parent_url, url)
 ORDER BY parent_url, url
 """
+
+
+_register("href_resolution", engine=href_resolution, oracle=_href_resolution_oracle_sql)
 
 
 def href_edge_kinds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5881,9 +6058,7 @@ def _href_edge_kinds_oracle_sql(sf_dir: str | None = None) -> str:
     import duckdb
     from urllib.parse import urljoin
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     ids = [
         int(r[0])
         for r in duckdb.sql(
@@ -5920,6 +6095,9 @@ FROM (VALUES
 ) AS t(parent_url, url)
 ORDER BY parent_url, url
 """
+
+
+_register("href_edge_kinds", engine=href_edge_kinds, oracle=_href_edge_kinds_oracle_sql)
 
 
 def anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5971,6 +6149,9 @@ def embedding_sq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sq_roundtrip(emb).orderBy("vec_id")
 
 
+_register("embedding_sq", template=_EMBEDDING_SQ_SQL, engine=embedding_sq_q)
+
+
 def compression_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib-compressibility signal through the ENGINE's Arrow-batched
     pandas UDF, oracled against a Python twin that calls the same CPython
@@ -5992,9 +6173,7 @@ def _compression_ratio_oracle_sql(sf_dir: str | None = None) -> str:
 
     import duckdb
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
         "WHERE doc_id % 6 = 0 ORDER BY doc_id"
@@ -6016,6 +6195,9 @@ ORDER BY doc_id
 """
 
 
+_register("compression_ratio", engine=compression_ratio_q, oracle=_compression_ratio_oracle_sql)
+
+
 def lm_backoff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENGINE side of lm_backoff: the MODULE's melted single-join scoring
     (operators/lm.stupid_backoff) against the dual-dialect SQL twin's five
@@ -6033,6 +6215,9 @@ def lm_backoff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+_register("lm_backoff", template=_LM_BACKOFF_SQL, engine=lm_backoff_q)
+
+
 def _anchor_texts_oracle_sql(sf_dir: str | None = None) -> str:
     """Twin of anchor_texts: the same pages' (href, visible text) pairs
     resolved by CPython's urljoin and normalized by an independent
@@ -6042,9 +6227,7 @@ def _anchor_texts_oracle_sql(sf_dir: str | None = None) -> str:
     import duckdb
     from urllib.parse import urljoin
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     ids = [
         int(r[0])
         for r in duckdb.sql(
@@ -6080,6 +6263,9 @@ FROM (VALUES
 ) AS t(url, anchor, n)
 ORDER BY url, anchor
 """
+
+
+_register("anchor_texts", engine=anchor_texts, oracle=_anchor_texts_oracle_sql)
 
 
 # charset-on-raw-bytes fixtures (VERDICT r5 #2): (codec, expected ladder
@@ -6293,6 +6479,11 @@ def _ann_pq_top1_oracle_sql(sf_dir: str | None = None) -> str:
     )
 
 
+# IVF-PQ ADC top-1 vs the independent Python twin (re-trains the
+# codebooks with the same bit-stable rules, replays encode + scoring)
+_register("ann_pq_top1", engine=ann_pq_top1, oracle=_ann_pq_top1_oracle_sql)
+
+
 def bpe_token_counts_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact BPE token accounting over `documents`: train 60 merges on the
     corpus (distributed word counting, driver merge loop over the
@@ -6314,9 +6505,7 @@ def _bpe_tokens_twin(sf_dir: str | None = None) -> list[tuple[int, int, int]]:
 
     import duckdb
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     rows = duckdb.sql(
         f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
         "ORDER BY doc_id"
@@ -6396,6 +6585,10 @@ def _bpe_token_counts_oracle_sql(sf_dir: str | None = None) -> str:
     )
 
 
+# exact-BPE token accounting vs the standalone Python re-train twin
+_register("bpe_token_counts", engine=bpe_token_counts_docs, oracle=_bpe_token_counts_oracle_sql)
+
+
 def pack_greedy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-fit-sequential packing (no doc splitting) over `documents` —
     the applyInPandas path; oracled against a sequential Python twin."""
@@ -6410,9 +6603,7 @@ def _pack_greedy_oracle_sql(sf_dir: str | None = None) -> str:
     overflow rule, computed by a plain Python loop over the parquet rows."""
     import duckdb
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     rows_in = duckdb.sql(
         f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
         "ORDER BY doc_id"
@@ -6437,6 +6628,9 @@ def _pack_greedy_oracle_sql(sf_dir: str | None = None) -> str:
         f"FROM (VALUES\n    {values}) AS t(grp, doc_id, seq_id, n_toks)\n"
         "ORDER BY grp, doc_id"
     )
+
+
+_register("pack_greedy", engine=pack_greedy_docs, oracle=_pack_greedy_oracle_sql)
 
 
 def charset_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6508,6 +6702,9 @@ ORDER BY doc_id
 """
 
 
+_register("charset_bytes", engine=charset_bytes, oracle=_charset_bytes_oracle_sql)
+
+
 # --- public driver contract ---------------------------------------------------
 
 def _driver_check_rounds() -> dict[str, int]:
@@ -6553,130 +6750,46 @@ def _driver_check_rounds() -> dict[str, int]:
     return last
 
 
-# Queries routed through the adaptive `<t>_fan` views (SPARK side only; the
-# DuckDB oracle text is untouched). Listed = audited EXACT above the first
-# exchange: their scan-stage work is md5 / integer counts / per-ROW lambda
-# folds, their first aggregates are count/min/integer-sum, and their ranking
-# keys are total orders — so the fan-out can only change partial-aggregation
-# grouping of exact aggregates, never a value. Queries whose FIRST aggregate
-# sums doubles across rows (tpch_q1, revenue_by_nation, text stats with avg)
-# are deliberately absent: re-grouping double partial sums is a last-ulp
-# hazard under the round-N float discipline.
-_FAN_QUERIES: dict[str, tuple[str, ...]] = {
-    # listed = interleaved A/B measured faster AND heavy work sits BETWEEN
-    # the scan and the first exchange. dedup_exact / dedup_simhash were
-    # tried and REVERTED: their per-row md5s run after the first exchange
-    # (already 32-way), so the fan only added a full-text shuffle
-    # (dedup_exact 0.31 -> 1.11 s warm, dedup_simhash 1.02 -> 1.64 s).
-    "fingerprint_winnow": ("documents",),  # md5-per-position lateral, pre-exchange
-    "embedding_cosine_pairs": ("embeddings",),  # per-pair dot folds in probe stage
-    "ann_ivf_top1": ("embeddings",),  # per-pair dot folds in probe stage
-    # The rest of the exact-arithmetic SQL twins (sidecar_filters,
-    # digest_dedup, counters, cdxj_merge_counts, pii_scrub,
-    # benchmark_contamination, top_ngrams, gopher/c4, url_seen_antijoin)
-    # were batch-A/B'd and REVERTED: their pre-exchange work is a few
-    # thousand printf/md5 rows, so the fan exchange only added a stage
-    # (every one measured 0.05-0.55 s slower across two alternated passes).
-}
-
-
+# Queries routed through the adaptive `<t>_fan` views (Query.fan; SPARK side
+# only, the DuckDB oracle text is untouched). Listed = audited EXACT above the
+# first exchange: their scan-stage work is md5 / integer counts / per-ROW
+# lambda folds, their first aggregates are count/min/integer-sum, and their
+# ranking keys are total orders — so the fan-out can only change
+# partial-aggregation grouping of exact aggregates, never a value, and an
+# interleaved A/B measured them faster with the heavy work BETWEEN the scan
+# and the first exchange: fingerprint_winnow (md5-per-position lateral),
+# embedding_cosine_pairs and ann_ivf_top1 (per-pair dot folds in the probe
+# stage). Queries whose FIRST aggregate sums doubles across rows (tpch_q1,
+# revenue_by_nation, text stats with avg) are deliberately absent:
+# re-grouping double partial sums is a last-ulp hazard under the round-N
+# float discipline. Tried and REVERTED: dedup_exact / dedup_simhash (their
+# per-row md5s run after the first exchange, already 32-way, so the fan only
+# added a full-text shuffle: dedup_exact 0.31 -> 1.11 s warm, dedup_simhash
+# 1.02 -> 1.64 s), and the rest of the exact-arithmetic SQL twins
+# (sidecar_filters, digest_dedup, counters, cdxj_merge_counts, pii_scrub,
+# benchmark_contamination, top_ngrams, gopher/c4, url_seen_antijoin): their
+# pre-exchange work is a few thousand printf/md5 rows, so the fan exchange
+# only added a stage (every one measured 0.05-0.55 s slower across two
+# alternated passes).
 def _fan_sql(sql: str, tables: tuple[str, ...]) -> str:
-    import re
-
     for t in tables:
         sql = re.sub(rf"\b(FROM|JOIN)(\s+){t}\b", rf"\1\2{t}_fan", sql)
     return sql
 
 
+def _sql_runner(sql: str) -> Callable[[SparkSession, str], DataFrame]:
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        register_views(spark, sf_dir)
+        return spark.sql(sql)
+
+    return run
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    def make(name: str) -> Callable[[SparkSession, str], DataFrame]:
-        sql = spark_sql_for(name)
-        if name in _FAN_QUERIES:
-            sql = _fan_sql(sql, _FAN_QUERIES[name])
-
-        def run(spark: SparkSession, sf_dir: str, _sql: str = sql) -> DataFrame:
-            register_views(spark, sf_dir)
-            return spark.sql(_sql)
-
-        return run
-
-    for name in ORACLE_QUERY_NAMES:
-        out[name] = make(name)
-    # Spark-side physical forms with materialized proxy tables (r8);
-    # the oracles stay the canonical dual-dialect SQL.
-    out["dedup_minhash_lsh"] = dedup_minhash_lsh_q
-    out["lm_perplexity"] = lm_perplexity_q
-    out["ccnet_buckets"] = ccnet_buckets_q
-    out["flagship_sidecar"] = flagship_sidecar
-    out["flagship_counters"] = flagship_counters
-    out["crawl_rounds"] = crawl_rounds
-    out["url_seen_sharded"] = url_seen_shardjoin
-    out["url_seen_shardjoin"] = url_seen_shardjoin
-    out["url_seen_bucketed"] = url_seen_bucketed
-    out["ann_ivf_centroid_top1"] = ann_ivf_centroid_top1
-    out["dedup_cosine_srp"] = dedup_cosine_srp
-    out["dedup_clusters"] = dedup_clusters
-    out["semantic_dedup"] = semantic_dedup_q
-    out["classifier_train"] = classifier_train
-    # engine side = the MODULE (TakeOrdered top-k + broadcast membership),
-    # not the SQL twin's global row_number window — the oracle stays the
-    # dual-dialect SQL, so the comparison is module-vs-independent-SQL
-    out["dsir_select"] = dsir_select_q
-    out["paragraph_dedup"] = paragraph_dedup_q
-    out["boilerplate_lines"] = boilerplate_lines_q
-    out["bm25_score"] = bm25_score_q
-    out["hard_negatives"] = hard_negatives_q
-    out["pagerank_hosts"] = pagerank_hosts
-    out["hits_hosts"] = hits_hosts
-    out["url_blocklist"] = url_blocklist_q
-    out["audio_resample"] = audio_resample_q
-    out["text_normalize"] = text_normalize_q
-    out["cdc_chunks"] = cdc_chunks_q
-    out["cdc_dedup"] = cdc_dedup_q
-    out["crawl_diff"] = crawl_diff_q
-    out["postings_build"] = postings_build_q
-    out["video_frame_plan"] = video_frame_plan_q
-    out["authority_schedule"] = authority_schedule_q
-    out["feed_items"] = feed_items_q
-    out["batch_plan"] = batch_plan_q
-    out["balanced_shards"] = balanced_shards_q
-    out["mirror_hosts"] = mirror_hosts_q
-    out["language_mix"] = language_mix_q
-    out["adaptive_quality"] = adaptive_quality_q
-    out["cms_counts"] = cms_counts_q
-    out["pmi_collocations"] = pmi_collocations_q
-    out["containment_pairs"] = containment_pairs_q
-    out["tfidf_keywords"] = tfidf_keywords_q
-    out["top_ngrams"] = top_ngrams_q
-    out["multimodal_features"] = multimodal_features
-    out["multimodal_decode_real"] = multimodal_decode_real
-    out["multimodal_probe_meta"] = multimodal_probe_meta
-    out["href_resolution"] = href_resolution
-    out["href_edge_kinds"] = href_edge_kinds
-    out["anchor_texts"] = anchor_texts
-    out["lm_backoff"] = lm_backoff_q
-    out["embedding_sq"] = embedding_sq_q
-    out["compression_ratio"] = compression_ratio_q
-    out["charset_bytes"] = charset_bytes
-    out["pack_greedy"] = pack_greedy_docs
-    out["ann_pq_top1"] = ann_pq_top1
-    out["bpe_token_counts"] = bpe_token_counts_docs
-    out["image_phash"] = image_phash
-    out["image_neardup"] = image_neardup
-    out["audio_fp"] = audio_fp
-    out["audio_neardup"] = audio_neardup
-    out["media_dedup"] = media_dedup
-    out["recrawl_schedule"] = recrawl_schedule_q
-    out["recrawl_frontier"] = recrawl_frontier_q
-    out["cdxj_lookup"] = cdxj_lookup
-    out["resolve_revisits"] = resolve_revisits_q
-    out["main_content"] = main_content_q
-    out["image_resize"] = image_resize
-    out["trap_flags"] = trap_flags_q
-    out["domain_stats"] = domain_stats_q
-    out["unigram_counts"] = unigram_counts_q
+    out = {
+        name: q.engine or _sql_runner(_fan_sql(spark_sql_for(name), q.fan))
+        for name, q in _QUERIES.items()
+    }
     # least-recently-driver-checked first (see _driver_check_rounds): the
     # driver's 50-entry sample then rotates the full inventory across rounds
     try:
@@ -6687,103 +6800,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    oracles = {name: duck_sql_for(name) for name in ORACLE_QUERY_NAMES}
-    # the sharded-filter path must equal the exact anti-join — same oracle;
-    # so must the bucketed-layout anti-join (plan changes, rows don't)
-    oracles["url_seen_sharded"] = duck_sql_for("url_seen_antijoin")
-    oracles["url_seen_shardjoin"] = duck_sql_for("url_seen_antijoin")
-    oracles["url_seen_bucketed"] = duck_sql_for("url_seen_antijoin")
-    # engine mapInPandas multimodal path vs a from-hex DuckDB rebuild
-    oracles["multimodal_features"] = _multimodal_oracle_sql()
-    # real-decode round trip vs closed-form pixel/sample arithmetic
-    oracles["multimodal_decode_real"] = _multimodal_decode_real_oracle_sql()
-    # container-metadata probe vs closed-form parameter arithmetic
-    oracles["multimodal_probe_meta"] = _multimodal_probe_meta_oracle_sql()
-    # crawl loop vs the single-threaded simulator rendered as VALUES
-    oracles["crawl_rounds"] = _crawl_rounds_oracle_sql()
-    # flagship pipeline + counters vs the sequential per-record twin (the
-    # reference's own loop shape) rendered as VALUES
-    oracles["flagship_sidecar"] = _flagship_sidecar_oracle_sql()
-    oracles["flagship_counters"] = _flagship_counters_oracle_sql()
-    # the two approximate-ANN paths vs their sequential Python twins
-    # rendered as VALUES (VERDICT r4 #1 — no_oracle down to 0)
-    oracles["ann_ivf_centroid_top1"] = _ann_ivf_centroid_oracle_sql()
-    oracles["dedup_cosine_srp"] = _dedup_cosine_srp_oracle_sql()
-    # SemDeDup (cluster + keep-lowest-centroid-sim) vs its sequential twin
-    oracles["semantic_dedup"] = _semantic_dedup_oracle_sql()
-    # distributed classifier training vs the bit-exact sequential re-train
-    oracles["classifier_train"] = _classifier_train_oracle_sql()
-    # LSH pairs closed into components: engine star-rounds vs DuckDB
-    # recursive-CTE transitive closure over the shared pair CTEs
-    oracles["dedup_clusters"] = _dedup_clusters_oracle_sql()
-    # link resolution vs the CPython stdlib resolver (independent RFC 3986
-    # implementation) rendered as VALUES
-    oracles["href_resolution"] = _href_resolution_oracle_sql()
-    oracles["href_edge_kinds"] = _href_edge_kinds_oracle_sql()
-    # anchor-text aggregation vs urljoin + independent Python normalization
-    oracles["anchor_texts"] = _anchor_texts_oracle_sql()
-    # engine pandas-UDF zlib signal vs the same CPython zlib as VALUES
-    oracles["compression_ratio"] = _compression_ratio_oracle_sql()
-    # raw-bytes charset ladder vs ground-truth labels (the codec each
-    # fixture was ENCODED with — no detection logic on the oracle side)
-    oracles["charset_bytes"] = _charset_bytes_oracle_sql()
-    # first-fit packing (applyInPandas) vs the sequential Python twin
-    oracles["pack_greedy"] = _pack_greedy_oracle_sql()
-    # IVF-PQ ADC top-1 vs the independent Python twin (re-trains the
-    # codebooks with the same bit-stable rules, replays encode + scoring)
-    oracles["ann_pq_top1"] = _ann_pq_top1_oracle_sql()
-    # exact-BPE token accounting vs the standalone Python re-train twin
-    oracles["bpe_token_counts"] = _bpe_token_counts_oracle_sql()
-    # PageRank over the synthetic host graph vs the bit-exact sequential
-    # twin rendered as VALUES (sorted-fold arithmetic on both sides)
-    oracles["pagerank_hosts"] = _pagerank_oracle_sql()
-    oracles["hits_hosts"] = _hits_oracle_sql()
-    oracles["url_blocklist"] = _url_blocklist_oracle_sql()
-    oracles["audio_resample"] = _audio_resample_oracle_sql()
-    oracles["text_normalize"] = _text_normalize_oracle_sql()
-    oracles["cdc_chunks"] = _cdc_chunks_oracle_sql()
-    oracles["cdc_dedup"] = _cdc_dedup_oracle_sql()
-    oracles["crawl_diff"] = _crawl_diff_oracle_sql()
-    oracles["postings_build"] = _postings_build_oracle_sql()
-    oracles["video_frame_plan"] = _video_frame_plan_oracle_sql()
-    oracles["authority_schedule"] = _authority_schedule_oracle_sql()
-    oracles["feed_items"] = _feed_items_oracle_sql()
-    oracles["batch_plan"] = _batch_plan_oracle_sql()
-    oracles["balanced_shards"] = _balanced_shards_oracle_sql()
-    oracles["mirror_hosts"] = _mirror_hosts_oracle_sql()
-    oracles["language_mix"] = _language_mix_oracle_sql()
-    oracles["adaptive_quality"] = _adaptive_quality_oracle_sql()
-    oracles["cms_counts"] = _cms_counts_oracle_sql()
-    oracles["pmi_collocations"] = _pmi_collocations_oracle_sql()
-    # decode(encode(raster)) perceptual hashes vs closed-form integer
-    # arithmetic; banded near-dup vs brute-force xor-popcount (exact for
-    # max_hamming < n_bands by pigeonhole)
-    oracles["image_phash"] = _image_phash_oracle_sql()
-    oracles["image_neardup"] = _image_neardup_oracle_sql()
-    # fingerprint(decode(encode(pcm))) vs closed-form integer arithmetic,
-    # across BOTH containers (WAV + lossless FLAC re-encode)
-    oracles["audio_fp"] = _audio_fp_oracle_sql()
-    oracles["audio_neardup"] = _audio_neardup_oracle_sql()
-    # star-round components + keeper vs recursive min-reachability over
-    # the same closed-form fingerprint pair set
-    oracles["media_dedup"] = _media_dedup_oracle_sql()
-    # module lag-window schedule vs an independent SQL restatement of the
-    # smoothed inverse-change-rate arithmetic (integer-exact both sides)
-    oracles["recrawl_schedule"] = _recrawl_schedule_oracle_sql()
-    oracles["recrawl_frontier"] = _recrawl_frontier_oracle_sql()
-    # module parse+sargable-filter lookup vs independent LIKE+range SQL
-    oracles["cdxj_lookup"] = _cdxj_lookup_oracle_sql()
-    # first-occurrence revisit resolution vs min-by-id SQL restatement
-    oracles["resolve_revisits"] = _resolve_revisits_oracle_sql()
-    # module block segmentation + integer density gate vs word-slice SQL
-    oracles["main_content"] = _main_content_oracle_sql()
-    # box-mean thumbnail pixels vs SUM // COUNT closed-form SQL
-    oracles["image_resize"] = _image_resize_oracle_sql()
-    # zero-shuffle HOF trap signals vs DuckDB list-lambda restatement
-    oracles["trap_flags"] = _trap_flags_oracle_sql()
-    # integer-sum domain aggregate vs DuckDB twin (one mega-domain row)
-    oracles["domain_stats"] = _domain_stats_oracle_sql()
-    # distinct-word-memoized Viterbi segmentation vs the independent
-    # sequential DP twin rendered as VALUES
-    oracles["unigram_counts"] = _unigram_counts_oracle_sql()
-    return oracles
+    out = {}
+    for name, q in _QUERIES.items():
+        if callable(q.oracle):
+            out[name] = q.oracle()
+        else:
+            out[name] = duck_sql_for(q.oracle or name)
+    return out

@@ -18,7 +18,7 @@ The token hash is the md5-nibble bucket from operators/sampling.py, so
 the DuckDB twin reproduces bucket assignment bit-for-bit; sigmoid is
 exp-based and identical per-IEEE in both engines after 6-digit rounding.
 
-Dual-dialect twin: driver_queries._Q["classifier_score"];
+Dual-dialect twin: driver_queries.duck_sql_for("classifier_score");
 tests/test_classifier.py pins module == twin and the plan shape.
 """
 

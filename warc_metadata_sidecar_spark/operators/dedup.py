@@ -322,7 +322,7 @@ def exact_substring_spans(
     repeated hashes (map-side combinable) -> hits join -> per-doc
     gaps-and-islands interval merge (two windows partitioned BY DOC, so
     state per task is one doc's hit list, never the corpus). Dual-dialect
-    twin: driver_queries._Q["substring_spans"]."""
+    twin: driver_queries.duck_sql_for("substring_spans")."""
     w = docs.select(
         F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("ws")
     ).filter(F.size("ws") >= k)
@@ -453,7 +453,7 @@ def boilerplate_filter(
 
     Reference parity note: the reference has no corpus-level operators
     (per-record loop, warc_metadata_sidecar.py:205); training-data family
-    (SURVEY §2c). Dual-dialect twin: driver_queries._Q["boilerplate_lines"];
+    (SURVEY §2c). Dual-dialect twin: driver_queries.duck_sql_for("boilerplate_lines");
     module==twin pinned in tests/test_module_oracle_parity.py.
     """
     lines = docs.select(
@@ -514,7 +514,7 @@ def containment_pairs(
         one (id_a, id_b) groupBy — both keys uniform; per-doc shingle
         counts ride a projection-sized join.
 
-    Dual-dialect twin: driver_queries._Q["containment_pairs"] over a
+    Dual-dialect twin: driver_queries.duck_sql_for("containment_pairs") over a
     planted quote-inclusion fixture."""
     grams = (
         docs.select(

@@ -23,7 +23,7 @@ P(c2|c1) = (count(c1c2) + 1) / (count(c1.) + V). Documents whose
 normalized text has < 2 characters have no bigrams and drop out of the
 scored output (documented; the SQL twin drops them identically).
 
-The dual-dialect SQL twin is driver_queries._Q["lm_perplexity"];
+The dual-dialect SQL twin is driver_queries.duck_sql_for("lm_perplexity");
 tests/test_module_oracle_parity.py pins this module to the twin's rows.
 
 r7 adds the WORD-level counterpart: a stupid-backoff trigram LM
@@ -31,7 +31,7 @@ r7 adds the WORD-level counterpart: a stupid-backoff trigram LM
 2007). Unlike the bounded char model it is vocabulary-scaled, so the
 scoring path never broadcast-hints it: the five per-position lookups
 melt to (role, gram) rows and take one gram-key join. Twin:
-driver_queries._Q["lm_backoff"] (held-out split exercising all three
+driver_queries.duck_sql_for("lm_backoff") (held-out split exercising all three
 backoff branches).
 """
 

@@ -22,7 +22,7 @@ per-doc quadratic HOFs.
 
 Documents with < 5 words have no 5-grams and are dropped from the output
 (the SQL twin drops them identically). The dual-dialect twin is
-driver_queries._Q["gopher_repetition"]; tests/test_module_oracle_parity
+driver_queries.duck_sql_for("gopher_repetition"); tests/test_module_oracle_parity
 pins this module to the twin's rows.
 """
 
@@ -243,7 +243,7 @@ def top_ngrams(
     explode feeds a map-side-combined groupBy (shuffle carries per-
     partition distinct grams), and top-k is orderBy().limit(k) =
     TakeOrderedAndProject (per-partition heaps, k-row merge), never a
-    global sort. Dual-dialect twin: driver_queries._Q["top_ngrams"]."""
+    global sort. Dual-dialect twin: driver_queries.duck_sql_for("top_ngrams")."""
     ws = docs.select(F.split(F.col(text_col), " ").alias("ws"))
     grams = ws.filter(F.size("ws") >= n).select(
         F.explode(
@@ -290,7 +290,7 @@ def bm25_score(
         of the (term, idf) literal map against the (doc, term, tf) frame,
         then a <= |q|-row-per-doc groupBy.
 
-    Dual-dialect twin: driver_queries._Q["bm25_score"]; module==twin
+    Dual-dialect twin: driver_queries.duck_sql_for("bm25_score"); module==twin
     pinned in tests/test_module_oracle_parity.py."""
     import math
 

@@ -20,7 +20,7 @@ faster JVM-side but has no DuckDB counterpart; swap it in production if
 oracle parity is not needed). Per-stratum rates ride a broadcast join of
 the tiny rates table — never a shuffle of the corpus.
 
-Dual-dialect twin: driver_queries._Q["stratified_sample"];
+Dual-dialect twin: driver_queries.duck_sql_for("stratified_sample");
 tests/test_module_oracle_parity pins this module to the twin's rows.
 """
 

@@ -17,7 +17,7 @@ flips it. Loaders use the manifest for integrity + progress accounting.
 ``partitionBy`` after repartitioning ON the shard column, so each shard
 is produced by its own tasks (no 200-files-per-shard fan-out).
 
-Dual-dialect twin: driver_queries._Q["shard_manifest"];
+Dual-dialect twin: driver_queries.duck_sql_for("shard_manifest");
 tests/test_shards.py pins module == twin, write/reread equality, and
 manifest-vs-files consistency.
 """

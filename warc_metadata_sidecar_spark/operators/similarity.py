@@ -760,7 +760,7 @@ def hard_negatives(
     their label emit no row under the SRP path (exact path: only if the
     whole corpus shares one label).
 
-    Dual-dialect twin: driver_queries._Q["hard_negatives"]; module==twin
+    Dual-dialect twin: driver_queries.duck_sql_for("hard_negatives"); module==twin
     pinned in tests/test_module_oracle_parity.py."""
     e = _as_double(embeddings, vec_col)
     a = e.select(
