@@ -1958,16 +1958,16 @@ FROM ranked WHERE rnk = 1 ORDER BY vec_id
     fan=("embeddings",),
 )
 
+
 def _pii_count(d: dict, i: int) -> str:
     """Matches of the i-th PII pattern in `text` after redacting the ones
     before it: SEQUENTIAL counting in redaction order, the oracle twin of
     functions/text.pii_counts_col (a digit run inside an email must not
     double-count as a phone)."""
-    pats = ((PII_EMAIL, "<EMAIL>"), (PII_IP, "<IP>"), (PII_PHONE, ""))
     expr = "text"
-    for pat, repl in pats[:i]:
+    for pat, repl in ((PII_EMAIL, "<EMAIL>"), (PII_IP, "<IP>"))[:i]:
         expr = _re_replace_all(d, expr, pat, repl)
-    return _re_count(d, expr, pats[i][0])
+    return _re_count(d, expr, (PII_EMAIL, PII_IP, PII_PHONE)[i])
 
 
 def _cosine(form: str) -> Callable[[str], str]:
@@ -1979,11 +1979,13 @@ def _cosine(form: str) -> Callable[[str], str]:
     )
 
 
-# gopher_quality: count of the 8 stop words present in `ws`
-_STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-_NSTOP = " + ".join(
-    f"(CASE WHEN {{c}}(ws, '{w}') THEN 1 ELSE 0 END)" for w in _STOP_WORDS
-)
+def _n_stop(contains: str) -> str:
+    """gopher_quality: how many of the 8 stop words the array `ws` holds."""
+    return " + ".join(
+        f"(CASE WHEN {contains}(ws, '{w}') THEN 1 ELSE 0 END)"
+        for w in ("the", "be", "to", "of", "and", "that", "have", "with")
+    )
+
 
 # (token, Spark SQL, DuckDB SQL) in replacement order. The order matters
 # where a replacement carries another token or one token is a prefix of
@@ -2088,7 +2090,7 @@ _TOKENS = (
         "size(regexp_extract_all(text, '\\\\.\\\\.\\\\.', 0))",
         "len(regexp_extract_all(text, '\\.\\.\\.'))",
     ),
-    ("@NSTOP", _NSTOP.format(c="array_contains"), _NSTOP.format(c="list_contains")),
+    ("@NSTOP", _n_stop("array_contains"), _n_stop("list_contains")),
     # classifier_score: token -> 0..255 md5 two-nibble feature bucket
     ("@WORDBUCKET", *_both(_md5_int, "md5(w)", 2)),
     # shard_manifest: 8-nibble (32-bit) content hash for the
