@@ -1,9 +1,11 @@
-"""Pre-flight of the driver's CORRECTNESS sweep (r7): run the FIRST 50
-queries() entries (the driver's observed sample) at sf0.01 against their
-DuckDB oracles in one warm session, reporting per-query wall + match — so
-a failing or sweep-starving query is caught before the round closes.
+"""Oracle parity of driver queries at $SPARK_GRAFT_ORACLE_SF_DIR (default
+sf0.01): each query's rows against its DuckDB oracle in one warm session,
+one JSON line per query with its wall and match, then a summary line.
 
-Run: python BENCH/sweep_preflight.py [n]
+An integer argument runs the FIRST n queries() entries (50 by default);
+names run those queries.
+
+Run: python BENCH/sweep_preflight.py [n | query...]
 """
 
 from __future__ import annotations
@@ -21,8 +23,7 @@ import pandas as pd
 from warc_metadata_sidecar_spark import driver_queries as dq
 from warc_metadata_sidecar_spark.session import build_session
 
-SF = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-N = int(sys.argv[1]) if len(sys.argv) > 1 else 50
+SF = dq._oracle_sf_dir(None)
 
 
 def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, bool, bool]:
@@ -50,13 +51,14 @@ def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, bool, bool]:
 
 
 def main() -> None:
-    spark = build_session("sweep-preflight", cpus=16, shuffle_partitions=16)
+    spark = build_session("sweep-preflight")
     qs = dq.queries()
     oracles = dq.oracle_sql()
     con = duckdb.connect()
     for t in dq.TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    names = list(qs)[:N]
+    args = sys.argv[1:] or ["50"]
+    names = list(qs)[: int(args[0])] if args[0].isdigit() else args
     bad, total = [], 0.0
     for name in names:
         t0 = time.time()
@@ -73,7 +75,7 @@ def main() -> None:
         ok = rows and schema and match and not err
         if not ok:
             bad.append(name)
-        print(json.dumps({"q": name, "ok": ok, "wall": wall, "err": err}), flush=True)
+        print(json.dumps({"q": name, "sf": SF, "ok": ok, "wall": wall, "err": err}), flush=True)
     print(
         json.dumps({"n": len(names), "failures": bad, "total_sec": round(total, 1)}),
         flush=True,

@@ -1,16 +1,22 @@
-"""Per-query isolation harness for the r08 optimization round (guide §1).
+"""Per-query isolation harness, next to the frozen bench.py.
 
-NOT the driver bench (bench.py is frozen): this file exists to
-  - time individual queries with the noop sink (guide §1.4) so the
-    computation is measured, not the sink or the driver collect;
-  - dump .explain("formatted") into plans/r08/<query>_{before,after}.txt;
-  - run A/B comparisons while iterating.
+It exists to
+  - time individual queries with the noop sink, so the computation is
+    measured, not the sink or a collect;
+  - dump .explain("formatted") into plans/r08/<query>_<suffix>.txt;
+  - show how a query's wall and shuffle grow from sf0.01 to sf0.1;
+  - count a crawl round's Spark jobs and py4j commands.
 
 Usage:
-  python bench_extra.py time  <query> [query...]   # noop-sink wall, 3 reps
-  python bench_extra.py plan  <query> <suffix>     # write plans/r08/<q>_<suffix>.txt
+  python bench_extra.py time   <query> [query...]  # noop-sink walls and shuffle bytes, 3 reps
+  python bench_extra.py count  <query> [query...]  # the same with bench.py's count() sink
+  python bench_extra.py phases <query> [query...]  # construct / plan / execute per rep
+  python bench_extra.py plan   <query> <suffix>    # write plans/r08/<q>_<suffix>.txt
+  python bench_extra.py scale  [query...]          # `time` at sf0.01 and $SPARK_GRAFT_SF_DIR, with ratios
   python bench_extra.py sweep                      # noop-sink wall for all bench queries
   python bench_extra.py rounds [R] [seed]          # wall, job wall, Spark jobs, py4j commands per crawl round
+
+`scale` without names runs SCALE_QUERIES.
 """
 
 from __future__ import annotations
@@ -22,15 +28,79 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from warc_metadata_sidecar_spark import driver_queries  # noqa: E402
-from warc_metadata_sidecar_spark.session import build_session  # noqa: E402
+from warc_metadata_sidecar_spark.frontier.crawl import shuffle_totals  # noqa: E402
+from warc_metadata_sidecar_spark.session import DEFAULT_CPUS, build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
+
+# The operators whose 20x/200x growth on 32 cores BENCH/NEWOPS{2,3,4,6,7}.md
+# record, by their queries() names.
+SCALE_QUERIES = (
+    "paragraph_dedup", "dsir_select", "classifier_train", "semantic_dedup",
+    "anchor_texts", "compression_ratio", "lm_backoff", "embedding_sq",
+    "image_phash", "audio_fp", "image_neardup",
+    "main_content", "trap_flags", "domain_stats", "image_resize",
+    "url_blocklist", "postings_build", "cdc_chunks", "cdc_dedup", "crawl_diff",
+    "text_normalize", "feed_items", "language_mix", "batch_plan",
+    "balanced_shards", "mirror_hosts",
+)
 
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+# bench.py's own sink is count(): it prunes unreferenced output columns and
+# drops the final sort, so its walls are the ones bench.py sees
+SINKS = {"time": _noop, "count": lambda df: df.count()}
+
+
+def _run(spark, fn, name: str, sf_dir: str, sink) -> tuple[list[float], int]:
+    """REPS walls of query `name` at `sf_dir` through `sink`, and the
+    shuffle bytes its last rep read. Task metrics reach the status store
+    through the listener bus, so the bus is drained before each sample."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    walls = []
+    for _ in range(REPS):
+        sc.setJobDescription(f"bench_extra:{name}")
+        bus.waitUntilEmpty()
+        before = shuffle_totals(spark)[0]
+        t0 = time.time()
+        sink(fn(spark, sf_dir))
+        walls.append(round(time.time() - t0, 3))
+    bus.waitUntilEmpty()
+    return walls, shuffle_totals(spark)[0] - before
+
+
+def _ratio(a: float, b: float) -> str:
+    return f"{b / a:.2f}" if a else "-"
+
+
+def scale(spark, qs, names) -> None:
+    """The noop-sink min wall and shuffle bytes of each query at the oracle
+    sf dir and at SF_DIR, their ratios, and the row counts of the two
+    inputs the scale operators read."""
+    import pyarrow.parquet as pq
+
+    dirs = (driver_queries._oracle_sf_dir(None), SF_DIR)
+    small, big = (os.path.basename(d.rstrip("/")) for d in dirs)
+    for t in ("documents", "embeddings"):
+        a, b = (pq.read_metadata(f"{d}/{t}.parquet").num_rows for d in dirs)
+        print(f"{t}: {a:,} -> {b:,} rows ({_ratio(a, b)}x)")
+    res = {}
+    for d in dirs:  # dirs outermost: the views switch sf dir once
+        for name in names:
+            walls, shuffle = _run(spark, qs[name], name, d, _noop)
+            res[name, d] = min(walls), shuffle
+    print(f"| query | wall s {small} | wall s {big} | wall x "
+          f"| shuffle B {small} | shuffle B {big} | shuffle x |")
+    print("|---|---|---|---|---|---|---|")
+    for name in names:
+        (w0, s0), (w1, s1) = res[name, dirs[0]], res[name, dirs[1]]
+        print(f"| {name} | {w0} | {w1} | {_ratio(w0, w1)} "
+              f"| {s0:,} | {s1:,} | {_ratio(s0, s1)} |")
 
 
 class Py4jTally:
@@ -146,7 +216,9 @@ def main() -> None:
     if mode == "rounds":
         rounds(*(int(a) for a in sys.argv[2:4]))
         return
-    spark = build_session(app_name="bench_extra", cpus=CPUS, shuffle_partitions=CPUS)
+    spark = build_session(
+        app_name="bench_extra", cpus=DEFAULT_CPUS, shuffle_partitions=DEFAULT_CPUS
+    )
     qs = driver_queries.queries()
     driver_queries.register_views(spark, SF_DIR)
 
@@ -161,29 +233,12 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} bytes)")
-    elif mode == "time":
+    elif mode in SINKS:
         for name in sys.argv[2:]:
-            fn = qs[name]
-            walls = []
-            for _ in range(REPS):
-                spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-                t0 = time.time()
-                _noop(fn(spark, SF_DIR))
-                walls.append(round(time.time() - t0, 3))
-            print(f"{name}: {walls} min={min(walls)}")
-    elif mode == "count":
-        # bench.py's own sink (.count()) — the driver-graded methodology:
-        # count() prunes unreferenced output columns and drops the final
-        # sort, so walls here are the ones bench.py actually sees.
-        for name in sys.argv[2:]:
-            fn = qs[name]
-            walls = []
-            for _ in range(REPS):
-                spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-                t0 = time.time()
-                _ = fn(spark, SF_DIR).count()
-                walls.append(round(time.time() - t0, 3))
-            print(f"{name}: {walls} min={min(walls)}")
+            walls, shuffle = _run(spark, qs[name], name, SF_DIR, SINKS[mode])
+            print(f"{name}: {walls} min={min(walls)} shuffle_bytes={shuffle:,}")
+    elif mode == "scale":
+        scale(spark, qs, sys.argv[2:] or SCALE_QUERIES)
     elif mode == "phases":
         # Cold-cost breakdown per query: construct (driver python + py4j),
         # plan (analysis + optimization + physical planning + AQE prep),

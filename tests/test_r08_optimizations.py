@@ -147,7 +147,7 @@ def test_fan_views_adaptive_and_row_identical(spark, monkeypatch):
     # the condition is adaptive: an estimate of as many splits as cores (a
     # big input) must publish the scan itself, not a repartition
     monkeypatch.setattr(dq, "_est_splits", lambda path, split: n_par)
-    dq._REGISTERED_VIEWS.clear()
+    spark.conf.unset(dq._VIEWS_CONF)
     try:
         dq.register_views(spark, sf)
         for t in dq._FAN_VIEW_TABLES:
@@ -157,7 +157,7 @@ def test_fan_views_adaptive_and_row_identical(spark, monkeypatch):
                     == spark.table(t).rdd.getNumPartitions())
     finally:
         monkeypatch.undo()
-        dq._REGISTERED_VIEWS.clear()
+        spark.conf.unset(dq._VIEWS_CONF)
         dq.register_views(spark, sf)
     assert spark.table("documents_fan").rdd.getNumPartitions() == n_par
     # a fanned query's rows equal the canonical (unfanned) statement's rows
@@ -168,6 +168,19 @@ def test_fan_views_adaptive_and_row_identical(spark, monkeypatch):
     b = sorted(map(tuple, plain.collect()))
     assert a == b
     assert a  # the fixture must actually produce fingerprints
+
+
+def test_register_views_on_every_new_session(spark):
+    """The views memo belongs to the session: each new session gets its own
+    views, also when it takes the Python id of a freed session."""
+    from warc_metadata_sidecar_spark import driver_queries as dq
+
+    missing = 0
+    for _ in range(40):
+        s = spark.newSession()
+        dq.register_views(s, dq._oracle_sf_dir(None))
+        missing += not s.catalog.tableExists("documents")
+    assert missing == 0
 
 
 def test_split_bytes_parses_size_suffixes(spark):

@@ -79,7 +79,7 @@ from pyspark.util import inheritable_thread_target
 from warc_metadata_sidecar_spark import schema
 from warc_metadata_sidecar_spark.frontier.canonical import canonicalize
 from warc_metadata_sidecar_spark.frontier.scheduler import DEFAULT_BUDGET, rank_round
-from warc_metadata_sidecar_spark.frontier.seen import DEFAULT_SHARDS, update_filter_shards
+from warc_metadata_sidecar_spark.frontier.seen import update_filter_shards
 from warc_metadata_sidecar_spark.frontier import seen as seen_mod
 from warc_metadata_sidecar_spark.session import per_context
 
@@ -637,15 +637,12 @@ def _write_parquet(df: DataFrame, path: str) -> None:
 
 
 def _fold_filters(
-    spark: SparkSession, selected: DataFrame | None, filters: DataFrame | None,
-    num_shards: int, path: str,
+    spark: SparkSession, selected: DataFrame | None, filters: DataFrame | None, path: str
 ) -> DataFrame:
     """The round's filters snapshot at `path`, read back: `filters` with the
     scheduled keys of `selected` (None: none) folded in."""
     if selected is not None:
-        filters = update_filter_shards(
-            spark, selected.select("canonical_url"), filters, num_shards=num_shards
-        )
+        filters = update_filter_shards(spark, selected.select("canonical_url"), filters)
     return seen_mod.write_filters(spark, filters, path)
 
 
@@ -722,7 +719,6 @@ def run_crawl(
     annotate: bool = False,
     media: DataFrame | None = None,
     out_dir: str | None = None,
-    num_shards: int = DEFAULT_SHARDS,
     skew_stats: bool = True,
     bucketed_seen: bool = False,
     prune_salts: int | None = 16,
@@ -843,7 +839,7 @@ def run_crawl(
                 # a checkpoint without a filters table, or with the older
                 # bloom+cuckoo states: rebuilt from the seen snapshot, on
                 # executors, by this round's filters snapshot write
-                filters_df = update_filter_shards(spark, seen, None, num_shards=num_shards)
+                filters_df = update_filter_shards(spark, seen, None)
     if bucketed_seen:
         # Reuse a valid existing table instead of drop-and-rewrite (VERDICT
         # r3 #5: at 10^10 seen rows a rebuild is a full-corpus rewrite just
@@ -936,7 +932,7 @@ def run_crawl(
                     # round folds into the snapshot read back
                     filters_next = later(
                         _fold_filters, spark, selected if n_selected else None,
-                        filters_df, num_shards, _ckpt_dir(out_dir, rnd, "filters"),
+                        filters_df, _ckpt_dir(out_dir, rnd, "filters"),
                     )
 
             pages = documents

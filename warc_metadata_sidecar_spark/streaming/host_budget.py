@@ -39,26 +39,16 @@ def make_budget_enforcer(budget: int):
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (host,) = key
         n = state.get[0] if state.exists else 0
-        admitted = []
         rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["priority", "canonical_url"], ascending=[False, True])
-        for _, row in rows.iterrows():
-            if n >= budget:
-                break
-            n += 1
-            admitted.append(
-                {
-                    "host": host,
-                    "canonical_url": row["canonical_url"],
-                    "priority": row["priority"],
-                    "admitted_seq": n,
-                }
+        admitted = rows.sort_values(
+            ["priority", "canonical_url"], ascending=[False, True]
+        ).head(max(budget - n, 0))
+        state.update((n + len(admitted),))
+        if len(admitted):
+            yield admitted[["host", "canonical_url", "priority"]].assign(
+                admitted_seq=range(n + 1, n + 1 + len(admitted))
             )
-        state.update((n,))
-        if admitted:
-            yield pd.DataFrame(admitted)
 
     return enforce
 
